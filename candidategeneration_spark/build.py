@@ -3,31 +3,41 @@
 Spark-first re-expression of the reference's 4-phase offline builder
 (``WWWMain.java:50-199``): its per-thread buffers, sorted dump files and
 k-way external merge (``InvertedIndex.java:264-498``, ``ExternalSort.java``)
-are replaced wholesale by one shuffle — ``groupBy(term).applyInPandas`` —
-whose sort-based exchange does the external merge with spill for free.
+are replaced wholesale by one shuffle — ``repartition(term)`` +
+``sortWithinPartitions(term, doc_id)`` — whose sort-based exchange does the
+external merge with spill for free.
 
-Lifecycle (SURVEY.md §3.1):
+Lifecycle of the d-bigram build (SURVEY.md §3.1):
 
-    read corpus → mapInPandas(tokenize + per-doc tf [+ d-bigram])   [Arrow]
+    read corpus → mapInArrow(tokenize + per-doc tf)        [one Python pass]
+    → explode(arrays_zip(terms, tfs)) → unigram postings   [JVM]
     → join per-term df (shuffle on term)
     → quantized BM25 per posting (JVM column math)
-    → groupBy(term).applyInPandas(sort by docID, delta+VByte, block-max)
+    → doc-local pair scoring over the same token table     [mapInPandas]
+    → repartition(term) + sort(term, doc_id)
+    → mapInArrow(columnar delta+VByte, block-max)           [Arrow in/out]
     → segments DataFrame / Parquet
 
+The unigram-only build tokenizes with ``mapInPandas`` (tokenize + tf in
+one pass) and fuses df + BM25 into the encoder (:func:`build_segments_fast`).
+
 Skew (north rule): hot d-bigrams (e.g. ``def __init__`` at 10^12-file scale)
-overload a single ``applyInPandas`` group. ``build_segments`` supports a
-salted two-stage aggregation: stage 1 groups on (term, salt=doc_id%S) and
-emits sorted partial runs; stage 2 merges the ≤S runs per term. Because
-stage-1 groups are bounded at df/S postings, no single task sees a whole hot
-list. The reference has no skew handling at all (fixed 4 shards).
+overload a single encode task. ``build_segments`` supports a salted
+two-stage aggregation: stage 1 groups on (term, salt=doc_id%S) and emits
+sorted partial runs; stage 2 merges the ≤S runs per term. Because stage-1
+groups are bounded at df/S postings, no single task sees a whole hot list.
+The reference has no skew handling at all (fixed 4 shards).
 """
 
 from __future__ import annotations
 
+import itertools
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import (
     ArrayType, BinaryType, IntegerType, LongType, StringType, StructField,
@@ -101,6 +111,10 @@ _RUN_SCHEMA = StructType([
 TOKENS_SCHEMA = StructType([
     StructField("doc_id", LongType()),
     StructField("toks", ArrayType(StringType())),
+    StructField("terms", ArrayType(StringType())),
+    StructField("tfs", ArrayType(LongType())),
+    StructField("doc_len", LongType()),
+    StructField("maxtf", LongType()),
 ])
 
 
@@ -117,8 +131,8 @@ def _explode_tf(pdf: pd.DataFrame, id_col: str, text_col: str,
 
 def _explode_tf_from_toks(ids, toks: pd.Series,
                           dbigram_distance: int | None) -> pd.DataFrame:
-    """Pre-tokenized twin of :func:`_explode_tf` — the kernel both the
-    text path and the tokenize-once path (:func:`tokenize_docs`) share."""
+    """Pre-tokenized twin of :func:`_explode_tf` (the text path's per-doc
+    tf kernel; :func:`_tokenize_tf_batch` is its columnar counterpart)."""
     lens = toks.map(len).to_numpy(dtype=np.int64)
     doc_ids = np.asarray(ids, dtype=np.int64)
     if lens.sum() == 0:
@@ -245,23 +259,52 @@ def build_postings(docs: DataFrame, id_col: str = "doc_id",
     return out
 
 
+def _tokenize_tf_batch(batch: pa.RecordBatch,
+                       stopwords=None) -> pa.RecordBatch:
+    """One Arrow batch of (doc_id, __text) → ``TOKENS_SCHEMA``: the token
+    list plus the doc's distinct terms with their tfs, doc_len and maxtf.
+    One hash factorize over the batch's tokens and one int64 unique over
+    (row, term id) keys count every doc's tfs at once."""
+    toks = tokenize_pandas(batch.column(1).to_pandas(), stopwords)
+    n = len(toks)
+    lens = np.fromiter(map(len, toks), dtype=np.int64, count=n)
+    flat = list(itertools.chain.from_iterable(toks))
+    codes, vocab = pd.factorize(np.asarray(flat, dtype=object))
+    n_vocab = max(len(vocab), 1)
+    keys, tfs = np.unique(np.repeat(np.arange(n), lens) * n_vocab + codes,
+                          return_counts=True)
+    n_terms = np.bincount(keys // n_vocab, minlength=n)
+    maxtf = np.zeros(n, dtype=np.int64)
+    has = n_terms > 0
+    if has.any():
+        first = np.cumsum(n_terms) - n_terms
+        maxtf[has] = np.maximum.reduceat(tfs, first[has])
+    lists = indexcodec.list_array
+    terms = pa.array(vocab, pa.string()).take(pa.array(keys % n_vocab))
+    return pa.RecordBatch.from_arrays(
+        [batch.column(0), lists(lens, pa.array(flat, pa.string())),
+         lists(n_terms, terms), lists(n_terms, pa.array(tfs)),
+         pa.array(lens), pa.array(maxtf)],
+        names=TOKENS_SCHEMA.fieldNames())
+
+
 def tokenize_docs(docs: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", stopwords=None,
                   input_partitions: int | None = None) -> DataFrame:
-    """corpus → (doc_id, toks array<string>): the tokenize-ONCE table.
+    """corpus → ``TOKENS_SCHEMA`` rows, one per doc: the tokenize-ONCE
+    table of the d-bigram build, in one ``mapInArrow`` pass.
 
-    Round 5: the d-bigram build used to tokenize the corpus twice (once
-    for unigram postings, once inside the pair pass — the docstring of
-    :func:`build_pair_postings` called CPU cheaper than corpus-sized
-    state). Persisting this table instead feeds BOTH stages from one
-    Arrow tokenize pass: the pair stage's kernel drops its regex+lower
-    work and the raw corpus text is scanned exactly once per build. At
+    Each row carries the doc's token list (``toks``, read by the pair
+    pass) AND its per-doc term frequencies (``terms``/``tfs`` aligned,
+    ``doc_len``, ``maxtf``), so the unigram postings are a JVM explode of
+    this table (:func:`build_postings_from_tokens`) and the corpus text is
+    tokenized exactly once per build, by one Python runner per task. At
     100 TB the persisted form is the same order as the corpus itself —
     use ``StorageLevel.DISK_ONLY`` / checkpoints.py when it exceeds
     cluster RAM (same guidance as the postings persist).
 
-    Empty documents keep a row with an empty array (token-less docs
-    still count in n_docs, ``InvertedIndex.java:171``).
+    Empty documents keep a row with empty arrays (token-less docs still
+    count in n_docs, ``InvertedIndex.java:171``).
     """
     from .config import ensure_on_executors
     ensure_on_executors(docs.sparkSession)
@@ -271,32 +314,21 @@ def tokenize_docs(docs: DataFrame, id_col: str = "doc_id",
             and cols.rdd.getNumPartitions() < input_partitions:
         cols = cols.repartition(input_partitions)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(np.int64),
-                 "toks": tokenize_pandas(pdf["__text"], stopwords)})
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield _tokenize_tf_batch(batch, stopwords)
 
-    return cols.mapInPandas(gen, schema=TOKENS_SCHEMA)
+    return cols.mapInArrow(gen, schema=TOKENS_SCHEMA)
 
 
-def build_postings_from_tokens(tokens_df: DataFrame,
-                               dbigram_distance: int | None = None,
-                               term_filter: DataFrame | None = None
-                               ) -> DataFrame:
-    """:func:`build_postings` over a pre-tokenized (doc_id, toks) table."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _explode_tf_from_toks(pdf["doc_id"], pdf["toks"],
-                                        dbigram_distance)
-
-    out = tokens_df.select("doc_id", "toks") \
-                   .mapInPandas(gen, schema=POSTINGS_SCHEMA)
-    if term_filter is not None:
-        out = out.join(F.broadcast(term_filter.select("term").distinct()),
-                       "term", "left_semi")
-    return out
+def build_postings_from_tokens(tokens_df: DataFrame) -> DataFrame:
+    """:func:`build_postings`' unigram rows from the tokenize-once table
+    (:func:`tokenize_docs`): a JVM ``explode(arrays_zip(terms, tfs))`` —
+    no Python stage. Token-less docs explode to no rows."""
+    z = F.explode(F.arrays_zip("terms", "tfs")).alias("__z")
+    return tokens_df.select("doc_id", "doc_len", "maxtf", z).select(
+        F.col("__z.terms").alias("term"), "doc_id",
+        F.col("__z.tfs").alias("tf"), "doc_len", "maxtf")
 
 
 # --------------------------------------------------------------------------
@@ -731,53 +763,72 @@ def global_stats_from_postings(postings: DataFrame, n_docs: int) -> dict:
 # Phase 3 — compressed block-max segments (skew-aware)
 # --------------------------------------------------------------------------
 
-def _encode_sorted_run(pdf: pd.DataFrame, n_docs: int, avgdl: int,
-                       score_in: bool) -> pd.DataFrame:
-    """Encode a (term, doc_id)-sorted frame of COMPLETE term groups.
+def _group_starts(term: pa.Array) -> np.ndarray:
+    """First row of every run of equal terms (rows arrive term-sorted)."""
+    n = len(term)
+    if n == 0:
+        return np.empty(0, dtype=np.int64)
+    change = pc.not_equal(term.slice(1), term.slice(0, n - 1))
+    return np.flatnonzero(
+        np.r_[True, change.to_numpy(zero_copy_only=False)])
 
-    Vectorized: group boundaries by one != scan; df = group size; BM25 for
-    every row in one NumPy call; per-group slices feed the codec directly
-    (doc_ids already sorted — no per-group argsort)."""
+
+def encode_sorted_batch(batch: pa.RecordBatch, n_docs: int, avgdl: int,
+                        score_in: bool) -> pa.RecordBatch:
+    """Encode a (term, doc_id)-sorted batch of COMPLETE term groups into
+    one ``SEGMENT_SCHEMA`` row per term, columnar end to end.
+
+    ``score_in``: the batch carries ``score_q``; otherwise it carries
+    (``doc_len``, ``maxtf``) and BM25 is computed here with df = group
+    size (the fused unigram path)."""
     from .bm25 import bm25_quantized_np
-    terms = pdf["term"].to_numpy()
-    n = terms.shape[0]
-    starts = np.flatnonzero(np.r_[True, terms[1:] != terms[:-1]])
-    ends = np.r_[starts[1:], n]
-    dids = pdf["doc_id"].to_numpy(np.int64)
-    tfs = pdf["tf"].to_numpy(np.int64)
+    term = batch.column("term")
+    starts = _group_starts(term)
+    dids = batch.column("doc_id").to_numpy()
+    tfs = batch.column("tf").to_numpy()
     if score_in:
-        scores = pdf["score_q"].to_numpy(np.int64)
+        scores = batch.column("score_q").to_numpy()
     else:
-        dfs = np.repeat(ends - starts, ends - starts)
+        sizes = np.diff(np.append(starts, len(term)))
         scores = bm25_quantized_np(
-            tfs, pdf["maxtf"].to_numpy(np.int64), dfs,
-            pdf["doc_len"].to_numpy(np.int64), n_docs, avgdl)
-    rows = indexcodec.encode_groups(dids, scores, tfs, starts, ends)
-    out = pd.DataFrame(rows)
-    out["term"] = terms[starts]
-    return out[["term", "df", "n_blocks", "did_blob", "score_blob",
-                "tf_blob", "block_last", "block_max", "block_n",
-                "did_off", "score_off", "tf_off"]]
+            tfs, batch.column("maxtf").to_numpy(), np.repeat(sizes, sizes),
+            batch.column("doc_len").to_numpy(), n_docs, avgdl)
+    cols = indexcodec.encode_groups(dids, scores, tfs, starts)
+    cols["term"] = term.take(pa.array(starts))
+    return pa.RecordBatch.from_arrays(
+        [cols[f.name] for f in SEGMENT_SCHEMA.fields],
+        names=SEGMENT_SCHEMA.fieldNames())
 
 
-def _stream_encode(batches, n_docs: int, avgdl: int, score_in: bool):
-    """Per-partition streaming group encoder. Input batches are globally
+def _encode_stream(batches: Iterator[pa.RecordBatch], n_docs: int,
+                   avgdl: int, score_in: bool) -> Iterator[pa.RecordBatch]:
+    """Per-partition streaming encoder (``mapInArrow``). Batches are
     sorted by (term, doc_id) within the partition; a term may span batch
-    boundaries, so the last (possibly incomplete) group is carried over."""
-    carry: pd.DataFrame | None = None
-    for pdf in batches:
-        if carry is not None and len(carry):
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-        if not len(pdf):
+    boundaries, so the rows of the last term stay in ``carry`` until a
+    later batch (or the end of the partition) closes it. ``carry`` holds
+    zero-copy slices and is concatenated once, when its term completes."""
+    carry: list[pa.RecordBatch] = []
+
+    def flush(parts):
+        whole = parts[0] if len(parts) == 1 else \
+            pa.Table.from_batches(parts).combine_chunks().to_batches()[0]
+        return encode_sorted_batch(whole, n_docs, avgdl, score_in)
+
+    for batch in batches:
+        if not batch.num_rows:
             continue
-        terms = pdf["term"].to_numpy()
-        first_of_last = int(np.searchsorted(terms, terms[-1], side="left"))
-        carry = pdf.iloc[first_of_last:]
-        head = pdf.iloc[:first_of_last]
-        if len(head):
-            yield _encode_sorted_run(head, n_docs, avgdl, score_in)
-    if carry is not None and len(carry):
-        yield _encode_sorted_run(carry, n_docs, avgdl, score_in)
+        term = batch.column("term")
+        last = int(_group_starts(term)[-1])
+        if last == 0 and carry and \
+                term[0].as_py() == carry[-1].column("term")[-1].as_py():
+            carry.append(batch)  # the whole batch continues the open term
+            continue
+        done = carry + ([batch.slice(0, last)] if last else [])
+        if done:
+            yield flush(done)
+        carry = [batch.slice(last)]
+    if carry:
+        yield flush(carry)
 
 
 def build_segments_fast(postings: DataFrame, n_docs: int, avgdl: int,
@@ -786,12 +837,14 @@ def build_segments_fast(postings: DataFrame, n_docs: int, avgdl: int,
     """Unigram fast path: ONE shuffle total.
 
     repartition(term) → Tungsten sortWithinPartitions(term, doc_id) →
-    streaming mapInPandas group-encode with FUSED df + BM25 (df = group
-    size, so the separate df aggregation + join of the classic path
-    disappear). ~100× less per-group overhead than one-applyInPandas-call-
-    per-term when the dictionary is dominated by tiny lists (unique
-    identifiers at 10^12-file scale). Not applicable to salted builds
-    (partial groups don't know df) — use :func:`build_segments` there.
+    streaming ``mapInArrow`` encode (:func:`encode_sorted_batch`) with
+    FUSED df + BM25 (df = group size, so the separate df aggregation +
+    join of the classic path disappear). The encoder is columnar: Arrow
+    batches in, one ``SEGMENT_SCHEMA`` batch out, no Python object per
+    term — dictionaries dominated by tiny lists (unique identifiers at
+    10^12-file scale) cost what their postings cost. Not applicable to
+    salted builds (partial groups don't know df) — use
+    :func:`build_segments` there.
 
     ``n_postings``: optional known row count (build_index gets it for
     free from the stats aggregate over the persisted postings) — sizes
@@ -814,9 +867,9 @@ def build_segments_fast(postings: DataFrame, n_docs: int, avgdl: int,
     part = part.sortWithinPartitions("term", "doc_id")
 
     def run(batches):
-        yield from _stream_encode(batches, n_docs, avgdl, score_in=False)
+        yield from _encode_stream(batches, n_docs, avgdl, score_in=False)
 
-    return part.mapInPandas(run, schema=SEGMENT_SCHEMA)
+    return part.mapInArrow(run, schema=SEGMENT_SCHEMA)
 
 def _partial_run(pdf: pd.DataFrame) -> pd.DataFrame:
     """Stage-1 salted group: emit one sorted run (uncompressed arrays)."""
@@ -852,9 +905,10 @@ def build_segments(scored: DataFrame, salt_buckets: int = 0,
     """scored postings → one segment row per term.
 
     ``salt_buckets=0``: one explicit term-hash shuffle + Tungsten sort +
-    streaming batched encode (same kernel as the fused unigram path; an
-    ``applyInPandas`` per term would pay one UDF invocation per term — ruinous
-    for d-bigram dictionaries with millions of pair terms).
+    the streaming columnar ``mapInArrow`` encoder (:func:`_encode_stream`,
+    same kernel as the fused unigram path, scores taken from ``score_q``;
+    an ``applyInPandas`` per term would pay one UDF invocation per term —
+    ruinous for d-bigram dictionaries with millions of pair terms).
     ``salt_buckets=S>0``: two-stage salted build — every term flows through
     stage 1 with salt = doc_id % S (deterministic, no RNG), bounding any
     single task's group to ~df/S postings.
@@ -877,9 +931,9 @@ def build_segments(scored: DataFrame, salt_buckets: int = 0,
                    .sortWithinPartitions("term", "doc_id")
 
         def run(batches):
-            yield from _stream_encode(batches, 0, 0, score_in=True)
+            yield from _encode_stream(batches, 0, 0, score_in=True)
 
-        return part.mapInPandas(run, schema=SEGMENT_SCHEMA)
+        return part.mapInArrow(run, schema=SEGMENT_SCHEMA)
     salted = cols.withColumn(
         "salt", F.pmod(F.col("doc_id"), F.lit(salt_buckets)).cast("int"))
     runs = salted.groupBy("term", "salt").applyInPandas(

@@ -12,7 +12,9 @@ On a cluster:
 Locally the same commands run against parquet paths on `local[N]`
 (master from SPARK_GRAFT_CPUS / --master). The build writes the
 term-bucketed segment store (partition-pruned reads: a query touches at
-most |query terms| buckets) plus resumable phase checkpoints.
+most |query terms| buckets). ``--resume-root DIR`` makes it a resumable
+phase-checkpointed build instead; that path has no skew split, so it
+cannot be combined with ``--hot-df`` (argparse rejects the pair).
 """
 
 from __future__ import annotations
@@ -161,12 +163,17 @@ def main(argv=None) -> int:
     b.add_argument("--out", required=True)
     b.add_argument("--dbigram", type=int, default=0,
                    help="d-bigram window distance (0 = unigrams only)")
-    b.add_argument("--hot-df", type=int, default=0, dest="hot_df",
-                   help="df threshold above which terms take the salted "
-                        "skew path (0 = no skew split)")
     b.add_argument("--buckets", type=int, default=64)
-    b.add_argument("--resume-root", default=None, dest="resume_root",
-                   help="checkpoint dir for resumable phase builds")
+    # the resumable build has no skew split, so the two flags exclude
+    # each other instead of one being ignored
+    mode = b.add_mutually_exclusive_group()
+    mode.add_argument("--hot-df", type=int, default=0, dest="hot_df",
+                      help="df threshold above which terms take the salted "
+                           "skew path (0 = no skew split); not with "
+                           "--resume-root")
+    mode.add_argument("--resume-root", default=None, dest="resume_root",
+                      help="checkpoint dir for resumable phase builds; "
+                           "not with --hot-df")
     b.add_argument("--stopwords-web", action="store_true",
                    dest="stopwords_web",
                    help="drop the standard English web stopword list at "

@@ -1,8 +1,9 @@
 """Posting-list codec: delta + variable-byte compression and block-max blocks.
 
-Pure NumPy — no Spark imports. This kernel runs inside Arrow-batched UDFs
-(``applyInPandas``) on executors; keeping it Spark-free makes it unit-testable
-and property-testable in isolation.
+NumPy (plus pyarrow for the batch encoder's columnar output) — no Spark
+imports. These kernels run inside Arrow-batched UDFs (``mapInArrow``,
+``applyInPandas``) on executors; keeping them Spark-free makes them
+unit-testable and property-testable in isolation.
 
 Capability parity (see SURVEY.md §2.8): the reference compresses posting
 lists with classic VByte (``src/PredictiveIndex/VariableByteCode.java:18-57``)
@@ -28,6 +29,7 @@ rank-identical regardless of execution order.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 BLOCK_SIZE = 128
 
@@ -492,54 +494,91 @@ def encode_postings(doc_ids: np.ndarray, scores: np.ndarray,
     )
 
 
+def list_array(counts: np.ndarray, values: pa.Array) -> pa.ListArray:
+    """Arrow list column whose row i holds the next ``counts[i]`` values."""
+    offsets = np.zeros(len(counts) + 1, dtype=np.int32)
+    np.cumsum(counts, out=offsets[1:])
+    return pa.ListArray.from_arrays(pa.array(offsets), values)
+
+
 def encode_groups(dids: np.ndarray, scores: np.ndarray, tfs: np.ndarray,
-                  starts: np.ndarray, ends: np.ndarray) -> list[dict]:
-    """Batched encoder for MANY terms at once (rows in (term,doc_id) order,
-    groups contiguous at [starts[i], ends[i])). The per-term fast path:
-    long-tail dictionaries (unique identifiers at 10^12-file scale) make
-    one-call-per-term encoding the build bottleneck — ~50µs of NumPy call
-    overhead per 1-posting list. Here the whole batch is VByte-encoded in
-    THREE vectorized calls and each term's blobs are sliced out by byte
-    range; only multi-block terms (> BLOCK_SIZE postings) fall back to
-    :func:`encode_postings`. Returns segment_to_row-shaped dicts (term not
-    filled)."""
+                  starts: np.ndarray) -> dict[str, pa.Array]:
+    """Columnar encoder for MANY terms at once: rows in (term, doc_id)
+    order, term groups contiguous from ``starts`` (ascending, starts[0] =
+    0, the last group runs to the end). Returns the segment columns after
+    ``term`` as Arrow arrays, one row per group, each row byte-identical
+    to :func:`encode_postings` + :func:`segment_to_row` of that group.
+
+    Block heads re-anchor on the previous block's last docID, so a list's
+    d-gap stream is the plain within-group diff for every block, and the
+    three streams of every list are contiguous slices of ONE batch-wide
+    VByte buffer each. The blob columns are Arrow binary arrays over those
+    buffers (offsets at group starts); block metadata comes from repeat /
+    reduceat over the flattened block table — no Python per term."""
+    dids = np.ascontiguousarray(dids, dtype=np.int64)
+    scores = np.ascontiguousarray(scores, dtype=np.int64)
+    tfs = np.ascontiguousarray(tfs, dtype=np.int64)
+    starts = np.asarray(starts, dtype=np.int64)
+    n, n_groups = dids.shape[0], starts.shape[0]
+    ends = np.append(starts[1:], n)
     sizes = ends - starts
-    n = dids.shape[0]
-    # within-group d-gaps: plain diff everywhere, group heads reset to the
-    # absolute docID (the "first" of [first, gaps...])
+    inner = np.ones(n, dtype=bool)
+    inner[starts] = False
+    if (inner[1:] & (dids[1:] <= dids[:-1])).any():
+        raise ValueError("doc_ids must be strictly increasing within a term")
+    # int64 wraparound is intended: gaps between far-apart (e.g. hashed,
+    # negative) docIDs are stored mod 2^64 and the decoder's int64 cumsum
+    # wraps back, exactly as in encode_postings
     gaps = np.empty(n, dtype=np.int64)
-    if n:
-        gaps[1:] = dids[1:] - dids[:-1]
-        gaps[starts] = dids[starts]
-    enc_d, off_d = vbyte_encode_with_offsets(gaps.astype(np.uint64))
+    gaps[1:] = dids[1:] - dids[:-1]
+    gaps[starts] = dids[starts]
+    enc_d, off_d = vbyte_encode_with_offsets(gaps.view(np.uint64))
     enc_s, off_s = vbyte_encode_with_offsets(zigzag_encode(scores))
-    enc_t, off_t = vbyte_encode_with_offsets(tfs.astype(np.uint64))
-    gmax = np.maximum.reduceat(scores, starts) if n else np.empty(0, np.int64)
-    rows: list[dict] = []
-    small = sizes <= BLOCK_SIZE
-    for gi in range(starts.shape[0]):
-        s, e = int(starts[gi]), int(ends[gi])
-        if not small[gi]:
-            rows.append(segment_to_row(
-                encode_postings(dids[s:e], scores[s:e], tfs[s:e])))
-            continue
-        dlo, dhi = int(off_d[s]), int(off_d[e])
-        slo, shi = int(off_s[s]), int(off_s[e])
-        tlo, thi = int(off_t[s]), int(off_t[e])
-        rows.append({
-            "df": int(sizes[gi]),
-            "n_blocks": 1,
-            "did_blob": enc_d[dlo:dhi],
-            "score_blob": enc_s[slo:shi],
-            "tf_blob": enc_t[tlo:thi],
-            "block_last": [int(dids[e - 1])],
-            "block_max": [int(gmax[gi])],
-            "block_n": [int(sizes[gi])],
-            "did_off": [0, dhi - dlo],
-            "score_off": [0, shi - slo],
-            "tf_off": [0, thi - tlo],
-        })
-    return rows
+    enc_t, off_t = vbyte_encode_with_offsets(tfs.view(np.uint64))
+    # flattened block table: group g owns blocks [first[g], first[g]+nb[g])
+    nb = (sizes + BLOCK_SIZE - 1) // BLOCK_SIZE
+    grp = np.repeat(np.arange(n_groups), nb)
+    first = np.cumsum(nb) - nb
+    bstart = starts[grp] + (np.arange(grp.shape[0]) - first[grp]) * BLOCK_SIZE
+    bend = np.minimum(bstart + BLOCK_SIZE, ends[grp])
+    # *_off lists hold each block's start and then the group's end, as
+    # byte positions relative to the group's first byte
+    n_off = nb + 1
+    is_end = np.zeros(int(n_off.sum()), dtype=bool)
+    is_end[np.cumsum(n_off) - 1] = True
+    pts = np.empty(is_end.shape[0], dtype=np.int64)
+    pts[~is_end] = bstart
+    pts[is_end] = ends
+    pgrp = np.repeat(np.arange(n_groups), n_off)
+    blob_at = np.append(starts, n)
+
+    def blob(enc: bytes, off: np.ndarray) -> pa.Array:
+        if off[-1] > np.iinfo(np.int32).max:
+            raise ValueError(
+                "encode batch exceeds 2 GiB of VByte bytes in one stream; "
+                "route hot terms through the salted build")
+        return pa.BinaryArray.from_buffers(
+            pa.binary(), n_groups,
+            [None, pa.py_buffer(off[blob_at].astype(np.int32)),
+             pa.py_buffer(enc)])
+
+    def lists(counts: np.ndarray, values: np.ndarray) -> pa.Array:
+        return list_array(counts, pa.array(values))
+
+    return {
+        "df": pa.array(sizes),
+        "n_blocks": pa.array(nb.astype(np.int32)),
+        "did_blob": blob(enc_d, off_d),
+        "score_blob": blob(enc_s, off_s),
+        "tf_blob": blob(enc_t, off_t),
+        "block_last": lists(nb, dids[bend - 1]),
+        "block_max": lists(nb, np.maximum.reduceat(scores, bstart)
+                           if n else scores),
+        "block_n": lists(nb, bend - bstart),
+        "did_off": lists(n_off, off_d[pts] - off_d[starts][pgrp]),
+        "score_off": lists(n_off, off_s[pts] - off_s[starts][pgrp]),
+        "tf_off": lists(n_off, off_t[pts] - off_t[starts][pgrp]),
+    }
 
 
 def segment_to_row(seg: Segment) -> dict:
