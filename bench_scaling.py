@@ -10,7 +10,8 @@ eff = thr_4N / (4 * thr_N).
 
 Each configuration runs in its own subprocess (fresh JVM — no session
 reuse, no warm-cache bleed). The parent aggregates into one JSON line and
-(optionally) rewrites BENCH/SCALING.json.
+stores it in BENCH/SCALING.json under the rung key
+``round<ROUND>_rung_<N>_<4N>``, merged with that rung's earlier attempts.
 
 Usage: python bench_scaling.py [n_docs]   (default 20000)
 """
@@ -51,6 +52,8 @@ CORES_N = int(os.environ.get("SPARK_GRAFT_SCALE_N", "4"))
 CORES_4N = 4 * CORES_N
 # more reps = better odds one rep lands between neighbor-noise bursts
 N_REPS = int(os.environ.get("SPARK_GRAFT_SCALE_REPS", "3"))
+# development round the results belong to; part of the rung key
+ROUND = 6
 
 
 def worker_dbigram(master: str, cores: int) -> None:
@@ -302,6 +305,19 @@ def merge_attempt(new: dict, old: dict | None) -> dict:
     return merged
 
 
+def rung_key(cores_n: int, cores_4n: int, round_: int = ROUND) -> str:
+    """SCALING.json key of one run's report: its core pair and round."""
+    return f"round{round_}_rung_{cores_n}_{cores_4n}"
+
+
+def write_rung(full: dict | None, key: str, report: dict) -> dict:
+    """SCALING.json with ``report`` stored under ``key``. Every other key
+    — other rungs, the accepted headline blocks and their metadata — is
+    left as it was, so no stale field of another run sits beside new
+    numbers and no earlier rung is lost."""
+    return {**(full or {}), key: report}
+
+
 def main() -> None:
     if len(sys.argv) > 2 and sys.argv[2] == "--worker":
         worker(f"local[{sys.argv[3]}]", int(sys.argv[3]))
@@ -317,11 +333,16 @@ def main() -> None:
     # (each config is ~10 min; on this noisy shared host re-measuring only
     # the configs whose reps spread >30% is how a quiet window gets used)
     skip_dbi = os.environ.get("SPARK_GRAFT_SCALE_SKIP_DBI") == "1"
-    prev = None
+    key = rung_key(CORES_N, CORES_4N)
     scaling_path = os.path.join(REPO, "BENCH", "SCALING.json")
-    if skip_dbi and os.path.exists(scaling_path):
+    prev_full = None
+    if os.path.exists(scaling_path):
         with open(scaling_path) as f:
-            prev = json.load(f)
+            prev_full = json.load(f)
+    prev = (prev_full or {}).get(key, {})
+    if skip_dbi and "raw_dbigram" not in prev:
+        sys.exit(f"SPARK_GRAFT_SCALE_SKIP_DBI=1: no {key}.raw_dbigram in "
+                 f"{scaling_path} to reuse")
     if not skip_dbi:
         ensure_corpus(N_DOCS_DBI, CORPUS_DBI)
     results = {}
@@ -344,17 +365,13 @@ def main() -> None:
         results_dbi[cores] = json.loads(line)
     ceiling = host_ceiling()
 
-    prev_full = None
-    if os.path.exists(scaling_path):
-        with open(scaling_path) as f:
-            prev_full = json.load(f)
     for cores in (CORES_N, CORES_4N):
-        old = (prev_full or {}).get("raw", {}).get(str(cores))
+        old = prev.get("raw", {}).get(str(cores))
         results[cores]["corpus"] = CORPUS
         results[cores]["n_queries"] = N_QUERIES
         results[cores] = merge_attempt(results[cores], old)
     rn, r4n = results[CORES_N], results[CORES_4N]
-    if skip_dbi and prev is not None:
+    if skip_dbi:
         dn = prev["raw_dbigram"][str(CORES_N)]
         d4n = prev["raw_dbigram"][str(CORES_4N)]
         results_dbi = prev["raw_dbigram"]
@@ -363,6 +380,7 @@ def main() -> None:
     report = {
         "metric": f"scaling efficiency local[{CORES_N}] -> "
                   f"local[{CORES_4N}] (N vs 4N proxy)",
+        "round": ROUND,
         "n_docs": N_DOCS,
         "n_queries": N_QUERIES,
         "build": {
@@ -396,15 +414,8 @@ def main() -> None:
     }
     print(json.dumps(report))
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    # merge into the existing record instead of replacing it: SCALING.json
-    # accumulates named rungs (round4_rung_8_32, round5_rung_*, ...) across
-    # sessions; only this script's own top-level report fields are updated
-    # (an earlier form replaced the whole file, silently dropping every
-    # other rung — the final round-5 session had to restore from backup)
-    full = prev_full if prev_full is not None else {}
-    full.update(report)
-    with open(os.path.join(REPO, "BENCH", "SCALING.json"), "w") as f:
-        json.dump(full, f, indent=1)
+    with open(scaling_path, "w") as f:
+        json.dump(write_rung(prev_full, key, report), f, indent=1)
         f.write("\n")
 
 

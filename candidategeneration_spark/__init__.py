@@ -25,4 +25,8 @@ checkpoints  resumable per-phase manifests
 streaming    structured-streaming analogues (windowed aggs, sessionization)
 """
 
+from .config import install_lazy_zip_invalidation
+
+install_lazy_zip_invalidation()
+
 __version__ = "0.1.0"

@@ -11,7 +11,8 @@ Lifecycle of the d-bigram build (SURVEY.md §3.1):
 
     read corpus → mapInArrow(tokenize + per-doc tf)        [one Python pass]
     → explode(arrays_zip(terms, tfs)) → unigram postings   [JVM]
-    → join per-term df (shuffle on term)
+    → per-term df (shuffle on term) + idf                  [pandas UDF]
+    → broadcast-join df/idf onto the postings              [JVM]
     → quantized BM25 per posting (JVM column math)
     → doc-local pair scoring over the same token table     [mapInPandas]
     → repartition(term) + sort(term, doc_id)
@@ -353,9 +354,14 @@ def global_stats(docs: DataFrame, text_col: str = "text",
 def score_postings(postings: DataFrame, n_docs: int, avgdl: int) -> DataFrame:
     """postings + per-term df → + quantized ``score_q`` (int64).
 
-    The df join shuffles on ``term`` — the same key the segment build groups
-    on, so AQE/Catalyst reuses the exchange and the pipeline pays one
-    logical repartition by term, not two.
+    The df aggregate shuffles the postings' terms on ``term``; its reduce
+    stage (``spark.sql.shuffle.partitions`` tasks) also runs the idf
+    pandas UDF. The per-term table is small, so the planner broadcasts it
+    — at bench scale the plan is a ``BroadcastHashJoin`` and the postings
+    are not shuffled for the join (a table above the broadcast threshold
+    turns it into a sort-merge join that does shuffle them). No exchange
+    is shared with the segment build, whose ``repartition(term)`` is its
+    own shuffle.
 
     UNIGRAMS ONLY. The round-1 pair branch here (join the pair table twice
     against scored unigrams) was the build's biggest scale-killer and is

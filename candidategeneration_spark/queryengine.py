@@ -792,9 +792,29 @@ class _CachingSegment:
         return self.seg.first_block_geq(did)
 
 
-# per-worker cache of broadcast segment dicts (python workers are reused
-# across tasks, so hot lists decode once per executor, not once per task)
+# per-worker cache of broadcast segment dicts, keyed by broadcast id:
+# python workers are reused across tasks, so hot lists decode once per
+# worker, not once per task. Only module-level code may touch it — a
+# task's closure is pickled by value together with a private copy of the
+# globals it reads, which would make the cache per-task. The key is the
+# id, not the value object: a task that does not use the broadcast makes
+# the worker drop its copy, so the next batch sees a new value object.
 _BC_SEGMENTS: dict[int, dict[str, _CachingSegment]] = {}
+_BC_HITS = 0  # tasks served from _BC_SEGMENTS in this worker
+
+
+def _broadcast_segments(bc, bid: int) -> dict[str, _CachingSegment]:
+    """The decode-memoizing segments of broadcast ``bc`` (JVM id ``bid``;
+    a worker-side Broadcast does not know its id) in this worker."""
+    global _BC_HITS
+    segs = _BC_SEGMENTS.get(bid)
+    if segs is not None:
+        _BC_HITS += 1
+        return segs
+    segs = {t: _CachingSegment(Segment(**d)) for t, d in bc.value}
+    _BC_SEGMENTS.clear()  # one live batch per worker is enough
+    _BC_SEGMENTS[bid] = segs
+    return segs
 
 
 def _query_group(pdf: pd.DataFrame, k: int, use_wand) -> pd.DataFrame:
@@ -893,19 +913,10 @@ def wand_topk_prepared(prep: PreparedIndex, queries: DataFrame, k: int = 10,
     """Serve a query batch against a PreparedIndex (no driver-side work
     besides plan submission)."""
     bc = prep.bc
+    bid = bc._jbroadcast.id()
 
     def run(batches):
-        val = bc.value
-        key = id(val)
-        hit = _BC_SEGMENTS.get(key)
-        # the cache pins `val`, so a live entry's id cannot be reused by a
-        # different broadcast value (identity check guards the impossible)
-        if hit is not None and hit[0] is val:
-            segs = hit[1]
-        else:
-            segs = {t: _CachingSegment(Segment(**d)) for t, d in val}
-            _BC_SEGMENTS.clear()  # one live batch per worker is enough
-            _BC_SEGMENTS[key] = (val, segs)
+        segs = _broadcast_segments(bc, bid)
         fn = _kernel(use_wand)
         # result assembly in flat numpy accumulators — a per-query
         # pd.DataFrame + one giant concat was ~40% of serving overhead at

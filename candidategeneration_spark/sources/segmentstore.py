@@ -45,9 +45,18 @@ def load_segments_for_terms(spark: SparkSession, path: str,
     (check .explain(): PartitionFilters on `bucket`), then the exact term
     filter is pushed to the parquet row groups."""
     seg = spark.read.parquet(path)
-    buckets = (spark.createDataFrame([(t,) for t in terms], "term string")
-               .select(bucket_of(F.col("term"), n_buckets).alias("b"))
-               .distinct().collect())
-    blist = [r["b"] for r in buckets]
+    blist = sorted({r["b"] for r in
+                    term_buckets(spark, terms, n_buckets).collect()})
     return seg.where(F.col("bucket").isin(blist)) \
               .where(F.col("term").isin(terms))
+
+
+def term_buckets(spark: SparkSession, terms: list[str],
+                 n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
+    """One row ``b`` per term: its bucket, computed by a JVM-only literal
+    plan. A ``createDataFrame(list)`` scan would start Python workers that
+    never import this package, so each of their tasks pays PySpark's full
+    per-task ``pyspark.zip`` re-read (see config.py)."""
+    lits = F.array(*[F.lit(t) for t in terms]).cast("array<string>")
+    return spark.range(1).select(F.explode(lits).alias("term")) \
+                .select(bucket_of(F.col("term"), n_buckets).alias("b"))

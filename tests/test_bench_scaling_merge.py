@@ -34,3 +34,27 @@ def test_unlabelled_old_record_is_not_merged():
     del old["corpus"]
     assert bs.merge_attempt(_run(3.0, 80.0), old)["attempts"] == 1
     assert bs.merge_attempt(_run(3.0, 80.0), None)["attempts"] == 1
+
+
+def test_rung_key_names_core_pair_and_round():
+    assert bs.rung_key(4, 16, 6) == "round6_rung_4_16"
+    assert bs.rung_key(2, 8) == f"round{bs.ROUND}_rung_2_8"
+    assert len({bs.rung_key(2, 8, 6), bs.rung_key(4, 16, 6),
+                bs.rung_key(2, 8, 7)}) == 3
+
+
+def test_write_rung_leaves_headline_and_other_rungs_alone():
+    full = {"metric": "old headline", "round": 4, "build": {"efficiency": 0.98},
+            "round5_rung_8_32": {"build": {"efficiency": 0.9}}}
+    report = {"metric": "new", "round": 6, "build": {"efficiency": 0.7},
+              "raw": {"4": _run(3.0, 80.0)}}
+    key = bs.rung_key(4, 16, 6)
+    out = bs.write_rung(full, key, report)
+    assert out == {**full, key: report}
+    assert full == {"metric": "old headline", "round": 4,
+                    "build": {"efficiency": 0.98},
+                    "round5_rung_8_32": {"build": {"efficiency": 0.9}}}
+    # a rerun of the same rung replaces only that rung
+    again = bs.write_rung(out, key, {"metric": "newer"})
+    assert again == {**full, key: {"metric": "newer"}}
+    assert bs.write_rung(None, key, report) == {key: report}

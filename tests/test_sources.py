@@ -247,3 +247,36 @@ def test_segment_store_roundtrip_serves_rank_identical(spark, docs_sf001,
               .drop("bucket")
     got_pruned = rows_of(pruned)
     assert got_pruned == want
+
+
+def test_term_buckets_jvm_only_and_match_python_rdd_scan(spark):
+    """The bucket lookup of the pruned load is a JVM-only literal plan
+    (no Python-RDD scan, so no package-less Python workers) and computes
+    the same bucket set as the createDataFrame(list) scan it replaced."""
+    from pyspark.sql import functions as F
+    from candidategeneration_spark.sources import segmentstore as S
+
+    def python_rdd_scan(terms, n):
+        return {r["b"] for r in
+                spark.createDataFrame([(t,) for t in terms], "term string")
+                .select(S.bucket_of(F.col("term"), n).alias("b"))
+                .distinct().collect()}
+
+    def python_scan_free(df):
+        qe = df._jdf.queryExecution()
+        return ("LogicalRDD" not in qe.analyzed().toString()
+                and "ExistingRDD" not in qe.executedPlan().toString())
+
+    assert not python_scan_free(
+        spark.createDataFrame([("t",)], "term string"))  # the probe works
+    cases = [["fast", "key", "fast"], ["a\x1fb", "naïve", "", "x" * 300],
+             [f"t{i}" for i in range(200)]]
+    for terms in cases:
+        for n in (1, 8, 64):
+            got = S.term_buckets(spark, terms, n)
+            assert python_scan_free(got)
+            assert {r["b"] for r in got.collect()} == \
+                python_rdd_scan(terms, n), (terms, n)
+    empty = S.term_buckets(spark, [], 8)
+    assert python_scan_free(empty)
+    assert empty.collect() == []
