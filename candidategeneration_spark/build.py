@@ -22,18 +22,25 @@ Lifecycle of the d-bigram build (SURVEY.md §3.1):
 The unigram-only build tokenizes with ``mapInPandas`` (tokenize + tf in
 one pass) and fuses df + BM25 into the encoder (:func:`build_segments_fast`).
 
+:func:`build_index` is the one pipeline for every build mode: the skew
+split (``hot_df``) and the persistence policy (in-memory ``persist()``, or
+a :class:`~candidategeneration_spark.checkpoints.Checkpointer` that writes
+each phase and skips finished ones) are its parameters.
+
 Skew (north rule): hot d-bigrams (e.g. ``def __init__`` at 10^12-file scale)
 overload a single encode task. ``build_segments`` supports a salted
 two-stage aggregation: stage 1 groups on (term, salt=doc_id%S) and emits
 sorted partial runs; stage 2 merges the ≤S runs per term. Because stage-1
-groups are bounded at df/S postings, no single task sees a whole hot list.
-The reference has no skew handling at all (fixed 4 shards).
+groups are bounded at df/S postings, no single task sees a whole hot list;
+:func:`build_segments_skew_aware` salts only the hot terms. The reference
+has no skew handling at all (fixed 4 shards).
 """
 
 from __future__ import annotations
 
+import hashlib
 import itertools
-from typing import Iterator
+from typing import TYPE_CHECKING, Iterator
 
 import numpy as np
 import pandas as pd
@@ -48,6 +55,9 @@ from pyspark.sql.types import (
 from . import indexcodec
 from .bm25 import avgdl_floor, bm25_quantized_col, idf_col
 from .tokenizer import DBIGRAM_DISTANCE, tokenize_pandas, tokens_col
+
+if TYPE_CHECKING:
+    from .checkpoints import Checkpointer
 
 PAIR_SEP = "\x1f"  # string analogue of the reference's a<<32|b long packing
                    # (``WWW.java:432-440``) for our string-keyed terms
@@ -301,8 +311,8 @@ def tokenize_docs(docs: DataFrame, id_col: str = "doc_id",
     this table (:func:`build_postings_from_tokens`) and the corpus text is
     tokenized exactly once per build, by one Python runner per task. At
     100 TB the persisted form is the same order as the corpus itself —
-    use ``StorageLevel.DISK_ONLY`` / checkpoints.py when it exceeds
-    cluster RAM (same guidance as the postings persist).
+    build with ``build_index(checkpoint=...)`` when it exceeds cluster
+    RAM: the table is then the build's ``tokens`` Parquet phase.
 
     Empty documents keep a row with empty arrays (token-less docs still
     count in n_docs, ``InvertedIndex.java:171``).
@@ -950,21 +960,49 @@ def build_segments(scored: DataFrame, salt_buckets: int = 0,
 
 def build_segments_skew_aware(scored: DataFrame, hot_df_threshold: int,
                               salt_buckets: int = 16,
-                              n_postings_hint: int | None = None
-                              ) -> DataFrame:
+                              n_postings_hint: int | None = None,
+                              pairs: DataFrame | None = None) -> DataFrame:
     """Skew-split segment build: ONLY terms with df > threshold take the
     two-stage salted route; the long tail takes the one-shuffle streaming
     path. This is the practical 100 TB shape — salting everything doubles
     the shuffle for millions of tiny lists to protect against a handful of
     hot ones (``def``/``class``-grade d-bigrams), while salting nothing
     lets one task own a whole hot list. The reference has no skew handling
-    at all (fixed 4 shards, InvertedIndex.java:74-84).
+    at all (fixed 4 shards, InvertedIndex.java:74-84). A threshold of 0
+    salts every term.
 
     ``scored`` must carry the ``df`` column (score_postings provides it),
     so hot-term detection is a filter, not an extra aggregation.
+
+    ``pairs``: optional doc-locally scored pair postings
+    (:func:`build_pair_postings_from_tokens`), stored alongside the
+    unigrams. Hot-PAIR detection needs no pair-df aggregation: a pair's
+    df is bounded by min(df(t1), df(t2)), so only pairs whose BOTH
+    components are hot unigrams can be hot. Those take the salted path
+    (conservatively — a routed-but-cold pair is still exact, just takes
+    the two-stage encode); every other pair is provably cold. Routing is
+    two BROADCAST left joins of the hot-term set (bounded by
+    total_postings/threshold) on the pair components — never a collected
+    ``isin`` literal list, which at 100 TB with a low threshold compiles a
+    giant In predicate into every task, and never a pair-table shuffle
+    (plan-asserted in tests/test_plans.py). Each side then goes through
+    :func:`pair_segment_input`.
     """
     hot = scored.where(F.col("df") > hot_df_threshold)
     cold = scored.where(F.col("df") <= hot_df_threshold)
+    if pairs is not None:
+        hot_terms = hot.select("term").distinct()
+        split = F.split(F.col("term"), PAIR_SEP)
+        routed = pairs.withColumn("__t1", split.getItem(0)) \
+                      .withColumn("__t2", split.getItem(1))
+        for side in ("__t1", "__t2"):
+            flag = hot_terms.select(F.col("term").alias(side),
+                                    F.lit(True).alias(side + "_hot"))
+            routed = routed.join(F.broadcast(flag), side, "left")
+        pair_hot = (F.coalesce(F.col("__t1_hot"), F.lit(False))
+                    & F.coalesce(F.col("__t2_hot"), F.lit(False)))
+        hot = pair_segment_input(hot, routed.where(pair_hot))
+        cold = pair_segment_input(cold, routed.where(~pair_hot))
     out = build_segments(cold, salt_buckets=0,
                          n_postings_hint=n_postings_hint)
     if not hot.isEmpty():
@@ -981,8 +1019,9 @@ def pair_segment_input(scored_uni: DataFrame, pairs: DataFrame) -> DataFrame:
     instead: a stored pair segment yields the separate (did, s1, s2)
     component streams via s2 = unzigzag(tf), s1 = score - s2
     (``algo_toplayer.cpp:477-564``, ``BigramIndex.java:44-85``). zigzag
-    keeps negative components 1-2 VByte bytes. Every build entry point
-    (build_index, build_index_skew_aware, checkpoints.build_index_resumable)
+    keeps negative components 1-2 VByte bytes. Every pair-storing segment
+    input (build_index, both sides of build_segments_skew_aware's hot/cold
+    split, and through them checkpoints.build_index_resumable and the CLI)
     MUST go through here — a path that unioned raw tf=1 instead would store
     segments that decode s2=-1 for every pair.
     """
@@ -1008,180 +1047,134 @@ def release_build_caches(stats: dict) -> None:
             pass  # session already stopped
 
 
+def _stopwords_key(stopwords) -> str | None:
+    """Digest of the WHOLE sorted stopword set, for checkpoint params: a
+    resume under another set must not reuse what the first tokenized."""
+    if not stopwords:
+        return None
+    return hashlib.sha256(
+        "\n".join(sorted(stopwords)).encode()).hexdigest()
+
+
 def build_index(docs: DataFrame, id_col: str = "doc_id",
                 text_col: str = "text",
                 dbigram_distance: int | None = DBIGRAM_DISTANCE,
-                salt_buckets: int = 0,
-                persist: bool = True,
+                hot_df: int | None = None,
+                salt_buckets: int = 16,
+                checkpoint: Checkpointer | None = None,
                 phase_times: dict | None = None,
                 stopwords=None) -> tuple[DataFrame, dict]:
     """End-to-end build → (segments DataFrame, stats dict).
 
-    Unigram postings are built ONCE (one Arrow tokenize pass) and scored
-    with a unigram-sized df join; pair postings are generated *already
-    scored* by the doc-local pass (:func:`build_pair_postings`) — the pair
-    table, the largest intermediate of the build, never joins anything.
+    The reference's four-phase builder (``WWWMain.java:50-199``) as one
+    pipeline of named phases:
 
-    ``persist=True`` materializes the unigram postings (referenced by the
-    stats aggregate + scoring join) and, on d-bigram builds, the token
-    table (unigram explode + pair pass) and the scored unigrams (per-doc
-    score map + segment union) — without it Catalyst re-runs the
-    tokenizer per reference: extra corpus scans at 100 TB. On a real cluster use ``StorageLevel.DISK_ONLY`` via
-    checkpoints.py instead when postings exceed cluster RAM.
+        tokens    tokenize-once table (d-bigram only, :func:`tokenize_docs`)
+        postings  unigram postings (from ``tokens``, else one Arrow pass)
+        stats     n_docs / total tokens / avgdl / n_postings
+        scored    quantized BM25 per unigram posting (df join)
+        pairs     pair postings, born scored by the doc-local pass over
+                  ``tokens`` (d-bigram only) — the pair table, the
+                  largest intermediate, never joins anything
+        encode    compressed block-max segments (lazy, returned)
+
+    The corpus text is tokenized exactly once per build.
+
+    ``hot_df``: skew split — terms (and pairs of two hot terms) with
+    df > ``hot_df`` take the two-stage salted encode with
+    ``salt_buckets`` salts (:func:`build_segments_skew_aware`); ``0``
+    salts every term, ``None`` (default) salts none. Segments are
+    byte-identical either way.
+
+    ``checkpoint``: persistence policy of the intermediates.
+    ``None`` persists them in memory (the token table, the postings and,
+    on d-bigram builds, the scored unigrams — without it Catalyst re-runs
+    the tokenizer per reference) and returns them in ``stats["cached"]``;
+    after materializing the segments (writing the store / counting), call
+    :func:`release_build_caches` to unpersist them — a long-lived session
+    that builds repeatedly would otherwise pin one corpus-order token
+    table per build in the cache manager. A
+    :class:`~candidategeneration_spark.checkpoints.Checkpointer` instead
+    writes every phase but encode as Parquet + manifest and skips the
+    phases a previous run finished (``WWW.java:367-369``
+    ``checkExistence``) — the resumable 100 TB policy, and the one to use
+    when the intermediates exceed cluster RAM. Its unigram builds keep
+    the ``scored`` phase, so a crash in encode resumes from it.
 
     ``phase_times``: optional dict filled with wall seconds of the
     materialized sub-phases (benchmark instrumentation).
-
-    The persisted intermediates are returned in ``stats["cached"]``;
-    after materializing the segments (writing the store / counting),
-    call :func:`release_build_caches` to unpersist them — a long-lived
-    session that builds repeatedly would otherwise pin one corpus-order
-    token table per build in the cache manager.
     """
     import time as _time
     # n_docs via parquet metadata / cheap count — no tokenize; counted
     # FIRST so it can size the tokenize pass (a single-file local corpus
-    # otherwise runs the Arrow pass on one task). Total tokens come from
-    # the postings themselves, and on d-bigram builds the pair pass reads
-    # the persisted tokenize-once table → the corpus is tokenized exactly
-    # once, period (round 5; the pair pass used to re-tokenize).
+    # otherwise runs the Arrow pass on one task)
     n_docs = docs.count()
-    sc = docs.sparkSession.sparkContext
+    spark = docs.sparkSession
+    sc = spark.sparkContext
     tok_parts = min(sc.defaultParallelism,
                     max(1, -(-n_docs // DOCS_PER_TOKENIZE_TASK)))
     cached: list = []
+
+    def phase(name, builder, keep=True, **kw):
+        if checkpoint is not None:
+            return checkpoint.phase(name, builder, **kw)[0]
+        df = builder()
+        if keep:
+            df = df.persist()
+            cached.append(df)
+        return df
+
+    # every phase that reads the corpus carries its tokenization contract
+    corpus = {"id_col": id_col, "text_col": text_col,
+              "stopwords": _stopwords_key(stopwords)}
     tokd = None
     if dbigram_distance:
-        # two consumers (unigram explode + pair pass): persist the token
-        # table so tokenize runs once
-        tokd = tokenize_docs(docs, id_col, text_col, stopwords=stopwords,
-                             input_partitions=tok_parts)
-        if persist:
-            tokd = tokd.persist()
-            cached.append(tokd)
-        postings = build_postings_from_tokens(tokd)
+        tokd = phase("tokens", lambda: tokenize_docs(
+            docs, id_col, text_col, stopwords=stopwords,
+            input_partitions=tok_parts), params=corpus)
+        postings = phase("postings", lambda: build_postings_from_tokens(tokd),
+                         inputs=["tokens"], params=corpus)
     else:
-        postings = build_postings(docs, id_col, text_col, None,
-                                  stopwords=stopwords,
-                                  input_partitions=tok_parts)
-    if persist:
-        postings = postings.persist()
-        cached.append(postings)
+        postings = phase("postings", lambda: build_postings(
+            docs, id_col, text_col, None, stopwords=stopwords,
+            input_partitions=tok_parts), params=corpus)
     t0 = _time.time()
-    stats = global_stats_from_postings(postings, n_docs)
+    if checkpoint is None:
+        stats = global_stats_from_postings(postings, n_docs)
+    else:
+        stats = phase("stats", lambda: spark.createDataFrame(
+            [tuple(global_stats_from_postings(postings, n_docs).values())],
+            "n_docs long, total_tokens long, avgdl long, n_postings long"),
+            inputs=["postings"]).collect()[0].asDict()
     stats["cached"] = cached
     if phase_times is not None:
         phase_times["tokenize_stats"] = round(_time.time() - t0, 3)
-    if dbigram_distance is None and salt_buckets <= 0:
+    if not dbigram_distance and hot_df is None and checkpoint is None:
         # unigram-only: fused single-shuffle path (df + score in-kernel)
         return build_segments_fast(postings, stats["n_docs"],
                                    stats["avgdl"],
                                    n_postings=stats["n_postings"]), stats
-    scored = score_postings(postings, stats["n_docs"], stats["avgdl"])
+    # scored feeds the per-doc score map AND the segment union on
+    # d-bigram builds; a unigram build reads it once
+    scored = phase("scored", lambda: score_postings(
+        postings, stats["n_docs"], stats["avgdl"]),
+        keep=bool(dbigram_distance), inputs=["postings", "stats"])
+    pairs = None
+    hint = stats["n_postings"]
     if dbigram_distance:
-        if persist:
-            scored = scored.persist()
-            cached.append(scored)
         pair_parts = min(sc.defaultParallelism * 4, max(
             1, -(-stats["total_tokens"] // TOKENS_PER_PAIR_TASK)))
-        pairs = build_pair_postings_from_tokens(tokd, scored,
-                                                dbigram_distance,
-                                                num_partitions=pair_parts)
+        pairs = phase("pairs", lambda: build_pair_postings_from_tokens(
+            tokd, scored, dbigram_distance, num_partitions=pair_parts),
+            keep=False, inputs=["tokens", "scored"],
+            params={"dbigram_distance": dbigram_distance})
         # pair rows are bounded by distance × total tokens (each token
         # opens ≤ d windows, pre-dedup) — a cheap over-estimate that sizes
         # the encode shuffle without materializing the pair table
-        hint = stats["n_postings"] \
-            + dbigram_distance * stats["total_tokens"]
-        return build_segments(pair_segment_input(scored, pairs),
-                              salt_buckets, n_postings_hint=hint), stats
-    return build_segments(scored, salt_buckets,
-                          n_postings_hint=stats["n_postings"]), stats
-
-
-def build_index_skew_aware(docs: DataFrame, hot_df_threshold: int,
-                           id_col: str = "doc_id", text_col: str = "text",
-                           dbigram_distance: int | None = None,
-                           salt_buckets: int = 16,
-                           stopwords=None,
-                           persist: bool = True) -> tuple[DataFrame, dict]:
-    """The 100 TB CLI build: doc-local pair scoring + skew-split encode.
-
-    Same segments, byte-identical, as :func:`build_index` (asserted in
-    tests) — but hot lists (df > threshold) take the two-stage salted
-    route so no single task ever owns a whole ``def``-grade list.
-
-    Hot-PAIR detection needs no pair-df aggregation: a pair's df is
-    bounded by min(df(t1), df(t2)), so only pairs whose BOTH components
-    are hot unigrams can possibly be hot. Those route to the salted path
-    (conservatively — a routed-but-cold pair is still exact, just takes
-    the two-stage encode); everything else is provably cold. The hot-term
-    set is small by definition (df > threshold bounds its size by
-    total_postings/threshold), and routing is two BROADCAST left joins
-    on the pair components (round 5 — it was a collected ``isin`` literal
-    list, which at 100 TB with a low threshold becomes a giant In
-    predicate compiled into every task). Map-side only: the pair table,
-    the build's largest intermediate, still never SHUFFLES for a join.
-    """
-    n_docs = docs.count()
-    sc = docs.sparkSession.sparkContext
-    tok_parts = min(sc.defaultParallelism,
-                    max(1, -(-n_docs // DOCS_PER_TOKENIZE_TASK)))
-    cached: list = []
-    tokd = None
-    if dbigram_distance:
-        tokd = tokenize_docs(docs, id_col, text_col, stopwords=stopwords,
-                             input_partitions=tok_parts)
-        if persist:
-            tokd = tokd.persist()
-            cached.append(tokd)
-        postings = build_postings_from_tokens(tokd)
-    else:
-        postings = build_postings(docs, id_col, text_col, None,
-                                  stopwords=stopwords,
-                                  input_partitions=tok_parts)
-    if persist:
-        postings = postings.persist()
-        cached.append(postings)
-    stats = global_stats_from_postings(postings, n_docs)
-    stats["cached"] = cached
-    scored = score_postings(postings, stats["n_docs"], stats["avgdl"])
-    if not dbigram_distance:
-        return build_segments_skew_aware(
-            scored, hot_df_threshold, salt_buckets,
-            n_postings_hint=stats["n_postings"]), stats
-    if persist:
-        scored = scored.persist()
-        cached.append(scored)
-    pair_parts = min(sc.defaultParallelism * 4, max(
-        1, -(-stats["total_tokens"] // TOKENS_PER_PAIR_TASK)))
-    pairs = build_pair_postings_from_tokens(tokd, scored, dbigram_distance,
-                                            num_partitions=pair_parts)
-    hot_df = scored.where(F.col("df") > hot_df_threshold) \
-                   .select("term").distinct()
-    uni_rows = scored.select("term", "doc_id", "tf", "score_q", "df")
-    s2z = F.expr("(s2 << 1) ^ (s2 >> 63)").cast("long").alias("tf")
-    split = F.split(F.col("term"), PAIR_SEP)
-    # df column on pair rows only routes hot/cold (never stored): the df
-    # bound min(df1,df2) is represented as threshold±1 sentinels. Routing
-    # = two broadcast LEFT joins of the hot-term set against the pair
-    # components — BroadcastHashJoin, never an In-literal, never a pair
-    # shuffle (plan-asserted in test_plans).
-    withc = pairs.withColumn("__t1", split.getItem(0)) \
-                 .withColumn("__t2", split.getItem(1))
-    h1 = hot_df.select(F.col("term").alias("__t1"),
-                       F.lit(True).alias("__h1"))
-    h2 = hot_df.select(F.col("term").alias("__t2"),
-                       F.lit(True).alias("__h2"))
-    routed = withc.join(F.broadcast(h1), "__t1", "left") \
-                  .join(F.broadcast(h2), "__t2", "left")
-    pair_hot = (F.coalesce(F.col("__h1"), F.lit(False))
-                & F.coalesce(F.col("__h2"), F.lit(False)))
-    pair_rows = routed.select(
-        "term", "doc_id", s2z, "score_q",
-        F.when(pair_hot, F.lit(hot_df_threshold + 1))
-         .otherwise(F.lit(0)).cast("long").alias("df"))
-    seg_in = uni_rows.unionByName(pair_rows)
-    hint = stats["n_postings"] + dbigram_distance * stats["total_tokens"]
-    return build_segments_skew_aware(seg_in, hot_df_threshold,
-                                     salt_buckets,
-                                     n_postings_hint=hint), stats
+        hint += dbigram_distance * stats["total_tokens"]
+    if hot_df is not None:
+        return build_segments_skew_aware(scored, hot_df, salt_buckets,
+                                         n_postings_hint=hint,
+                                         pairs=pairs), stats
+    seg_in = scored if pairs is None else pair_segment_input(scored, pairs)
+    return build_segments(seg_in, n_postings_hint=hint), stats

@@ -12,7 +12,11 @@ the north rule asks for: each phase writes Parquet + a JSON manifest with
 
 A phase whose manifest + ``_SUCCESS`` marker exist is skipped and its
 output read back — kill the build anywhere, re-run, and only unfinished
-phases execute (tested in tests/test_resume.py, byte-identical results).
+phases execute (tested in tests/test_corpus_resume.py, byte-identical
+results).
+
+The phases themselves are ``build.build_index``'s: a ``Checkpointer``
+passed as its ``checkpoint`` is the build's persistence policy.
 """
 
 from __future__ import annotations
@@ -120,91 +124,36 @@ def build_index_resumable(docs: DataFrame, root: str,
                           salt_buckets: int = 0,
                           n_store_buckets: int = 64,
                           stopwords=None):
-    """Checkpointed end-to-end build: postings → scored [→ pairs] → segments.
+    """Checkpointed end-to-end build → (segments, stats, checkpointer).
 
-    Each phase is an idempotent Parquet output; re-running after a crash
-    executes only missing phases. The segments phase writes the
-    term-bucketed store layout (segmentstore.py). Pairs come from the
-    doc-local scoring pass (build.build_pair_postings — the pair table is
-    born scored and checkpoints WITHOUT ever being joined), so a crash
-    during the giant pair phase resumes from the scored unigrams.
-    ``id_col`` defaults to ``doc_id`` if present, else the first column —
-    same detection as the CLI build paths."""
-    from .build import build_pair_postings, build_postings, build_segments, \
-        global_stats, pair_segment_input, score_postings
-    from .sources.segmentstore import bucket_of
+    ``build.build_index`` with a :class:`Checkpointer` at ``root`` as its
+    persistence policy (phases tokens [d-bigram only], postings, stats,
+    scored [, pairs]), plus a ``segments`` phase in the term-bucketed
+    store layout (segmentstore.py). Re-running after a crash executes only
+    missing phases; a crash during the giant pair phase resumes from the
+    scored unigrams and the token checkpoint, without re-tokenizing.
+    ``salt_buckets > 0`` salts every term. ``id_col`` defaults to
+    ``doc_id`` if present, else the first column — same detection as the
+    CLI build."""
     from pyspark.sql import functions as F
+    from .build import build_index, release_build_caches
+    from .sources.segmentstore import bucket_of
 
-    spark = docs.sparkSession
-    cp = Checkpointer(root, spark)
-    text_col = _text_col(docs)
+    cp = Checkpointer(root, docs.sparkSession)
     if id_col is None:
         id_col = "doc_id" if "doc_id" in docs.columns else docs.columns[0]
-    # stopwords participate in phase params: a resume against checkpoints
-    # built with a different stopword set must fail loudly, not silently
-    # reuse postings that were tokenized under the other contract
-    sw_key = (sorted(stopwords)[:8] + [f"n={len(stopwords)}"]) \
-        if stopwords else None
-    stats_df, _ = cp.phase(
-        "stats",
-        lambda: spark.createDataFrame(
-            [tuple(global_stats(docs, text_col, stopwords).values())],
-            "n_docs long, total_tokens long, avgdl long"),
-        params={"stopwords": sw_key})
-    srow = stats_df.collect()[0]
-    stats = {"n_docs": srow["n_docs"], "total_tokens": srow["total_tokens"],
-             "avgdl": srow["avgdl"]}
-    # round-4 stage sizing applies here too: the tokenize pass scales to
-    # ceil(n_docs/512) tasks (n_docs is free from the stats phase; inert
-    # on multi-split inputs — build_postings only repartitions UP)
-    from .build import DOCS_PER_TOKENIZE_TASK
-    tok_parts = min(spark.sparkContext.defaultParallelism,
-                    max(1, -(-stats["n_docs"] // DOCS_PER_TOKENIZE_TASK)))
-    postings, _ = cp.phase(
-        "postings",
-        lambda: build_postings(docs, id_col=id_col, text_col=text_col,
-                               stopwords=stopwords,
-                               input_partitions=tok_parts),
-        params={"id_col": id_col, "stopwords": sw_key})
-    scored, _ = cp.phase(
-        "scored",
-        lambda: score_postings(postings, stats["n_docs"], stats["avgdl"]),
-        inputs=["postings", "stats"])
-    if dbigram_distance:
-        # round-5 sizing: the pair-kernel input is a SMALL join at bench
-        # scale and AQE coalesces it to one task — size it by token
-        # volume like build_index does (cap 4×cores, inert at scale)
-        from .build import TOKENS_PER_PAIR_TASK
-        pair_parts = min(
-            spark.sparkContext.defaultParallelism * 4,
-            max(1, -(-stats["total_tokens"] // TOKENS_PER_PAIR_TASK)))
-        pairs, _ = cp.phase(
-            "pairs",
-            lambda: build_pair_postings(docs, scored, id_col, text_col,
-                                        dbigram_distance,
-                                        stopwords=stopwords,
-                                        num_partitions=pair_parts),
-            inputs=["scored"],
-            params={"dbigram_distance": dbigram_distance,
-                    "stopwords": sw_key})
-        # shared X2 stored format (zigzag(s2) in the tf stream): a resumed
-        # build's segments are byte-identical to build_index's
-        seg_in = pair_segment_input(scored, pairs)
-    else:
-        seg_in = scored
-    hint = stats["total_tokens"] * (dbigram_distance or 0) \
-        + stats["total_tokens"]  # unigram postings <= total tokens
+    text_col = "content" if "content" in docs.columns else "text"
+    encoded, stats = build_index(
+        docs, id_col, text_col, dbigram_distance,
+        hot_df=0 if salt_buckets > 0 else None, salt_buckets=salt_buckets,
+        checkpoint=cp, stopwords=stopwords)
+    release_build_caches(stats)  # nothing is pinned; drops the empty list
     segments, _ = cp.phase(
         "segments",
-        lambda: build_segments(seg_in, salt_buckets=salt_buckets,
-                               n_postings_hint=hint)
-        .withColumn("bucket", bucket_of(F.col("term"), n_store_buckets)),
+        lambda: encoded.withColumn("bucket",
+                                   bucket_of(F.col("term"), n_store_buckets)),
         inputs=["scored", "pairs"] if dbigram_distance else ["scored"],
         params={"salt_buckets": salt_buckets,
                 "n_store_buckets": n_store_buckets},
         partition_by="bucket")
     return segments, stats, cp
-
-
-def _text_col(docs: DataFrame) -> str:
-    return "content" if "content" in docs.columns else "text"

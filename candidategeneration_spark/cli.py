@@ -12,9 +12,9 @@ On a cluster:
 Locally the same commands run against parquet paths on `local[N]`
 (master from SPARK_GRAFT_CPUS / --master). The build writes the
 term-bucketed segment store (partition-pruned reads: a query touches at
-most |query terms| buckets). ``--resume-root DIR`` makes it a resumable
-phase-checkpointed build instead; that path has no skew split, so it
-cannot be combined with ``--hot-df`` (argparse rejects the pair).
+most |query terms| buckets). ``--resume-root DIR`` checkpoints every
+build phase there, so a re-run after a crash skips the finished ones; it
+combines with ``--hot-df`` like any other flag.
 """
 
 from __future__ import annotations
@@ -52,34 +52,22 @@ def cmd_zip(args) -> int:
 
 
 def cmd_build(args) -> int:
-    from .build import (build_index, build_index_skew_aware,
-                        release_build_caches)
+    from .build import build_index, release_build_caches
     from .sources.segmentstore import save_segments
     spark = _spark(args)
     docs = spark.read.parquet(args.corpus)
     id_col = "doc_id" if "doc_id" in docs.columns else docs.columns[0]
     text_col = "content" if "content" in docs.columns else "text"
+    checkpoint = None
     if args.resume_root:
-        from .checkpoints import build_index_resumable
-        segments, stats, _cp = build_index_resumable(
-            docs, args.resume_root, id_col=id_col,
-            dbigram_distance=args.dbigram or None,
-            stopwords=_stopwords(args))
-        save_segments(segments.drop("bucket"), args.out,
-                      n_buckets=args.buckets)
-    elif args.hot_df:
-        # doc-local pair scoring + skew-split encode: the pair table never
-        # joins anything (round-2's scale fix applies to the CLI path too)
-        segments, stats = build_index_skew_aware(
-            docs, args.hot_df, id_col, text_col,
-            dbigram_distance=args.dbigram or None,
-            stopwords=_stopwords(args))
-        save_segments(segments, args.out, n_buckets=args.buckets)
-    else:
-        segments, stats = build_index(docs, id_col, text_col,
-                                      args.dbigram or None,
-                                      stopwords=_stopwords(args))
-        save_segments(segments, args.out, n_buckets=args.buckets)
+        from .checkpoints import Checkpointer
+        checkpoint = Checkpointer(args.resume_root, spark)
+    segments, stats = build_index(docs, id_col, text_col,
+                                  args.dbigram or None,
+                                  hot_df=args.hot_df or None,
+                                  checkpoint=checkpoint,
+                                  stopwords=_stopwords(args))
+    save_segments(segments, args.out, n_buckets=args.buckets)
     # the store write above materialized the segments: the build's pinned
     # intermediates are no longer needed (also pops the non-JSON "cached"
     # handle list from stats before the dump below)
@@ -164,16 +152,12 @@ def main(argv=None) -> int:
     b.add_argument("--dbigram", type=int, default=0,
                    help="d-bigram window distance (0 = unigrams only)")
     b.add_argument("--buckets", type=int, default=64)
-    # the resumable build has no skew split, so the two flags exclude
-    # each other instead of one being ignored
-    mode = b.add_mutually_exclusive_group()
-    mode.add_argument("--hot-df", type=int, default=0, dest="hot_df",
-                      help="df threshold above which terms take the salted "
-                           "skew path (0 = no skew split); not with "
-                           "--resume-root")
-    mode.add_argument("--resume-root", default=None, dest="resume_root",
-                      help="checkpoint dir for resumable phase builds; "
-                           "not with --hot-df")
+    b.add_argument("--hot-df", type=int, default=0, dest="hot_df",
+                   help="df threshold above which terms take the salted "
+                        "skew path (0 = no skew split)")
+    b.add_argument("--resume-root", default=None, dest="resume_root",
+                   help="checkpoint dir: each build phase is written there "
+                        "and a re-run skips the finished ones")
     b.add_argument("--stopwords-web", action="store_true",
                    dest="stopwords_web",
                    help="drop the standard English web stopword list at "

@@ -7,6 +7,8 @@ oracle twin in entrysql.py. Column names/types are aligned on both sides
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .build import (
@@ -26,18 +28,33 @@ from .tokenizer import DBIGRAM_DISTANCE
 # result) and defers its own. Bounds cache-manager growth to one build's
 # worth instead of one per gate — the leak class the round-4 sample_split
 # fix removed, applied to the gate loop itself.
+# The list is owned by the first thread that runs a gate: another
+# thread's gate would release tables this thread's lazy result still
+# reads, so it raises instead.
 _DEFERRED_BUILD_CACHES: list[dict] = []
+_DEFERRED_OWNER: dict[str, int] = {}
+
+
+def _deferred_caches() -> list[dict]:
+    me = threading.get_ident()
+    owner = _DEFERRED_OWNER.setdefault("thread", me)
+    if owner != me:
+        raise RuntimeError(
+            "gate caches are owned by thread %d; gates must run on one "
+            "thread (called from %d)" % (owner, me))
+    return _DEFERRED_BUILD_CACHES
 
 
 def _release_prior_gate_caches() -> None:
-    while _DEFERRED_BUILD_CACHES:
-        release_build_caches(_DEFERRED_BUILD_CACHES.pop())
+    deferred = _deferred_caches()
+    while deferred:
+        release_build_caches(deferred.pop())
 
 
 def _gate_build_index(docs: DataFrame, **kwargs):
     _release_prior_gate_caches()
     segments, stats = build_index(docs, **kwargs)
-    _DEFERRED_BUILD_CACHES.append(stats)
+    _deferred_caches().append(stats)
     return segments
 
 
@@ -45,7 +62,7 @@ def _gate_cache(df: DataFrame) -> DataFrame:
     """Gate-owned ``df.cache()`` with the same deferred release."""
     _release_prior_gate_caches()
     cached = df.cache()
-    _DEFERRED_BUILD_CACHES.append({"cached": [cached]})
+    _deferred_caches().append({"cached": [cached]})
     return cached
 
 

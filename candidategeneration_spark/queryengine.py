@@ -672,9 +672,6 @@ LOOKUP_BLOCK = 128              # cold random access: one block/candidate
 # single-list crossover vs exhaustive (~1 ms at ~22-25k postings with the
 # round-5 uniform-width decode)
 SINGLE_TOPK_MIN = 25_000
-# back-compat aliases (older benches referenced the WAND-era names)
-WAND_MIN_TOTAL = DECOMP_MIN_TOTAL
-WAND_SINGLE_MIN = SINGLE_TOPK_MIN
 
 
 def _lookup_cost(seg, cand_mass: int) -> int:

@@ -88,42 +88,121 @@ def test_resumable_build(spark, corpus, tmp_path):
     assert skipped
 
 
-def test_all_build_paths_identical_segments(spark, corpus, tmp_path):
-    """Every build entry point (build_index, build_index_resumable,
-    build_index_skew_aware) must emit byte-identical segments on a d-bigram
-    build — in particular the X2 stored format (zigzag(s2) in the pair tf
-    stream) must be shared, not re-derived per path."""
-    from candidategeneration_spark.build import build_index_skew_aware
-    base, _ = build_index(corpus, text_col="content", dbigram_distance=3)
-    want = {r["term"]: (bytes(r["did_blob"]), bytes(r["score_blob"]),
+def _blobs(segments):
+    return {r["term"]: (bytes(r["did_blob"]), bytes(r["score_blob"]),
                         bytes(r["tf_blob"]))
-            for r in base.collect()}
+            for r in segments.collect()}
+
+
+def test_all_build_paths_identical_segments(spark, corpus, tmp_path,
+                                            monkeypatch):
+    """Every build mode (build_index plain, with a skew split, with a
+    checkpoint, with both, the resumable wrapper, and a checkpointed
+    skew-split build killed after ``scored`` and resumed) must emit
+    byte-identical segments on a d-bigram build — in particular the X2
+    stored format (zigzag(s2) in the pair tf stream) must be shared, not
+    re-derived per path."""
+    from candidategeneration_spark import build
+    from candidategeneration_spark.checkpoints import Checkpointer
+    base, _ = build_index(corpus, text_col="content", dbigram_distance=3)
+    want = _blobs(base)
 
     seg_r, _, _ = build_index_resumable(
         corpus, str(tmp_path / "xp"), dbigram_distance=3)
-    got_r = {r["term"]: (bytes(r["did_blob"]), bytes(r["score_blob"]),
-                         bytes(r["tf_blob"]))
-             for r in seg_r.collect()}
-    assert got_r == want
+    assert _blobs(seg_r) == want
 
     # threshold low enough that hot terms (and hot-candidate pairs) exist
-    seg_s, _ = build_index_skew_aware(
-        corpus, hot_df_threshold=50, text_col="content",
-        dbigram_distance=3, salt_buckets=4)
-    got_s = {r["term"]: (bytes(r["did_blob"]), bytes(r["score_blob"]),
-                         bytes(r["tf_blob"]))
-             for r in seg_s.collect()}
-    assert got_s == want
+    modes = {
+        "hot_df": {"hot_df": 50, "salt_buckets": 4},
+        "checkpoint": {"checkpoint": Checkpointer(str(tmp_path / "c"),
+                                                  spark)},
+        "checkpoint+hot_df": {
+            "checkpoint": Checkpointer(str(tmp_path / "ch"), spark),
+            "hot_df": 50, "salt_buckets": 4},
+    }
+    for mode, kw in modes.items():
+        seg, _ = build_index(corpus, text_col="content",
+                             dbigram_distance=3, **kw)
+        assert _blobs(seg) == want, mode
+
+    # killed after scored: the pair phase dies, the re-run resumes
+    cp = Checkpointer(str(tmp_path / "killed"), spark)
+
+    def killed(*a, **k):
+        raise RuntimeError("killed during pairs")
+    with monkeypatch.context() as m:
+        m.setattr(build, "build_pair_postings_from_tokens", killed)
+        with pytest.raises(RuntimeError, match="killed"):
+            build_index(corpus, text_col="content", dbigram_distance=3,
+                        checkpoint=cp, hot_df=50, salt_buckets=4)
+    assert cp.is_done("scored") and not cp.is_done("pairs")
+    seg, _ = build_index(corpus, text_col="content", dbigram_distance=3,
+                         checkpoint=cp, hot_df=50, salt_buckets=4)
+    assert _blobs(seg) == want
+
+
+def test_checkpointed_dbigram_build_tokenizes_once(spark, corpus, tmp_path,
+                                                   monkeypatch):
+    """A checkpointed d-bigram build tokenizes the corpus once (the
+    ``tokens`` phase) and a resume after ``scored`` not at all: no
+    driver-side tokenizing planner runs, and the pair phase reads the
+    token checkpoint, not the corpus text."""
+    from candidategeneration_spark import build
+    from candidategeneration_spark.checkpoints import Checkpointer
+    calls = []
+    for name in ("tokenize_docs", "build_postings", "build_pair_postings",
+                 "global_stats"):
+        def spy(*a, _orig=getattr(build, name), _name=name, **k):
+            calls.append(_name)
+            return _orig(*a, **k)
+        monkeypatch.setattr(build, name, spy)
+    pair_plans = []
+
+    def pair_spy(*a, _orig=build.build_pair_postings_from_tokens, **k):
+        out = _orig(*a, **k)
+        pair_plans.append((out._jdf.queryExecution().analyzed().toString(),
+                           out.inputFiles()))
+        return out
+    monkeypatch.setattr(build, "build_pair_postings_from_tokens", pair_spy)
+
+    root = str(tmp_path / "once")
+    build_index(corpus, text_col="content", dbigram_distance=3,
+                checkpoint=Checkpointer(root, spark))
+    assert calls == ["tokenize_docs"]
+
+    def reads_checkpoints_only():
+        (plan, files), = pair_plans
+        assert "content" not in plan, plan
+        dirs = {os.path.relpath(f.replace("file:", ""), root).split(os.sep)[0]
+                for f in files}
+        assert dirs == {"tokens", "scored"}, files
+    reads_checkpoints_only()
+
+    shutil.rmtree(os.path.join(root, "pairs"))
+    os.remove(os.path.join(root, "pairs.manifest.json"))
+    calls.clear()
+    pair_plans.clear()
+    cp = Checkpointer(root, spark)
+    build_index(corpus, text_col="content", dbigram_distance=3,
+                checkpoint=cp)
+    assert calls == [] and cp.is_done("pairs")
+    reads_checkpoints_only()
 
 
 def test_resume_param_mismatch_fails_loudly(spark, corpus, tmp_path):
     """Resuming with different params (e.g. a stopword set) must not
-    silently reuse checkpoints tokenized under the other contract."""
-    root = str(tmp_path / "pm")
-    build_index_resumable(corpus, root, dbigram_distance=None)
-    with pytest.raises(ValueError, match="refusing"):
+    silently reuse checkpoints tokenized under the other contract — also
+    for two sets of equal size that share their smallest words."""
+    shared = set("abcdefgh")
+    for i, (first, second) in enumerate([
+            (None, frozenset({"def", "class"})),
+            (frozenset(shared | {"x"}), frozenset(shared | {"y"}))]):
+        root = str(tmp_path / f"pm{i}")
         build_index_resumable(corpus, root, dbigram_distance=None,
-                              stopwords=frozenset({"def", "class"}))
+                              stopwords=first)
+        with pytest.raises(ValueError, match="refusing"):
+            build_index_resumable(corpus, root, dbigram_distance=None,
+                                  stopwords=second)
 
 
 def test_segment_store_pruning(spark, corpus, tmp_path):

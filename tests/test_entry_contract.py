@@ -100,3 +100,24 @@ def test_rotation_tail_policy():
         assert greens >= 3, (
             f"tail gate {gate!r} has only {greens} green driver rounds; "
             "gates need >=3 before rotating past the 50-entry window")
+
+
+def test_gate_cache_refuses_a_second_thread(spark):
+    """The deferred gate-cache list belongs to the thread that runs the
+    gates: a gate on another thread would release tables the owner's
+    lazy result still reads, so it must raise instead."""
+    import threading
+    from candidategeneration_spark import entries
+    entries._gate_cache(spark.range(3))  # this thread owns the list
+    raised = []
+
+    def other():
+        try:
+            entries._gate_cache(spark.range(3))
+        except RuntimeError as e:
+            raised.append(e)
+    t = threading.Thread(target=other)
+    t.start()
+    t.join()
+    assert raised and "owned by thread" in str(raised[0])
+    entries._release_prior_gate_caches()

@@ -214,15 +214,14 @@ def test_bucketed_join_avoids_shuffle(spark, tmp_path):
 
 
 def test_hot_pair_routing_broadcast_not_in_literal(spark, docs_sf001):
-    """Skew-aware hot/cold pair routing (build_index_skew_aware): the
+    """Skew-aware hot/cold pair routing (build_index with hot_df): the
     hot-term set must reach the pair table as a BROADCAST left join, not
     a collected In-literal (which at 100 TB with a low threshold compiles
     a giant predicate into every task). Forced-low threshold so hot terms
     and hot-candidate pairs actually exist; the pair table itself must
     never shuffle for the routing join."""
-    from candidategeneration_spark.build import build_index_skew_aware
-    seg, stats = build_index_skew_aware(docs_sf001, hot_df_threshold=5,
-                                        dbigram_distance=2)
+    from candidategeneration_spark.build import build_index
+    seg, stats = build_index(docs_sf001, dbigram_distance=2, hot_df=5)
     plan = plans.explain_str(seg, "simple")
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
