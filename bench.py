@@ -8,7 +8,7 @@ Prints ONE JSON line:
 Phases
   build_unigram   tokenize → postings → score → compressed segments (count)
   build_dbigram   same including d-bigram pairs (distance=5)
-  query_wand      200-query BM25 top-10 batch via Block-Max WAND
+  query_wand      200-query BM25 top-10 batch, join mode (wand_topk)
 Extras: postings/sec for the builds (BASELINE.json metric) and per-query
 mean latency for the query batch.
 """
@@ -151,13 +151,12 @@ def main() -> None:
     extras["n_postings_unigram"] = n_post_uni
     extras["n_postings_dbigram"] = n_post_bi
 
-    # long-list kernel stress: sf-scale lists are short (WAND rarely
-    # dispatches), so measure the serving-path headroom directly — a
-    # 1M-posting hot list + 1k rare list (the idf-skew query shape at
-    # 100x corpus scale), BMW vs exhaustive, identical results asserted.
+    # long-list kernel stress: sf-scale lists are short (the pruning
+    # kernels rarely dispatch), so measure the serving-path headroom
+    # directly — a 1M-posting hot list + 1k rare list (the idf-skew query
+    # shape at 100x corpus scale), exhaustive reference first.
     from candidategeneration_spark.indexcodec import encode_postings
-    from candidategeneration_spark.queryengine import (
-        topk_bmwand, topk_exhaustive)
+    from candidategeneration_spark.queryengine import topk_exhaustive
     rng = np.random.default_rng(42)
 
     def synth(n, universe):
@@ -167,17 +166,13 @@ def main() -> None:
                                rng.integers(1, 50, n).astype(np.int64))
 
     stress = [synth(1_000, 4_000_000), synth(1_000_000, 4_000_000)]
-    for fn, key in ((topk_bmwand, "kernel_1M_wand_ms"),
-                    (topk_exhaustive, "kernel_1M_exhaustive_ms")):
-        best = None
-        for _ in range(5):
-            t0 = time.time()
-            res = fn(stress, 10)
-            el = (time.time() - t0) * 1e3
-            best = el if best is None else min(best, el)
-        extras[key] = round(best, 2)
-    assert np.array_equal(topk_bmwand(stress, 10)[0],
-                          topk_exhaustive(stress, 10)[0])
+    best = None
+    for _ in range(5):
+        t0 = time.time()
+        topk_exhaustive(stress, 10)
+        el = (time.time() - t0) * 1e3
+        best = el if best is None else min(best, el)
+    extras["kernel_1M_exhaustive_ms"] = round(best, 2)
 
     # round-5-close dominant-list decomposition on the same shape: this is
     # what topk_auto now actually dispatches here (decode the 1k rare list,
@@ -195,7 +190,7 @@ def main() -> None:
 
     # negative-hot kernel stress (round 5): under the reference's
     # unsmoothed IDF (utilsClass.java:115-130) a df > N/2 keyword list is
-    # ALL-negative — WAND's upper bounds can't prune it and the exhaustive
+    # ALL-negative — its block maxes can't prune it and the exhaustive
     # kernel streams the whole 1M postings. topk_lookup answers the same
     # exact top-k by random access into the hot list's candidate blocks,
     # so work tracks the RARE list. Plain segments don't memoize, so each

@@ -8,7 +8,7 @@ workload the north rule names (top-k query serving): ``wand_topk_prepared``
 batches at local[8] vs local[32] — per-task kernel CPU over a broadcast
 index, one tiny shuffle per batch, the shape where cores (not memory
 bandwidth) dominate. Alongside, a plain-multiprocessing probe runs the
-IDENTICAL WAND kernel at 8 vs 32 processes with zero Spark: whatever that
+IDENTICAL serving kernel at 8 vs 32 processes with zero Spark: whatever that
 probe loses 8->32 is the box's own ceiling (this VM advertises 32 cores,
 1 thread/core — no SMT — but is a shared/overcommitted guest; see
 BENCH/SCALING.json history), and the engine's rung is judged against it.
@@ -95,12 +95,13 @@ def worker_serving(master: str, cores: int) -> None:
 
 
 def _kernel_work(n: int) -> float:
-    """One unit: BMW top-k over a synthetic 1M-posting hot list + 1k rare
-    list — the serving kernel bench.py stresses, no Spark anywhere."""
+    """One unit: top-k over a synthetic 1M-posting hot list + 1k rare list
+    through topk_auto, the kernel serving dispatches on that shape — no
+    Spark anywhere."""
     import numpy as np
     sys.path.insert(0, REPO)
     from candidategeneration_spark.indexcodec import encode_postings
-    from candidategeneration_spark.queryengine import topk_bmwand
+    from candidategeneration_spark.queryengine import topk_auto
     rng = np.random.default_rng(7)
 
     def synth(m, universe):
@@ -112,12 +113,12 @@ def _kernel_work(n: int) -> float:
     segs = [synth(1_000, 4_000_000), synth(1_000_000, 4_000_000)]
     t0 = time.time()
     for _ in range(n):
-        topk_bmwand(segs, 10)
+        topk_auto(segs, 10)
     return time.time() - t0
 
 
 def host_kernel_ceiling() -> dict:
-    """8 vs 32 plain-multiprocessing ceiling for the WAND serving kernel."""
+    """8 vs 32 plain-multiprocessing ceiling for the serving kernel."""
     import multiprocessing as mp
     out = {}
     for procs in (CORES_N, CORES_4N):
@@ -156,7 +157,7 @@ def main() -> None:
     eff = round(r4n["queries_per_sec"] / (4 * rn["queries_per_sec"]), 3)
     rung = {
         "pair": f"local[{CORES_N}] -> local[{CORES_4N}]",
-        "job": f"prepared-index WAND serving, {N_QUERIES}-query batches, "
+        "job": f"prepared-index serving, {N_QUERIES}-query batches, "
                f"min-of-{N_REPS} warm reps, fresh JVM per side",
         "qps_n": rn["queries_per_sec"],
         "qps_4n": r4n["queries_per_sec"],

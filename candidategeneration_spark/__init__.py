@@ -6,7 +6,7 @@ builder + C++ online query engine; see SURVEY.md).
 This is NOT a port: the reference's hand-rolled buffers, external sorts and
 k-way merges are replaced wholesale by the Spark shuffle; its byte-level
 forward index by Parquet; its 4 OS threads by DataFrame partitioning. The
-custom work lives in vectorized NumPy kernels (codec, BM25, WAND), a salted
+custom work lives in vectorized NumPy kernels (codec, BM25, top-k), a salted
 two-stage aggregation for skew, and a thin resumability manifest layer.
 
 Modules
@@ -15,7 +15,7 @@ indexcodec   delta + variable-byte codec and block-max block structure
 tokenizer    tokenization contract (built-in-function path + Arrow UDF path)
 bm25         exact reference BM25 arithmetic (quantized int scores)
 build        postings / stats / segment build pipeline (skew-aware)
-queryengine  exhaustive DAAT + block-max WAND "flash fetch" top-k
+queryengine  exact "flash fetch" top-k: block-max-pruned kernels, one loop
 oracle       brute-force pure-Python oracle for rank-identity tests
 textops      dedup family (exact/minhash/simhash/jaccard), lang-id, quality
 annops       embedding similarity search (brute-force + LSH)

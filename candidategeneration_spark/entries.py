@@ -187,7 +187,7 @@ def _query_df(spark: SparkSession) -> DataFrame:
 def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     segments = _gate_build_index(load_docs(spark, sf_dir),
                                  dbigram_distance=None)
-    res = wand_topk(segments, _query_df(spark), k=TOPK, use_wand=True)
+    res = wand_topk(segments, _query_df(spark), k=TOPK)
     return res.select("qid", F.col("rank").cast("long").alias("rank"),
                       "doc_id", "score_q")
 
@@ -199,7 +199,7 @@ def q_warc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents table (doc_id % WARC_DOC_MOD == 0) is HTML-escaped, wrapped
     in pages with script/style/comment bait, framed into two .warc.gz
     shards, re-ingested with read_warc → html_to_text, indexed, and
-    queried with Block-Max WAND. The escape makes the wrap token-exact
+    queried with the exact top-k engine. The escape makes the wrap token-exact
     (see entrysql.WARC_DOC_MOD note), so the oracle is plain BM25 SQL
     over the same slice — and any bait leaking through the tag/entity
     stripping shows up as a hash mismatch."""
@@ -248,7 +248,7 @@ def q_warc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
          .alias("doc_id"),
         "text")
     segments = _gate_build_index(docs, dbigram_distance=None)
-    res = wand_topk(segments, _query_df(spark), k=TOPK, use_wand=True)
+    res = wand_topk(segments, _query_df(spark), k=TOPK)
     return res.select("qid", F.col("rank").cast("long").alias("rank"),
                       "doc_id", "score_q")
 
@@ -413,7 +413,7 @@ def q_bm25_topk_pairs(spark, sf_dir):
     """Augmented d-bigram query model (reference Metadata.java:236-262 +
     pair top layers): each query expands to its term 2-combinations, docs
     score by the SUM of pair scores (s1+s2 per pair present), exact top-k
-    over the pair segment index via the same WAND kernel (pair keys are
+    over the pair segment index via the same top-k engine (pair keys are
     just terms to the engine)."""
     from itertools import combinations
     segments = _gate_build_index(load_docs(spark, sf_dir),
@@ -424,7 +424,7 @@ def q_bm25_topk_pairs(spark, sf_dir):
         keys = [a + PAIR_SEP + b for a, b in combinations(uniq, 2)]
         rows.append((qid, keys))
     qdf = spark.createDataFrame(rows, "qid long, terms array<string>")
-    res = wand_topk(segments, qdf, k=TOPK, use_wand=True)
+    res = wand_topk(segments, qdf, k=TOPK)
     return res.select("qid", F.col("rank").cast("long").alias("rank"),
                       "doc_id", "score_q")
 

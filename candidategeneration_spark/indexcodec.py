@@ -17,7 +17,7 @@ own byte conventions:
 - d-gap: strictly-increasing docIDs stored as ``first, gap, gap, ...``.
 - blocks: fixed ``BLOCK_SIZE`` postings per block; per block we keep the last
   docID (skip pointer — the nextGEQ analogue) and the max quantized BM25
-  contribution (block-max metadata for WAND pruning — the "predictive skip
+  contribution (block-max metadata for top-k pruning — the "predictive skip
   structure" of the north star).
 
 Scores are stored pre-quantized (``int64``) exactly like the reference stores
@@ -430,12 +430,6 @@ class Segment:
         dids, scores = self.decode_ds()
         tfs = vbyte_decode(self.tf_blob).astype(np.int64)
         return dids, scores, tfs
-
-    def first_block_geq(self, did: int) -> int:
-        """Index of the first block whose last docID is >= did (nextGEQ skip;
-        ``searchsorted`` over skip pointers replaces the reference's external
-        nextGEQ machinery, SURVEY.md §2.3 J6)."""
-        return int(np.searchsorted(self.block_last, did, side="left"))
 
 
 def encode_postings(doc_ids: np.ndarray, scores: np.ndarray,

@@ -3,7 +3,7 @@ reference engine for rank-identity tests (SURVEY.md §5 item 2).
 
 Independent of every Spark code path: tokenizes with the scalar tokenizer,
 scores with the scalar BM25, ranks with plain ``sorted``. If the Spark
-exhaustive path, the Block-Max WAND path and this oracle all agree, the
+exhaustive kernel, the auto-dispatched kernels and this oracle all agree, the
 engine is rank-identical by construction.
 """
 

@@ -117,22 +117,41 @@ def test_df_and_block_invariants(built, oracle):
             off += 1
 
 
+def _by_qid(rows) -> dict[int, list]:
+    got: dict[int, list] = {}
+    for r in sorted(rows, key=lambda r: (r["qid"], r["rank"])):
+        got.setdefault(r["qid"], []).append((r["doc_id"], r["score_q"]))
+    return got
+
+
 def test_topk_rank_identity(spark, built, oracle):
-    """Engine (WAND + exhaustive) == oracle, rank for rank, score for score."""
+    """Engine == oracle, rank for rank, score for score."""
     segs, _ = built
     qdf = spark.createDataFrame(
         [(qid, terms) for qid, terms in QUERIES],
         "qid long, terms array<string>")
-    for use_wand in (True, False):
-        res = Q.wand_topk(segs, qdf, k=10, use_wand=use_wand) \
-               .orderBy("qid", "rank").collect()
-        got: dict[int, list] = {}
-        for r in res:
-            got.setdefault(r["qid"], []).append((r["doc_id"], r["score_q"]))
-        for qid, terms in QUERIES:
-            expect = oracle.topk(terms, k=10)
-            assert got.get(qid, []) == expect, \
-                f"qid={qid} wand={use_wand}: {got.get(qid)} != {expect}"
+    got = _by_qid(Q.wand_topk(segs, qdf, k=10).collect())
+    for qid, terms in QUERIES:
+        expect = oracle.topk(terms, k=10)
+        assert got.get(qid, []) == expect, \
+            f"qid={qid}: {got.get(qid)} != {expect}"
+
+
+def test_k_below_one_rejected_on_driver(spark, built):
+    """k < 1 raises ValueError at the call, before any Spark job runs
+    (the kernels' np.partition would otherwise fail inside a task)."""
+    segs, _ = built
+    qdf = spark.createDataFrame([(0, ["fast", "key"])],
+                                "qid long, terms array<string>")
+    prep = Q.prepare_index(segs, ["fast", "key"])
+    tracker = spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup(None) or [])
+    for call in (lambda: Q.wand_topk(segs, qdf, k=0),
+                 lambda: Q.wand_topk(segs, qdf, k=0, mode="broadcast"),
+                 lambda: Q.wand_topk_prepared(prep, qdf, k=0)):
+        with pytest.raises(ValueError, match="k must be >= 1"):
+            call()
+    assert len(tracker.getJobIdsForGroup(None) or []) == before
 
 
 def test_fast_build_identical_to_classic(spark, docs_sf001):
@@ -161,17 +180,31 @@ def test_fast_build_identical_to_classic(spark, docs_sf001):
             assert bytes(classic[t][f]) == bytes(fast[t][f]), (t, f)
 
 
-def test_broadcast_mode_matches_join_mode(spark, built, oracle):
-    """Both physical query strategies must return identical results."""
+@pytest.mark.parametrize("max_records", [None, 1],
+                         ids=["batch_default", "batch_1"])
+def test_broadcast_mode_matches_join_mode(spark, built, oracle, max_records):
+    """Both physical query strategies must return identical results, also
+    when every joined row is its own Arrow batch (``maxRecordsPerBatch`` 1):
+    then each multi-term query's rows straddle a batch edge in join mode."""
     segs, _ = built
     qdf = spark.createDataFrame(
         [(qid, terms) for qid, terms in QUERIES],
         "qid long, terms array<string>")
-    a = sorted(map(tuple, Q.wand_topk(segs, qdf, k=10, mode="join")
-                   .collect()))
-    b = sorted(map(tuple, Q.wand_topk(segs, qdf, k=10, mode="broadcast")
-                   .collect()))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, None)
+    try:
+        if max_records is not None:
+            spark.conf.set(key, str(max_records))
+        a = _by_qid(Q.wand_topk(segs, qdf, k=10, mode="join").collect())
+        b = _by_qid(Q.wand_topk(segs, qdf, k=10, mode="broadcast").collect())
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
     assert a == b and len(a) > 0
+    for qid, terms in QUERIES:
+        assert a.get(qid, []) == oracle.topk(terms, k=10), qid
 
 
 def test_salted_build_identical(spark, docs_sf001, built):

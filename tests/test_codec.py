@@ -75,15 +75,6 @@ def test_random_block_access_matches_full_decode():
     # decode blocks in reverse order — independence of block decode
     got = [seg.decode_block(i)[0] for i in range(seg.n_blocks - 1, -1, -1)]
     assert np.array_equal(np.concatenate(got[::-1]), full_d)
-    # nextGEQ block location
-    for probe in [int(dids[0]), int(dids[n // 2]), int(dids[-1]), 10**9]:
-        bi = seg.first_block_geq(probe)
-        if probe > dids[-1]:
-            assert bi == seg.n_blocks
-        else:
-            assert seg.block_last[bi] >= probe
-            if bi > 0:
-                assert seg.block_last[bi - 1] < probe
 
 
 def test_zigzag_roundtrip_negative_scores():
@@ -199,44 +190,6 @@ def test_vbyte_uniform_width_fast_path():
     # total size divisible by the first width but misaligned groups
     v = np.array([300, 5, 300, 300, 5, 300], dtype=np.uint64)  # 2+1 bytes
     assert np.array_equal(ic.vbyte_decode(ic.vbyte_encode(v)), v)
-
-
-def test_bmwand_multi_block_skip_differential():
-    """Round-5 vectorized multi-block skip: BMW must stay exactly equal to
-    the exhaustive kernel on adversarial shapes — negative block maxes
-    (unsmoothed IDF), extreme df skew (the shape that exercises long
-    metadata-only skips), ties, and single-list threshold priming."""
-    from candidategeneration_spark.queryengine import (
-        topk_bmwand, topk_exhaustive)
-
-    def synth(r, n, universe, lo, hi):
-        dids = np.sort(r.choice(universe, n, replace=False)).astype(np.int64)
-        scores = r.integers(lo, hi, n).astype(np.int64)
-        return ic.encode_postings(
-            dids, scores, r.integers(1, 50, n).astype(np.int64))
-
-    for trial in range(120):
-        r = np.random.default_rng(trial)
-        nlists = int(r.integers(1, 5))
-        universe = int(r.integers(50, 20_000))
-        segs = []
-        for _ in range(nlists):
-            n = int(r.integers(1, min(universe, int(r.integers(2, 5000)))))
-            lo = int(r.choice([-1000, -10, 1]))
-            hi = max(int(r.choice([5, 100, 100_000])), lo + 10)
-            segs.append(synth(r, n, universe, lo, hi))
-        for k in (1, 3, 10):
-            a = topk_bmwand(segs, k)
-            b = topk_exhaustive(segs, k)
-            assert np.array_equal(a[0], b[0]), (trial, k)
-            assert np.array_equal(a[1], b[1]), (trial, k)
-    # the skewed 1-rare + 1-hot shape: long vectorized skips + priming
-    r = np.random.default_rng(999)
-    skew = [synth(r, 50, 400_000, 1, 1_000_000),
-            synth(r, 100_000, 400_000, 1, 1_000_000)]
-    a = topk_bmwand(skew, 10)
-    b = topk_exhaustive(skew, 10)
-    assert np.array_equal(a[0], b[0]) and np.array_equal(a[1], b[1])
 
 
 def test_vbyte_large_buffer_width_composition_path():
@@ -438,13 +391,13 @@ def test_single_and_decompose_kernels_differential():
 
 
 def test_topk_auto_dispatch_decisions():
-    """Pins the round-5-close cost model: block-at-a-time WAND is out of
-    both auto slots. Single lists >= SINGLE_TOPK_MIN go to the batched
-    topk_single; multi-list shapes go to topk_decompose whenever the
-    non-dominant mass plus its ~128-posting/candidate cold lookups is
-    under half the total stream; the negative-hot selective-lookup
-    kernel keeps FIRST claim on its shape (it random-accesses every
-    negative list where decompose fully decodes all but the largest).
+    """Pins the round-5-close cost model. Single lists >= SINGLE_TOPK_MIN
+    go to the batched topk_single; multi-list shapes go to topk_decompose
+    whenever the non-dominant mass plus its ~128-posting/candidate cold
+    lookups is under half the total stream; the negative-hot
+    selective-lookup kernel keeps FIRST claim on its shape (it
+    random-accesses every negative list where decompose fully decodes
+    all but the largest).
     Decision-level test (monkeypatched kernel recorders) — timing lives
     in /tmp benches; exactness of whatever is picked is covered by the
     differential tests above."""
@@ -468,8 +421,7 @@ def test_topk_auto_dispatch_decisions():
         ([_synth_seg(r, 20_000, 80_000, 1, 1_000_000)], "exh"),
         # (40 + 40*128)*2 = 10,320 < 200,040 -> decompose
         ([_synth_seg(r, 40, 800_000, 1, 1_000_000), hot], "decomp"),
-        # (200 + 200*128)*2 = 51,600 < 200,200 -> decompose (the old
-        # WAND pivot-ratio gate refused this exact shape)
+        # (200 + 200*128)*2 = 51,600 < 200,200 -> decompose
         ([_synth_seg(r, 200, 800_000, 1, 1_000_000), hot], "decomp"),
         # small mass 2000: lookups cap at df -> (2000+200,000)*2 exceeds
         # the 202,000 stream -> exhaustive

@@ -1,6 +1,6 @@
 """Randomized END-TO-END differential fuzz: random mini-corpora through
-the full Spark build (tokenize → postings → segments) and every query
-path (WAND, exhaustive/auto, prepared serving) against the pure-Python
+the full Spark build (tokenize → postings → segments) and both query
+feeders (join mode, prepared serving) against the pure-Python
 ``OracleIndex`` — the corpus-level complement of the kernel-level fuzz in
 test_codec.py / test_fuzz_extended.py.
 
@@ -85,15 +85,11 @@ def test_random_corpus_rank_identity(spark, trial):
     qdf = spark.createDataFrame(queries, "qid long, terms array<string>")
     k = int(r.choice([1, 3, 10, 200]))                  # 200 > any corpus
     expect = {qid: oracle.topk(terms, k=k) for qid, terms in queries}
-    for use_wand in (True, False):
-        got = {}
-        for row in Q.wand_topk(segs, qdf, k=k, use_wand=use_wand) \
-                    .orderBy("qid", "rank").collect():
-            got.setdefault(row["qid"], []).append(
-                (row["doc_id"], row["score_q"]))
-        for qid, terms in queries:
-            assert got.get(qid, []) == expect[qid], \
-                (trial, qid, terms, use_wand)
+    got = {}
+    for row in Q.wand_topk(segs, qdf, k=k).orderBy("qid", "rank").collect():
+        got.setdefault(row["qid"], []).append((row["doc_id"], row["score_q"]))
+    for qid, terms in queries:
+        assert got.get(qid, []) == expect[qid], (trial, qid, terms, "join")
     # prepared serving path (broadcast PreparedIndex + _CachingSegment)
     all_terms = sorted({t for _, ts in queries for t in ts})
     prep = Q.prepare_index(segs, all_terms)
