@@ -1,9 +1,11 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` — flagship: build the d-bigram block-max inverted index on
-the sf0.001 documents table and answer the fixed BM25 query set with
-Block-Max WAND. ``queries()``/``oracle_sql()`` — one entry per implemented
-operator family (SURVEY.md §2), each checked against a DuckDB oracle.
+the sf0.001 documents table and answer the fixed BM25 query set with the
+exact top-k engine (``queryengine.topk_auto``, a cost-based choice among
+block-max-pruned kernels). ``queries()``/``oracle_sql()`` — one entry per
+implemented operator family (SURVEY.md §2), each checked against a DuckDB
+oracle.
 """
 
 from __future__ import annotations
@@ -62,7 +64,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "postings_dbigram": entries.q_postings_dbigram,
         # separate pair component streams (X2)
         "pair_streams": entries.q_pair_streams,
-        # full engine: segments + Block-Max WAND top-k (O6, X1-X10, J6)
+        # full engine: segments + exact top-k, topk_auto (O6, X1-X10, J6)
         "bm25_topk": entries.q_bm25_topk,
         # compressed segment build invariants (C1/C2, O1-O5, S8)
         "segment_stats": entries.q_segment_stats,

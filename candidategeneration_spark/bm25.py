@@ -41,6 +41,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType
 
 K1 = 1.6
 B = 0.75
@@ -72,18 +74,21 @@ def idf_np(df, n_docs: int) -> np.ndarray:
     return vals[inv]
 
 
+@pandas_udf(DoubleType())
+def _idf_udf(df: pd.Series, n_docs: pd.Series) -> pd.Series:
+    # one UDF object for every call: n_docs arrives as a literal column,
+    # so a build (or a streaming micro-batch with a grown corpus) reuses
+    # it instead of pickling a fresh closure per n_docs
+    n = int(n_docs.iloc[0]) if len(n_docs) else 0
+    return pd.Series(idf_np(df.to_numpy(np.float64), n))
+
+
 def idf_col(df: Column, n_docs: int) -> Column:
     """idf as a Spark Column via an Arrow-batched pandas UDF around
     :func:`idf_np`. Apply it to the small per-TERM df table (vocabulary-
     sized), never per posting — the per-posting score math stays in
     whole-stage codegen; only this tiny projection leaves the JVM."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _idf(s: pd.Series) -> pd.Series:
-        return pd.Series(idf_np(s.to_numpy(np.float64), n_docs))
-
-    return _idf(df)
+    return _idf_udf(df, F.lit(n_docs))
 
 
 def bm25_quantized_np(tf, maxtf, df, doc_len, n_docs: int, avgdl: int):
@@ -108,28 +113,28 @@ def bm25_quantized_scalar(tf: int, maxtf: int, df: int, doc_len: int,
     return int(idf * ntf * (K1 + 1.0) / denom * QUANT)
 
 
-def bm25_quantized_col(tf: Column, maxtf: Column, df: Column,
-                       doc_len: Column, n_docs: int, avgdl: int,
-                       idf: Column | None = None) -> Column:
-    """Spark Column version (whole-stage-codegen path). Same arithmetic.
+def bm25_quantized_col(tf: str, maxtf: str, doc_len: str, idf: str,
+                       avgdl: int) -> Column:
+    """Spark Column version over column names (whole-stage-codegen path).
+    Same arithmetic and grouping, as ONE SQL expression: one py4j round
+    trip where a Column-op form pays one per operator.
 
-    Pass ``idf`` precomputed via :func:`idf_col` on the per-term df table —
-    the JVM ``Math.log`` intrinsic is the one op allowed to diverge from
-    glibc by 1 ulp (see module note). The ``idf=None`` fallback keeps the
-    legacy F.log behavior for callers that don't need oracle bit-parity.
+    ``idf`` names a column precomputed via :func:`idf_col` on the per-term
+    df table — the JVM ``Math.log`` intrinsic is the one op allowed to
+    diverge from glibc by 1 ulp (see module note), so there is no
+    in-JVM idf. Every literal carries the ``D`` suffix: an unsuffixed SQL
+    ``0.5`` is a DECIMAL, which would change the arithmetic.
     """
-    ntf = F.lit(0.5) + F.lit(0.5) * tf.cast("double") / maxtf.cast("double")
-    if idf is None:
-        idf = F.log(
-            (F.lit(float(n_docs)) - df.cast("double") + F.lit(0.5))
-            / (df.cast("double") + F.lit(0.5))
-        )
-    denom = ntf + F.lit(K1) * (
-        F.lit(1.0 - B) + F.lit(B) * doc_len.cast("double") / F.lit(float(avgdl))
-    )
-    score = idf * ntf * F.lit(K1 + 1.0) / denom
+    def d(x: float) -> str:
+        return f"{float(x)!r}D"
+
+    ntf = (f"({d(0.5)} + {d(0.5)} * CAST({tf} AS DOUBLE) / "
+           f"CAST({maxtf} AS DOUBLE))")
+    denom = (f"({ntf} + {d(K1)} * ({d(1.0 - B)} + {d(B)} * "
+             f"CAST({doc_len} AS DOUBLE) / {d(avgdl)}))")
     # Spark's double→long cast truncates toward zero, matching int() in Java.
-    return (score * F.lit(QUANT)).cast("long")
+    return F.expr(f"CAST({idf} * {ntf} * {d(K1 + 1.0)} / {denom} * "
+                  f"{d(QUANT)} AS BIGINT)")
 
 
 # SQL fragment for the DuckDB oracle — keep in lockstep with the above.

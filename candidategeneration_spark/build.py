@@ -52,7 +52,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from . import indexcodec
+from . import indexcodec, plans
 from .bm25 import avgdl_floor, bm25_quantized_col, idf_col
 from .tokenizer import DBIGRAM_DISTANCE, tokenize_pandas, tokens_col
 
@@ -68,8 +68,21 @@ PAIR_SEP = "\x1f"  # string analogue of the reference's a<<32|b long packing
 # task, and the encode shuffle fixed at 4×cores partitions regardless of
 # volume, paying ~15 ms of mapInPandas overhead per mostly-EMPTY task at
 # small scale). Both knobs size stages by measured kernel throughput and
-# are inert at 100 TB (inputs arrive with ≥cores partitions; the encode
-# partition count is capped at 4×cores as before):
+# are inert at 100 TB (the encode partition count is capped at 4×cores as
+# before):
+# - tokenize: ⌈n_docs / DOCS_PER_TOKENIZE_TASK⌉ tasks. An input with
+#   fewer partitions is repartitioned up (capped at cores); one with more
+#   is coalesced down (narrow, no shuffle), because each Python task costs
+#   a fixed ~60 ms of task time whatever its data. The down target is
+#   uncapped, so an input whose data warrants more tasks keeps its splits.
+# - score (the per-term df aggregate + idf UDF): its reduce stage would
+#   run at spark.sql.shuffle.partitions — AQE does not coalesce the final
+#   stage of a cached plan — so :func:`score_postings` coalesces it to
+#   ⌈n_postings / HINTED_POSTINGS_PER_ENCODE_TASK⌉ tasks (a df-count row
+#   is lighter than an encode row), only when that is below the shuffle
+#   partition count and the term table may broadcast: a coalesce drops
+#   the hash partitioning that a sort-merge join would reuse, and at
+#   scale the join would then shuffle the term table again.
 DOCS_PER_TOKENIZE_TASK = 512       # ~30 ms of Arrow tokenize+tf per task
 POSTINGS_PER_ENCODE_TASK = 16_384  # ~35 ms of vectorized encode per task
 # Pair-pass kernel parallelism (round 5): the per-doc-map join that feeds
@@ -226,6 +239,32 @@ def _dbigram_frame(doc_ids, toks, unigram_tf: pd.DataFrame,
     return pdf.merge(meta, on="doc_id")
 
 
+def _sized_corpus(docs: DataFrame, id_col: str, text_col: str,
+                  n_tasks: int | None) -> DataFrame:
+    """(doc_id, __text) of the corpus at the tokenize pass's task count.
+
+    ``n_tasks`` is the data-sized target (⌈n_docs / DOCS_PER_TOKENIZE_TASK⌉,
+    uncapped). An input with more partitions is coalesced down to it — a
+    narrow dependency, no shuffle; one with fewer is repartitioned up to
+    ``min(n_tasks, cores)`` — a single-file local corpus otherwise
+    tokenizes on ONE task. A 100 TB input whose data warrants its
+    thousands of splits is left as it is. ``None`` keeps the input's
+    partitioning."""
+    cols = docs.select(F.col(id_col).cast("long").alias("doc_id"),
+                       F.col(text_col).alias("__text"))
+    if n_tasks is None:
+        return cols
+    if n_tasks <= 1:
+        # no partition count needed: coalesce(1) of one partition is a
+        # no-op, and counting an AQE plan's partitions runs its stages
+        return cols.coalesce(1)
+    have = cols.rdd.getNumPartitions()
+    if have > n_tasks:
+        return cols.coalesce(n_tasks)
+    up = min(n_tasks, docs.sparkSession.sparkContext.defaultParallelism)
+    return cols.repartition(up) if have < up else cols
+
+
 def build_postings(docs: DataFrame, id_col: str = "doc_id",
                    text_col: str = "text",
                    dbigram_distance: int | None = None,
@@ -244,19 +283,13 @@ def build_postings(docs: DataFrame, id_col: str = "doc_id",
     (``InvertedIndex.java:291``/``374``; SURVEY §2.2 T6 / §2.3 J2). Default
     None = index everything.
 
-    ``input_partitions``: optional target partition count for the tokenize
-    pass — a single-file local corpus otherwise tokenizes on ONE task. The
-    corpus is repartitioned only UP (never coalesced), so a 100 TB input
-    that already arrives with thousands of splits is untouched.
-    :func:`build_index` derives the target from n_docs.
+    ``input_partitions``: optional data-sized task count for the tokenize
+    pass (:func:`_sized_corpus`). :func:`build_index` derives it from
+    n_docs.
     """
     from .config import ensure_on_executors
     ensure_on_executors(docs.sparkSession)
-    cols = docs.select(F.col(id_col).cast("long").alias("doc_id"),
-                       F.col(text_col).alias("__text"))
-    if input_partitions is not None and input_partitions > 1 \
-            and cols.rdd.getNumPartitions() < input_partitions:
-        cols = cols.repartition(input_partitions)
+    cols = _sized_corpus(docs, id_col, text_col, input_partitions)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -315,15 +348,15 @@ def tokenize_docs(docs: DataFrame, id_col: str = "doc_id",
     RAM: the table is then the build's ``tokens`` Parquet phase.
 
     Empty documents keep a row with empty arrays (token-less docs still
-    count in n_docs, ``InvertedIndex.java:171``).
+    count in n_docs, ``InvertedIndex.java:171``), so the table's row
+    count IS n_docs (:func:`global_stats_from_tokens`).
+
+    ``input_partitions``: optional data-sized task count
+    (:func:`_sized_corpus`).
     """
     from .config import ensure_on_executors
     ensure_on_executors(docs.sparkSession)
-    cols = docs.select(F.col(id_col).cast("long").alias("doc_id"),
-                       F.col(text_col).alias("__text"))
-    if input_partitions is not None and input_partitions > 1 \
-            and cols.rdd.getNumPartitions() < input_partitions:
-        cols = cols.repartition(input_partitions)
+    cols = _sized_corpus(docs, id_col, text_col, input_partitions)
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -361,17 +394,28 @@ def global_stats(docs: DataFrame, text_col: str = "text",
             "avgdl": avgdl_floor(tot, n) if n else 0}
 
 
-def score_postings(postings: DataFrame, n_docs: int, avgdl: int) -> DataFrame:
+def score_postings(postings: DataFrame, n_docs: int, avgdl: int,
+                   n_postings: int | None = None) -> DataFrame:
     """postings + per-term df → + quantized ``score_q`` (int64).
 
-    The df aggregate shuffles the postings' terms on ``term``; its reduce
-    stage (``spark.sql.shuffle.partitions`` tasks) also runs the idf
-    pandas UDF. The per-term table is small, so the planner broadcasts it
-    — at bench scale the plan is a ``BroadcastHashJoin`` and the postings
-    are not shuffled for the join (a table above the broadcast threshold
-    turns it into a sort-merge join that does shuffle them). No exchange
-    is shared with the segment build, whose ``repartition(term)`` is its
-    own shuffle.
+    The df aggregate shuffles the postings' terms on ``term`` (map-side
+    partial counts first); its reduce stage also runs the idf pandas UDF.
+    The per-term table is small, so the planner broadcasts it — at bench
+    scale the plan is a ``BroadcastHashJoin`` and the postings are not
+    shuffled for the join (a table above the broadcast threshold turns it
+    into a sort-merge join that does shuffle them). No exchange is shared
+    with the segment build, whose ``repartition(term)`` is its own
+    shuffle.
+
+    ``n_postings``: optional known row count of ``postings`` (build_index
+    has it from the stats job) that sizes the reduce stage. Without it
+    the stage runs at ``spark.sql.shuffle.partitions`` tasks — AQE does
+    not coalesce the final stage of a cached plan, so a persisted
+    ``scored`` paid that many Python tasks for a vocabulary-sized idf
+    projection. With it the aggregate's output is coalesced to
+    ⌈n_postings / HINTED_POSTINGS_PER_ENCODE_TASK⌉ tasks when that is
+    fewer and the term table may broadcast; otherwise the plan is the
+    unsized one.
 
     UNIGRAMS ONLY. The round-1 pair branch here (join the pair table twice
     against scored unigrams) was the build's biggest scale-killer and is
@@ -391,17 +435,25 @@ def score_postings(postings: DataFrame, n_docs: int, avgdl: int) -> DataFrame:
         "score_postings scores unigrams only; score pair terms "
         "doc-locally with build_pair_postings (the legacy pair-join "
         "path was removed — it shuffled the pair table twice)")
-    term_df = postings.groupBy("term").agg(F.count("*").alias("df")) \
-                      .withColumn("df", F.when(
-                          F.col("term").contains(PAIR_SEP),
-                          F.raise_error(F.lit(guard_msg)).cast("long"))
-                          .otherwise(F.col("df"))) \
-                      .withColumn("__idf", idf_col(F.col("df"), n_docs))
+    term_df = postings.groupBy("term").agg(F.count("*").alias("df"))
+    if n_postings is not None:
+        # the session's resolved SQLConf: its shuffle partition count is
+        # the one the aggregate's exchange uses (AQE's initial count when
+        # set), and the threshold comes back in bytes
+        conf = postings.sparkSession._jsparkSession.sessionState().conf()
+        n_tasks = max(1, -(-n_postings // HINTED_POSTINGS_PER_ENCODE_TASK))
+        if n_tasks < conf.numShufflePartitions() and \
+                conf.autoBroadcastJoinThreshold() > 0:
+            term_df = term_df.coalesce(n_tasks)
+    term_df = term_df.withColumn("df", F.when(
+        F.col("term").contains(PAIR_SEP),
+        F.raise_error(F.lit(guard_msg)).cast("long"))
+        .otherwise(F.col("df"))) \
+        .withColumn("__idf", idf_col(F.col("df"), n_docs))
     return (
         postings.join(term_df, "term")
                 .withColumn("score_q", bm25_quantized_col(
-                    F.col("tf"), F.col("maxtf"), F.col("df"),
-                    F.col("doc_len"), n_docs, avgdl, idf=F.col("__idf")))
+                    "tf", "maxtf", "doc_len", "__idf", avgdl))
                 .drop("__idf")
     )
 
@@ -762,9 +814,11 @@ def global_stats_from_postings(postings: DataFrame, n_docs: int) -> dict:
     """Stats without a second corpus scan: total kept tokens = Σ tf over
     unigram postings (each doc contributes its doc_len exactly once as the
     sum of its per-term tfs) — a pure map-side partial aggregation, NO
-    shuffle. n_docs from the (metadata-only) corpus count. Token-less docs
-    carry no postings but still count in n_docs — same semantics as
-    :func:`global_stats` (reference scans every doc, InvertedIndex.java:171).
+    shuffle. Token-less docs carry no postings, so ``n_docs`` comes from
+    the caller (the unigram build counts the corpus); it counts them —
+    same semantics as :func:`global_stats` (reference scans every doc,
+    InvertedIndex.java:171). The d-bigram build reads all four stats off
+    its token table instead (:func:`global_stats_from_tokens`).
     """
     uni = postings.where(~F.col("term").contains(PAIR_SEP))
     row = uni.agg(F.sum("tf").alias("tot"),
@@ -773,6 +827,21 @@ def global_stats_from_postings(postings: DataFrame, n_docs: int) -> dict:
     return {"n_docs": n_docs, "total_tokens": tot,
             "avgdl": avgdl_floor(tot, n_docs) if n_docs else 0,
             "n_postings": int(row["np"])}
+
+
+def global_stats_from_tokens(tokens_df: DataFrame) -> dict:
+    """:func:`global_stats_from_postings`' dict from the tokenize-once
+    table (:func:`tokenize_docs`) in one map-side aggregate: the table has
+    one row per doc, token-less docs included, so ``count(*)`` is the
+    exact n_docs with no corpus count job; Σ doc_len is the total kept
+    tokens and Σ size(terms) the unigram posting count."""
+    row = tokens_df.agg(F.count("*").alias("n"),
+                        F.sum("doc_len").alias("tot"),
+                        F.sum(F.size("terms")).alias("np")).collect()[0]
+    n, tot = int(row["n"]), int(row["tot"] or 0)
+    return {"n_docs": n, "total_tokens": tot,
+            "avgdl": avgdl_floor(tot, n) if n else 0,
+            "n_postings": int(row["np"] or 0)}
 
 
 # --------------------------------------------------------------------------
@@ -1071,14 +1140,22 @@ def build_index(docs: DataFrame, id_col: str = "doc_id",
 
         tokens    tokenize-once table (d-bigram only, :func:`tokenize_docs`)
         postings  unigram postings (from ``tokens``, else one Arrow pass)
-        stats     n_docs / total tokens / avgdl / n_postings
+        stats     n_docs / total tokens / avgdl / n_postings (d-bigram:
+                  one aggregate over ``tokens``, whose row count is the
+                  exact n_docs; unigram: over the postings, with a
+                  corpus count for n_docs)
         scored    quantized BM25 per unigram posting (df join)
         pairs     pair postings, born scored by the doc-local pass over
                   ``tokens`` (d-bigram only) — the pair table, the
                   largest intermediate, never joins anything
         encode    compressed block-max segments (lazy, returned)
 
-    The corpus text is tokenized exactly once per build.
+    The corpus text is tokenized exactly once per build, and a d-bigram
+    build runs no corpus count job: its tokenize pass is sized from the
+    plan's row-count statistic (:func:`plans.row_count_stat`, counting
+    only when the plan has none). Every Python stage runs at a task count
+    sized from its data (see the stage-sizing notes at the top of this
+    module).
 
     ``hot_df``: skew split — terms (and pairs of two hot terms) with
     df > ``hot_df`` take the two-stage salted encode with
@@ -1105,15 +1182,12 @@ def build_index(docs: DataFrame, id_col: str = "doc_id",
     materialized sub-phases (benchmark instrumentation).
     """
     import time as _time
-    # n_docs via parquet metadata / cheap count — no tokenize; counted
-    # FIRST so it can size the tokenize pass (a single-file local corpus
-    # otherwise runs the Arrow pass on one task)
-    n_docs = docs.count()
     spark = docs.sparkSession
     sc = spark.sparkContext
-    tok_parts = min(sc.defaultParallelism,
-                    max(1, -(-n_docs // DOCS_PER_TOKENIZE_TASK)))
     cached: list = []
+
+    def tok_tasks(n_rows: int) -> int:
+        return max(1, -(-n_rows // DOCS_PER_TOKENIZE_TASK))
 
     def phase(name, builder, keep=True, **kw):
         if checkpoint is not None:
@@ -1129,23 +1203,41 @@ def build_index(docs: DataFrame, id_col: str = "doc_id",
               "stopwords": _stopwords_key(stopwords)}
     tokd = None
     if dbigram_distance:
-        tokd = phase("tokens", lambda: tokenize_docs(
-            docs, id_col, text_col, stopwords=stopwords,
-            input_partitions=tok_parts), params=corpus)
+        # no corpus count job: the token table has one row per doc, so the
+        # stats job counts n_docs exactly; the tokenize pass is sized from
+        # the plan's row-count statistic (zero jobs; possibly an upper
+        # bound, fine for sizing), counting only when the plan has none
+        def tokens():
+            n_rows = plans.row_count_stat(docs)
+            return tokenize_docs(
+                docs, id_col, text_col, stopwords=stopwords,
+                input_partitions=tok_tasks(
+                    docs.count() if n_rows is None else n_rows))
+        tokd = phase("tokens", tokens, params=corpus)
         postings = phase("postings", lambda: build_postings_from_tokens(tokd),
                          inputs=["tokens"], params=corpus)
+
+        def stats_of():
+            return global_stats_from_tokens(tokd)
+        stats_in = ["tokens"]
     else:
+        # unigram postings carry no token-less docs: count the corpus
+        n_docs = docs.count()
         postings = phase("postings", lambda: build_postings(
             docs, id_col, text_col, None, stopwords=stopwords,
-            input_partitions=tok_parts), params=corpus)
+            input_partitions=tok_tasks(n_docs)), params=corpus)
+
+        def stats_of():
+            return global_stats_from_postings(postings, n_docs)
+        stats_in = ["postings"]
     t0 = _time.time()
     if checkpoint is None:
-        stats = global_stats_from_postings(postings, n_docs)
+        stats = stats_of()
     else:
         stats = phase("stats", lambda: spark.createDataFrame(
-            [tuple(global_stats_from_postings(postings, n_docs).values())],
+            [tuple(stats_of().values())],
             "n_docs long, total_tokens long, avgdl long, n_postings long"),
-            inputs=["postings"]).collect()[0].asDict()
+            inputs=stats_in).collect()[0].asDict()
     stats["cached"] = cached
     if phase_times is not None:
         phase_times["tokenize_stats"] = round(_time.time() - t0, 3)
@@ -1157,7 +1249,8 @@ def build_index(docs: DataFrame, id_col: str = "doc_id",
     # scored feeds the per-doc score map AND the segment union on
     # d-bigram builds; a unigram build reads it once
     scored = phase("scored", lambda: score_postings(
-        postings, stats["n_docs"], stats["avgdl"]),
+        postings, stats["n_docs"], stats["avgdl"],
+        n_postings=stats["n_postings"]),
         keep=bool(dbigram_distance), inputs=["postings", "stats"])
     pairs = None
     hint = stats["n_postings"]

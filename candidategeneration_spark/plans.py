@@ -21,6 +21,15 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
         df._jdf.queryExecution(), mode)
 
 
+def row_count_stat(df: DataFrame) -> int | None:
+    """The optimizer's row-count statistic of ``df``'s plan, or None when
+    the plan has none (a parquet scan without catalog stats, a filter).
+    Runs no job. Read it to size partitions only, never as a count: a
+    ``limit`` reports its limit, an upper bound of the rows it returns."""
+    rows = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
+    return int(str(rows.get())) if rows.isDefined() else None
+
+
 def scan_read_schema(plan: str) -> list[str]:
     """Column names in every parquet scan's ReadSchema, flattened."""
     cols: list[str] = []

@@ -6,7 +6,6 @@ import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from pyspark.sql import functions as F
 
 from candidategeneration_spark import bm25
 from candidategeneration_spark.tokenizer import (
@@ -59,9 +58,7 @@ def test_spark_column_matches_scalar(spark):
     sdf = spark.createDataFrame(rows, "tf long, maxtf long, df long, dl long")
     got = sdf.withColumn("idf", bm25.idf_col(sdf.df, n_docs)).select(
         "tf", "maxtf", "df", "dl",
-        bm25.bm25_quantized_col(
-            sdf.tf, sdf.maxtf, sdf.df, sdf.dl, n_docs, avgdl,
-            idf=F.col("idf")).alias("s")
+        bm25.bm25_quantized_col("tf", "maxtf", "dl", "idf", avgdl).alias("s")
     ).collect()
     for r in got:
         assert r["s"] == bm25.bm25_quantized_scalar(

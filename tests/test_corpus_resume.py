@@ -101,11 +101,37 @@ def test_all_build_paths_identical_segments(spark, corpus, tmp_path,
     skew-split build killed after ``scored`` and resumed) must emit
     byte-identical segments on a d-bigram build — in particular the X2
     stored format (zigzag(s2) in the pair tf stream) must be shared, not
-    re-derived per path."""
+    re-derived per path.
+
+    The d-bigram build runs no corpus count job: n_docs comes from the
+    token table, and the tokenize pass is sized from the plan's row-count
+    statistic. Inputs whose statistic is not their row count (a filter
+    has none; a limit reports its limit, 150 for the 133 filtered docs)
+    must still give the oracle's stats and the segments of the build over
+    their materialized rows."""
     from candidategeneration_spark import build
     from candidategeneration_spark.checkpoints import Checkpointer
-    base, _ = build_index(corpus, text_col="content", dbigram_distance=3)
-    want = _blobs(base)
+    from candidategeneration_spark.oracle import OracleIndex
+    corpus.count()  # materialized: the cached plan reports its row count
+    with monkeypatch.context() as m:
+        m.setattr(corpus, "count", lambda: pytest.fail(
+            "build_index counted a corpus whose plan has a row count"))
+        base, _ = build_index(corpus, text_col="content", dbigram_distance=3)
+        want = _blobs(base)
+
+    filtered = corpus.where(F.col("doc_id") % 3 != 0)  # 133 docs
+    for sub in (corpus.limit(150), filtered, filtered.limit(150)):
+        rows = sub.collect()
+        oracle = OracleIndex([(r["doc_id"], r["content"]) for r in rows], 3)
+        seg, stats = build_index(sub, text_col="content", dbigram_distance=3)
+        assert {k: stats[k] for k in
+                ("n_docs", "avgdl", "total_tokens", "n_postings")} == {
+            "n_docs": oracle.n_docs, "avgdl": oracle.avgdl,
+            "total_tokens": oracle.total_tokens,
+            "n_postings": sum(oracle.df.values())}
+        ref, _ = build_index(spark.createDataFrame(rows, corpus.schema),
+                             text_col="content", dbigram_distance=3)
+        assert _blobs(seg) == _blobs(ref)
 
     seg_r, _, _ = build_index_resumable(
         corpus, str(tmp_path / "xp"), dbigram_distance=3)

@@ -230,3 +230,57 @@ def test_hot_pair_routing_broadcast_not_in_literal(spark, docs_sf001):
     assert " IN (" not in plan and "In(term" not in plan, plan
     # and the routed build still answers: smoke one collect
     assert seg.limit(1).count() == 1
+
+
+def test_build_stages_sized_to_data(spark):
+    """The d-bigram build sizes its Python stages from their data. On a
+    200-doc corpus that arrives in 4 partitions the tokenize mapInArrow
+    is coalesced to 1 task, and the df aggregate's reduce stage (which
+    runs the idf UDF) to 1 partition, with the map-side partial counts
+    still ahead of its exchange. At a posting count worth
+    spark.sql.shuffle.partitions tasks or more, or with broadcast joins
+    disabled, the score plan is the unsized one: no Coalesce, no extra
+    exchange (a coalesced term table would be shuffled again for a
+    sort-merge join)."""
+    from candidategeneration_spark.build import (
+        HINTED_POSTINGS_PER_ENCODE_TASK, build_index, build_postings,
+        release_build_caches, score_postings,
+    )
+    from candidategeneration_spark.sources.corpus import generate_corpus
+    docs = generate_corpus(spark, 200, seed=42, partitions=4).cache()
+    assert docs.rdd.getNumPartitions() == 4
+    _, stats = build_index(docs, text_col="content", dbigram_distance=3)
+    tokd, _, scored = stats["cached"]
+    assert tokd.rdd.getNumPartitions() == 1
+    idf_branch = plans.explain_str(scored, "simple").split(
+        "ArrowEvalPython", 1)[1]
+    assert "Coalesce 1" in idf_branch.split("HashAggregate", 1)[0], \
+        idf_branch
+
+    postings = build_postings(docs, text_col="content")  # 4 partitions
+    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
+
+    def plan(n_postings):
+        return plans.explain_str(score_postings(
+            postings, n_docs, avgdl, n_postings=n_postings), "simple")
+
+    sized = plan(stats["n_postings"])
+    order = [sized.index(op) for op in (
+        "Coalesce 1", "functions=[count(1)]", "Exchange hashpartitioning(term",
+        "functions=[partial_count(1)]")]
+    assert order == sorted(order), sized
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    big, unsized = plan(n_parts * HINTED_POSTINGS_PER_ENCODE_TASK), plan(None)
+    assert "Coalesce" not in big and \
+        big.count("Exchange") == unsized.count("Exchange"), big
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        smj, unsized = plan(stats["n_postings"]), plan(None)
+        assert "Coalesce" not in smj and \
+            smj.count("Exchange") == unsized.count("Exchange"), smj
+    finally:
+        spark.conf.set(key, old)
+    release_build_caches(stats)
+    docs.unpersist()
