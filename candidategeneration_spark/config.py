@@ -7,16 +7,24 @@ north-star deployment mode); for interactive / driver-embedded use,
 :func:`ensure_on_executors` builds the same zip on the fly and ships it with
 ``SparkContext.addPyFile`` — idempotent per application.
 
-Importing the package also runs :func:`install_lazy_zip_invalidation` in
-whatever process imports it — on executors, the Python worker that
-unpickles a package UDF — so later tasks in that reused worker skip
-PySpark's per-task re-read of ``pyspark.zip``.
+:func:`install_lazy_zip_invalidation` stops PySpark's worker re-reading
+``pyspark.zip`` at the start of every task. Importing the package runs it
+in whatever process imports it. In a :func:`get_spark` session on a local
+master, Spark forks every Python worker from this package's daemon
+(``_daemon.py``), which has run it, so every worker has it — including
+workers that only run PySpark's own RDD functions, such as a
+``createDataFrame(list)`` scan. Elsewhere — other masters, a
+``spark.python.daemon.module`` the user set, sessions not made by
+:func:`get_spark` — only workers that unpickle a package UDF install it,
+and from that task on.
 """
 
 from __future__ import annotations
 
 import functools
+import hashlib
 import os
+import re
 import sys
 import tempfile
 import zipfile
@@ -26,28 +34,54 @@ from typing import TYPE_CHECKING
 if TYPE_CHECKING:
     from pyspark.sql import SparkSession
 
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+_DAEMON_MODULE = f"{__package__}._daemon"
+_LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
 _ATTACHED: set[str] = set()
 # archive path -> (st_mtime_ns, st_size, st_ino) taken just before
 # install_lazy_zip_invalidation last had its central directory re-read
 _ZIP_STAT: dict[str, tuple[int, int, int] | None] = {}
 
 
-def package_zip(path: str | None = None) -> str:
-    """Write the package as a --py-files-able zip; returns the zip path."""
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    pkg_name = os.path.basename(pkg_dir)
-    if path is None:
-        path = os.path.join(tempfile.gettempdir(),
-                            f"{pkg_name}-pyfiles.zip")
-    tmp = path + ".tmp"
-    with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for f in files:
-                if not f.endswith(".py"):
-                    continue
+def _package_sources() -> list[tuple[str, str]]:
+    """(path on disk, path in the zip) of every ``.py`` file of the
+    package, in a fixed order."""
+    pkg_name = os.path.basename(_PKG_DIR)
+    out = []
+    for root, dirs, files in os.walk(_PKG_DIR):
+        dirs.sort()
+        for f in sorted(files):
+            if f.endswith(".py"):
                 full = os.path.join(root, f)
-                rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
-                zf.write(full, rel)
+                out.append((full, os.path.join(
+                    pkg_name, os.path.relpath(full, _PKG_DIR))))
+    return out
+
+
+def package_zip(path: str | None = None) -> str:
+    """Write the package as a --py-files-able zip; returns the zip path.
+
+    With no ``path`` the zip goes to the temp dir under a name keyed by a
+    hash of the package sources, and an existing zip of that name is
+    reused rather than rewritten: a process writes it at most once, and a
+    worker daemon importing from it (see :func:`get_spark`) never sees a
+    different checkout's code appear under its path."""
+    sources = _package_sources()
+    if path is None:
+        h = hashlib.sha256()
+        for full, rel in sources:
+            h.update(rel.encode() + b"\0")
+            with open(full, "rb") as f:
+                h.update(f.read())
+        path = os.path.join(
+            tempfile.gettempdir(),
+            f"{os.path.basename(_PKG_DIR)}-{h.hexdigest()[:16]}-pyfiles.zip")
+        if os.path.exists(path):
+            return path
+    tmp = f"{path}.{os.getpid()}.tmp"
+    with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
+        for full, rel in sources:
+            zf.write(full, rel)
     os.replace(tmp, path)
     return path
 
@@ -109,11 +143,42 @@ def install_lazy_zip_invalidation() -> bool:
     return True
 
 
+def _daemon_confs(master: str, conf: dict[str, str],
+                  pythonpath: str) -> dict[str, str]:
+    """Confs that make Spark fork its Python workers from ``_daemon``.
+
+    Empty unless ``master`` is ``local`` or ``local[...]`` (the executors
+    share the driver's file system, so they can import from
+    ``pythonpath``), ``conf`` — what the session would otherwise start
+    with — sets no ``spark.python.daemon.module``, and the package is a
+    directory on disk. ``pythonpath`` goes first on the daemon's
+    ``PYTHONPATH``, ahead of any ``spark.executorEnv.PYTHONPATH`` in
+    ``conf``."""
+    if (not _LOCAL_MASTER.fullmatch(master)
+            or "spark.python.daemon.module" in conf
+            or not os.path.isdir(_PKG_DIR)):
+        return {}
+    rest = conf.get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep)
+    paths = [pythonpath] + [p for p in rest if p and p != pythonpath]
+    return {"spark.python.daemon.module": _DAEMON_MODULE,
+            "spark.executorEnv.PYTHONPATH": os.pathsep.join(paths)}
+
+
 def get_spark(master: str | None = None, shuffle_partitions: int | None = None,
               app_name: str = "candidategeneration-spark") -> SparkSession:
     """Opinionated session: AQE on, Arrow on, shuffle partitions sized to
     the parallelism level (≈ cores at local scale; 2-3× executor cores on a
-    real cluster — callers override for 100 TB runs)."""
+    real cluster — callers override for 100 TB runs).
+
+    On a ``local`` / ``local[...]`` master, Spark forks every Python
+    worker from this package's daemon (``_daemon.py``), so every worker
+    skips the per-task ``pyspark.zip`` re-read
+    (:func:`install_lazy_zip_invalidation`), whatever it runs; the daemon
+    imports the package from the same zip :func:`ensure_on_executors`
+    ships. Other masters, and a ``spark.python.daemon.module`` already
+    set in the launch conf (``spark-defaults.conf``,
+    ``PYSPARK_SUBMIT_ARGS``), keep the daemon Spark would use."""
+    from pyspark import SparkConf, SparkContext
     from pyspark.sql import SparkSession
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
@@ -136,24 +201,30 @@ def get_spark(master: str | None = None, shuffle_partitions: int | None = None,
         except (ValueError, OSError):
             total_g = 8
         driver_mem = f"{max(1, min(24, total_g // 2))}g"
-    b = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.driver.memory", driver_mem)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    opts = {
+        "spark.master": master,
+        "spark.app.name": app_name,
+        "spark.driver.memory": driver_mem,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
         # Pin the session timezone: timestamp-rendering functions
         # (date_format, dayofweek) must agree with the DuckDB oracle,
         # which treats parquet timestamp[us] as naive/UTC regardless of
         # the host's /etc/localtime.
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-        .config("spark.ui.enabled", "false")
-    )
-    spark = b.getOrCreate()
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
+        "spark.ui.enabled": "false",
+    }
+    # the launch conf is read through the gateway JVM, started here with
+    # ``opts`` when none runs yet, as getOrCreate would start it
+    SparkContext._ensure_initialized(
+        conf=SparkConf(loadDefaults=False).setAll(opts.items()))
+    opts.update(_daemon_confs(master, dict(SparkConf().getAll()),
+                              package_zip()))
+    spark = SparkSession.builder.config(map=opts).getOrCreate()
     ensure_on_executors(spark)
     return spark

@@ -2,6 +2,7 @@
 
 import gzip
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -280,3 +281,52 @@ def test_term_buckets_jvm_only_and_match_python_rdd_scan(spark):
     empty = S.term_buckets(spark, [], 8)
     assert python_scan_free(empty)
     assert empty.collect() == []
+
+
+def test_store_loads_run_no_job_before_their_action(spark, docs_sf001,
+                                                    tmp_path):
+    """Both store loads are planned with no Spark job (no Parquet schema
+    inference, no bucket lookup) and return the rows of the inferred
+    read; an empty store directory gives no rows."""
+    from pyspark.sql import functions as F
+    from candidategeneration_spark.build import build_index
+    from candidategeneration_spark.sources import segmentstore as S
+
+    segments, _ = build_index(docs_sf001.limit(40), dbigram_distance=None)
+    path = str(tmp_path / "segstore")
+    S.save_segments(segments, path, n_buckets=8)
+    inferred = spark.read.parquet(path)
+    terms = sorted(r["term"] for r in inferred.select("term").limit(5)
+                   .collect()) + ["zzznotaterm"]
+
+    sc = spark.sparkContext
+    group = "store-load-no-job"
+    sc.setJobGroup(group, "store loads, no action")
+    try:
+        full = S.load_segments(spark, path)
+        pruned = S.load_segments_for_terms(spark, path, terms, n_buckets=8)
+        none = S.load_segments_for_terms(spark, path, [], n_buckets=8)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert full.schema == inferred.schema
+    assert rows(full) == rows(inferred)
+    # the folded bucket literals prune partitions like the lookup plan
+    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    folded = re.search(r"PartitionFilters: \[.*?bucket#\d+ IN \(([\d,]+)\)",
+                       plan)
+    assert folded, plan
+    assert {int(b) for b in folded.group(1).split(",")} == \
+        {r["b"] for r in S.term_buckets(spark, terms, 8).collect()}
+    assert rows(pruned) == rows(inferred.where(F.col("term").isin(terms)))
+    assert len(rows(pruned)) == len(terms) - 1
+    assert none.collect() == []
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert S.load_segments(spark, str(empty)).collect() == []

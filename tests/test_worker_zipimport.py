@@ -3,10 +3,14 @@
 - ``config.install_lazy_zip_invalidation``: ``importlib.invalidate_caches()``
   (PySpark calls it at the start of every task) must not re-read an
   unchanged zip archive, and must still re-read one that changed.
-- In a ``local[1]`` application (one task slot, so one reused worker per
-  UDF kind): once a package UDF has run, the next task finds the shim
-  installed, and the second prepared batch is served from the worker's
-  broadcast-segment memo.
+- In a ``local[1]`` application of its own (one task slot, so one reused
+  worker per UDF kind): once a package UDF has run, the next task finds
+  the shim installed, and the second prepared batch is served from the
+  worker's broadcast-segment memo.
+- In a ``config.get_spark`` local application, every Python worker is
+  forked from the package's daemon, so even a task that runs only a
+  PySpark RDD function finds the shim installed; other masters and a
+  user-set daemon module are left alone.
 """
 
 import importlib
@@ -206,3 +210,78 @@ def test_second_prepared_batch_hits_worker_memo(local1):
     assert local1["after_batch2"]["pid"] == local1["fresh"]["pid"]
     assert local1["after_udf"]["hits"] == 0  # batch 1 decoded the broadcast
     assert local1["after_batch2"]["hits"] == 1  # batch 2 reused it
+
+
+DAEMON = "spark.python.daemon.module"
+EXEC_PATH = "spark.executorEnv.PYTHONPATH"
+
+
+def test_daemon_confs_local_masters_only():
+    z = "/pkg/cg-pyfiles.zip"
+    want = {DAEMON: "candidategeneration_spark._daemon", EXEC_PATH: z}
+    for master in ("local", "local[1]", "local[*]", "local[4,2]"):
+        assert config._daemon_confs(master, {}, z) == want, master
+    for master in ("yarn", "spark://host:7077", "k8s://https://host:443",
+                   "local-cluster[2,1,1024]", "mesos://host:5050"):
+        assert config._daemon_confs(master, {}, z) == {}, master
+
+
+def test_daemon_confs_keep_user_settings():
+    z = "/pkg/cg-pyfiles.zip"
+    user = {DAEMON: "my.profiling_daemon", EXEC_PATH: "/a"}
+    assert config._daemon_confs("local[2]", user, z) == {}
+    merged = config._daemon_confs(
+        "local[2]", {EXEC_PATH: os.pathsep.join(["/a", z, "", "/b"])}, z)
+    assert merged[EXEC_PATH] == os.pathsep.join([z, "/a", "/b"])
+
+
+GET_SPARK_DRIVER = """
+import json, os, sys, zipimport
+sys.path.insert(0, %(repo)r)
+from candidategeneration_spark.config import get_spark
+
+spark = get_spark("local[2]")
+spark.sparkContext.setLogLevel("ERROR")
+conf = spark.sparkContext.getConf()
+
+
+def probe(it):
+    # a PySpark RDD function only: nothing here imports the package
+    yield {"shim": hasattr(zipimport.zipimporter.invalidate_caches,
+                           "__wrapped__"),
+           "n": sum(1 for _ in it)}
+
+
+rdd = spark.sparkContext.parallelize(range(4), 4).mapPartitions(probe)
+qdf = spark.createDataFrame([(1, ["a"]), (2, ["b", "c"])],
+                            "qid long, terms array<string>")
+print("GETSPARK " + json.dumps({
+    "daemon": conf.get("spark.python.daemon.module"),
+    "pythonpath": conf.get("spark.executorEnv.PYTHONPATH"),
+    "tasks": rdd.collect(),
+    "scan": sorted(r["qid"] for r in qdf.collect())}))
+spark.stop()
+"""
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13),
+                    reason="CPython >= 3.13 invalidates zips lazily itself")
+def test_get_spark_workers_all_have_shim(tmp_path):
+    """The package is on the driver's sys.path only (not on PYTHONPATH,
+    not in the cwd), so the daemon imports it from the zip put on the
+    executor PYTHONPATH."""
+    script = tmp_path / "driver.py"
+    script.write_text(GET_SPARK_DRIVER % {"repo": REPO})
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run([sys.executable, str(script)], env=env,
+                         cwd=str(tmp_path), capture_output=True, text=True,
+                         timeout=300)
+    lines = [ln for ln in out.stdout.splitlines()
+             if ln.startswith("GETSPARK ")]
+    assert lines, out.stderr[-3000:]
+    got = json.loads(lines[-1][len("GETSPARK "):])
+    assert got["tasks"] == [{"shim": True, "n": 1}] * 4
+    assert got["daemon"] == "candidategeneration_spark._daemon"
+    assert got["pythonpath"].split(os.pathsep)[0].endswith("-pyfiles.zip")
+    assert got["scan"] == [1, 2]
