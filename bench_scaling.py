@@ -62,7 +62,8 @@ def worker_dbigram(master: str, cores: int) -> None:
     unigram count — same wall budget). Build-only: the query path is
     config-independent (pair segments are just terms to the engine)."""
     sys.path.insert(0, REPO)
-    from candidategeneration_spark.build import build_index, build_postings
+    from pyspark.sql import functions as F
+    from candidategeneration_spark.build import build_index
     from candidategeneration_spark.config import get_spark
 
     spark = get_spark(master=master, shuffle_partitions=max(8, cores * 2),
@@ -70,10 +71,9 @@ def worker_dbigram(master: str, cores: int) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     docs = spark.read.parquet(CORPUS_DBI).repartition(cores * 4).cache()
     docs.count()
-    n_postings = build_postings(docs, text_col="content",
-                                dbigram_distance=5).count()
+    # the untimed warm build also counts the postings (Σdf)
     warm, _ = build_index(docs, text_col="content", dbigram_distance=5)
-    warm.write.format("noop").mode("overwrite").save()
+    n_postings = int(warm.agg(F.sum("df")).collect()[0][0])
     reps = []
     for _ in range(N_REPS):
         spark.catalog.clearCache()

@@ -6,15 +6,16 @@ builder + C++ online query engine; see SURVEY.md).
 This is NOT a port: the reference's hand-rolled buffers, external sorts and
 k-way merges are replaced wholesale by the Spark shuffle; its byte-level
 forward index by Parquet; its 4 OS threads by DataFrame partitioning. The
-custom work lives in vectorized NumPy kernels (codec, BM25, top-k), a salted
-two-stage aggregation for skew, and a thin resumability manifest layer.
+custom work lives in vectorized NumPy kernels (codec, BM25, top-k), one
+columnar streaming segment encoder, and a thin resumability manifest
+layer.
 
 Modules
 -------
 indexcodec   delta + variable-byte codec and block-max block structure
 tokenizer    tokenization contract (built-in-function path + Arrow UDF path)
 bm25         exact reference BM25 arithmetic (quantized int scores)
-build        postings / stats / segment build pipeline (skew-aware)
+build        postings / stats / segment build pipeline
 queryengine  exact "flash fetch" top-k: block-max-pruned kernels, one loop
 oracle       brute-force pure-Python oracle for rank-identity tests
 textops      dedup family (exact/minhash/simhash/jaccard), lang-id, quality

@@ -22,18 +22,18 @@ Lifecycle of the d-bigram build (SURVEY.md §3.1):
 The unigram-only build tokenizes with ``mapInPandas`` (tokenize + tf in
 one pass) and fuses df + BM25 into the encoder (:func:`build_segments_fast`).
 
-:func:`build_index` is the one pipeline for every build mode: the skew
-split (``hot_df``) and the persistence policy (in-memory ``persist()``, or
-a :class:`~candidategeneration_spark.checkpoints.Checkpointer` that writes
-each phase and skips finished ones) are its parameters.
+:func:`build_index` is the one pipeline for every build mode: the
+persistence policy (in-memory ``persist()``, or a
+:class:`~candidategeneration_spark.checkpoints.Checkpointer` that writes
+each phase and skips finished ones) is its parameter.
 
-Skew (north rule): hot d-bigrams (e.g. ``def __init__`` at 10^12-file scale)
-overload a single encode task. ``build_segments`` supports a salted
-two-stage aggregation: stage 1 groups on (term, salt=doc_id%S) and emits
-sorted partial runs; stage 2 merges the ≤S runs per term. Because stage-1
-groups are bounded at df/S postings, no single task sees a whole hot list;
-:func:`build_segments_skew_aware` salts only the hot terms. The reference
-has no skew handling at all (fixed 4 shards).
+Skew: every segment row is encoded by the one streaming encoder
+(:func:`_encode_stream`), so one task encodes a term's whole list — a
+hot d-bigram (``def __init__`` at 10^12-file scale) owns its task. The
+encode shuffle spreads terms over up to 4×cores partitions. The
+reference has no skew handling either (fixed 4 shards,
+``InvertedIndex.java:74-84``); bounding one hot list's task would need a
+term split across several segment rows, a store-format change.
 """
 
 from __future__ import annotations
@@ -125,13 +125,6 @@ SEGMENT_SCHEMA = StructType([
     StructField("tf_off", ArrayType(LongType())),
 ])
 
-_RUN_SCHEMA = StructType([
-    StructField("term", StringType()),
-    StructField("doc_ids", ArrayType(LongType())),
-    StructField("scores", ArrayType(LongType())),
-    StructField("tfs", ArrayType(LongType())),
-])
-
 TOKENS_SCHEMA = StructType([
     StructField("doc_id", LongType()),
     StructField("toks", ArrayType(StringType())),
@@ -143,18 +136,16 @@ TOKENS_SCHEMA = StructType([
 
 
 # --------------------------------------------------------------------------
-# Phase 1 — tokenize + per-doc tf (+ optional d-bigram) in one Arrow pass
+# Phase 1 — tokenize + per-doc tf in one Arrow pass
 # --------------------------------------------------------------------------
 
 def _explode_tf(pdf: pd.DataFrame, id_col: str, text_col: str,
-                dbigram_distance: int | None,
                 stopwords=None) -> pd.DataFrame:
     toks = tokenize_pandas(pdf[text_col], stopwords)
-    return _explode_tf_from_toks(pdf[id_col], toks, dbigram_distance)
+    return _explode_tf_from_toks(pdf[id_col], toks)
 
 
-def _explode_tf_from_toks(ids, toks: pd.Series,
-                          dbigram_distance: int | None) -> pd.DataFrame:
+def _explode_tf_from_toks(ids, toks: pd.Series) -> pd.DataFrame:
     """Pre-tokenized twin of :func:`_explode_tf` (the text path's per-doc
     tf kernel; :func:`_tokenize_tf_batch` is its columnar counterpart)."""
     lens = toks.map(len).to_numpy(dtype=np.int64)
@@ -179,64 +170,7 @@ def _explode_tf_from_toks(ids, toks: pd.Series,
     doclen = pd.Series(lens, index=doc_ids, name="doc_len")
     tf = tf.merge(per_doc, left_on="doc_id", right_index=True)
     tf = tf.merge(doclen, left_on="doc_id", right_index=True)
-    if dbigram_distance:
-        pairs = _dbigram_frame(doc_ids, toks, tf, dbigram_distance)
-        tf = pd.concat([tf, pairs], ignore_index=True)
     return tf[["term", "doc_id", "tf", "doc_len", "maxtf"]]
-
-
-def _dbigram_frame(doc_ids, toks, unigram_tf: pd.DataFrame,
-                   distance: int) -> pd.DataFrame:
-    """Windowed pair generation, vectorized with shifted array views.
-
-    For shift s in 1..d, pair token[i] with token[i+s]; sort each pair
-    ascending; dedup per doc (first-occurrence — order-irrelevant because the
-    pair score is the sum of doc-level unigram scores; SURVEY §2.4 A8).
-    Emitted rows reuse the postings shape with tf=1 (pair tf is unused by the
-    reference scorer: the stored pair score is s(t1)+s(t2),
-    ``InvertedIndex.java:302-307``).
-    """
-    out_docs: list[np.ndarray] = []
-    out_pairs: list[np.ndarray] = []
-    for did, ts in zip(doc_ids, toks):
-        n = len(ts)
-        if n < 2:
-            continue
-        # doc-local integer ids (same trick as _pair_rows_scored): window +
-        # dedup on int64 keys, strings only for the deduped output
-        uniq_t, tok_ids = np.unique(np.asarray(ts, dtype=str),
-                                    return_inverse=True)
-        k = uniq_t.shape[0]
-        lefts, rights = [], []
-        for s in range(1, min(distance, n - 1) + 1):
-            lefts.append(tok_ids[:-s])
-            rights.append(tok_ids[s:])
-        a = np.concatenate(lefts)
-        b = np.concatenate(rights)
-        neq = a != b
-        a, b = a[neq], b[neq]
-        if a.shape[0] == 0:
-            continue
-        keys = np.unique(np.minimum(a, b) * k + np.maximum(a, b))
-        lo_t = uniq_t[keys // k].tolist()
-        hi_t = uniq_t[keys % k].tolist()
-        pairs = np.fromiter((x + PAIR_SEP + y for x, y in zip(lo_t, hi_t)),
-                            dtype=object, count=keys.shape[0])
-        out_pairs.append(pairs)
-        out_docs.append(np.full(len(pairs), did, dtype=np.int64))
-    if not out_pairs:
-        return pd.DataFrame({"term": pd.Series([], dtype=object),
-                             "doc_id": pd.Series([], dtype=np.int64),
-                             "tf": pd.Series([], dtype=np.int64),
-                             "doc_len": pd.Series([], dtype=np.int64),
-                             "maxtf": pd.Series([], dtype=np.int64)})
-    pdf = pd.DataFrame({
-        "term": np.concatenate(out_pairs),
-        "doc_id": np.concatenate(out_docs),
-    })
-    pdf["tf"] = np.int64(1)
-    meta = unigram_tf[["doc_id", "doc_len", "maxtf"]].drop_duplicates("doc_id")
-    return pdf.merge(meta, on="doc_id")
 
 
 def _sized_corpus(docs: DataFrame, id_col: str, text_col: str,
@@ -267,11 +201,12 @@ def _sized_corpus(docs: DataFrame, id_col: str, text_col: str,
 
 def build_postings(docs: DataFrame, id_col: str = "doc_id",
                    text_col: str = "text",
-                   dbigram_distance: int | None = None,
                    term_filter: DataFrame | None = None,
                    stopwords=None,
                    input_partitions: int | None = None) -> DataFrame:
-    """corpus → (term, doc_id, tf, doc_len, maxtf) via one Arrow pass.
+    """corpus → unigram (term, doc_id, tf, doc_len, maxtf) via one Arrow
+    pass. Pair postings are born scored in :func:`build_index`'s pair
+    phase (:func:`build_pair_postings_from_tokens`).
 
     Map-side pre-aggregation: raw tokens never leave the Python worker —
     only per-(doc,term) tf rows hit the shuffle (the analogue of the
@@ -293,8 +228,7 @@ def build_postings(docs: DataFrame, id_col: str = "doc_id",
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield _explode_tf(pdf, "doc_id", "__text", dbigram_distance,
-                              stopwords)
+            yield _explode_tf(pdf, "doc_id", "__text", stopwords)
 
     out = cols.mapInPandas(gen, schema=POSTINGS_SCHEMA)
     if term_filter is not None:
@@ -845,7 +779,7 @@ def global_stats_from_tokens(tokens_df: DataFrame) -> dict:
 
 
 # --------------------------------------------------------------------------
-# Phase 3 — compressed block-max segments (skew-aware)
+# Phase 3 — compressed block-max segments
 # --------------------------------------------------------------------------
 
 def _group_starts(term: pa.Array) -> np.ndarray:
@@ -927,9 +861,7 @@ def build_segments_fast(postings: DataFrame, n_docs: int, avgdl: int,
     join of the classic path disappear). The encoder is columnar: Arrow
     batches in, one ``SEGMENT_SCHEMA`` batch out, no Python object per
     term — dictionaries dominated by tiny lists (unique identifiers at
-    10^12-file scale) cost what their postings cost. Not applicable to
-    salted builds (partial groups don't know df) — use
-    :func:`build_segments` there.
+    10^12-file scale) cost what their postings cost.
 
     ``n_postings``: optional known row count (build_index gets it for
     free from the stats aggregate over the persisted postings) — sizes
@@ -956,47 +888,16 @@ def build_segments_fast(postings: DataFrame, n_docs: int, avgdl: int,
 
     return part.mapInArrow(run, schema=SEGMENT_SCHEMA)
 
-def _partial_run(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Stage-1 salted group: emit one sorted run (uncompressed arrays)."""
-    order = np.argsort(pdf["doc_id"].to_numpy(), kind="stable")
-    return pd.DataFrame([{
-        "term": pdf["term"].iloc[0],
-        "doc_ids": pdf["doc_id"].to_numpy(dtype=np.int64)[order].tolist(),
-        "scores": pdf["score_q"].to_numpy(dtype=np.int64)[order].tolist(),
-        "tfs": pdf["tf"].to_numpy(dtype=np.int64)[order].tolist(),
-    }])
 
-
-def _merge_runs(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Stage-2: k-way merge of a term's sorted runs → compressed segment.
-
-    This is the Spark-native replacement of ``massiveBinaryMerge``
-    (``ExternalSort.java:91-205``) — but per term and tiny, because the
-    shuffle already routed all runs of a term here.
-    """
-    term = pdf["term"].iloc[0]
-    dids = np.concatenate([np.asarray(x, dtype=np.int64) for x in pdf["doc_ids"]])
-    scores = np.concatenate([np.asarray(x, dtype=np.int64) for x in pdf["scores"]])
-    tfs = np.concatenate([np.asarray(x, dtype=np.int64) for x in pdf["tfs"]])
-    order = np.argsort(dids, kind="stable")
-    seg = indexcodec.encode_postings(dids[order], scores[order], tfs[order])
-    row = indexcodec.segment_to_row(seg)
-    row["term"] = term
-    return pd.DataFrame([row])
-
-
-def build_segments(scored: DataFrame, salt_buckets: int = 0,
+def build_segments(scored: DataFrame,
                    n_postings_hint: int | None = None) -> DataFrame:
     """scored postings → one segment row per term.
 
-    ``salt_buckets=0``: one explicit term-hash shuffle + Tungsten sort +
-    the streaming columnar ``mapInArrow`` encoder (:func:`_encode_stream`,
-    same kernel as the fused unigram path, scores taken from ``score_q``;
-    an ``applyInPandas`` per term would pay one UDF invocation per term —
+    One explicit term-hash shuffle + Tungsten sort + the streaming
+    columnar ``mapInArrow`` encoder (:func:`_encode_stream`, same kernel
+    as the fused unigram path, scores taken from ``score_q``; an
+    ``applyInPandas`` per term would pay one UDF invocation per term —
     ruinous for d-bigram dictionaries with millions of pair terms).
-    ``salt_buckets=S>0``: two-stage salted build — every term flows through
-    stage 1 with salt = doc_id % S (deterministic, no RNG), bounding any
-    single task's group to ~df/S postings.
 
     ``n_postings_hint``: optional (over-)estimate of the row count — sizes
     the encode shuffle like :func:`build_segments_fast` (floor = cores so
@@ -1004,79 +905,20 @@ def build_segments(scored: DataFrame, salt_buckets: int = 0,
     """
     from .config import ensure_on_executors
     ensure_on_executors(scored.sparkSession)
-    cols = scored.select("term", "doc_id", "tf", "score_q")
-    if salt_buckets <= 0:
-        sc = scored.sparkSession.sparkContext
-        n_parts = sc.defaultParallelism * 4
-        if n_postings_hint is not None:
-            n_parts = min(n_parts, max(
-                sc.defaultParallelism,
-                -(-n_postings_hint // HINTED_POSTINGS_PER_ENCODE_TASK)))
-        part = cols.repartition(n_parts, "term") \
-                   .sortWithinPartitions("term", "doc_id")
+    sc = scored.sparkSession.sparkContext
+    n_parts = sc.defaultParallelism * 4
+    if n_postings_hint is not None:
+        n_parts = min(n_parts, max(
+            sc.defaultParallelism,
+            -(-n_postings_hint // HINTED_POSTINGS_PER_ENCODE_TASK)))
+    part = scored.select("term", "doc_id", "tf", "score_q") \
+                 .repartition(n_parts, "term") \
+                 .sortWithinPartitions("term", "doc_id")
 
-        def run(batches):
-            yield from _encode_stream(batches, 0, 0, score_in=True)
+    def run(batches):
+        yield from _encode_stream(batches, 0, 0, score_in=True)
 
-        return part.mapInArrow(run, schema=SEGMENT_SCHEMA)
-    salted = cols.withColumn(
-        "salt", F.pmod(F.col("doc_id"), F.lit(salt_buckets)).cast("int"))
-    runs = salted.groupBy("term", "salt").applyInPandas(
-        lambda pdf: _partial_run(pdf), schema=_RUN_SCHEMA)
-    return runs.groupBy("term").applyInPandas(
-        _merge_runs, schema=SEGMENT_SCHEMA)
-
-
-def build_segments_skew_aware(scored: DataFrame, hot_df_threshold: int,
-                              salt_buckets: int = 16,
-                              n_postings_hint: int | None = None,
-                              pairs: DataFrame | None = None) -> DataFrame:
-    """Skew-split segment build: ONLY terms with df > threshold take the
-    two-stage salted route; the long tail takes the one-shuffle streaming
-    path. This is the practical 100 TB shape — salting everything doubles
-    the shuffle for millions of tiny lists to protect against a handful of
-    hot ones (``def``/``class``-grade d-bigrams), while salting nothing
-    lets one task own a whole hot list. The reference has no skew handling
-    at all (fixed 4 shards, InvertedIndex.java:74-84). A threshold of 0
-    salts every term.
-
-    ``scored`` must carry the ``df`` column (score_postings provides it),
-    so hot-term detection is a filter, not an extra aggregation.
-
-    ``pairs``: optional doc-locally scored pair postings
-    (:func:`build_pair_postings_from_tokens`), stored alongside the
-    unigrams. Hot-PAIR detection needs no pair-df aggregation: a pair's
-    df is bounded by min(df(t1), df(t2)), so only pairs whose BOTH
-    components are hot unigrams can be hot. Those take the salted path
-    (conservatively — a routed-but-cold pair is still exact, just takes
-    the two-stage encode); every other pair is provably cold. Routing is
-    two BROADCAST left joins of the hot-term set (bounded by
-    total_postings/threshold) on the pair components — never a collected
-    ``isin`` literal list, which at 100 TB with a low threshold compiles a
-    giant In predicate into every task, and never a pair-table shuffle
-    (plan-asserted in tests/test_plans.py). Each side then goes through
-    :func:`pair_segment_input`.
-    """
-    hot = scored.where(F.col("df") > hot_df_threshold)
-    cold = scored.where(F.col("df") <= hot_df_threshold)
-    if pairs is not None:
-        hot_terms = hot.select("term").distinct()
-        split = F.split(F.col("term"), PAIR_SEP)
-        routed = pairs.withColumn("__t1", split.getItem(0)) \
-                      .withColumn("__t2", split.getItem(1))
-        for side in ("__t1", "__t2"):
-            flag = hot_terms.select(F.col("term").alias(side),
-                                    F.lit(True).alias(side + "_hot"))
-            routed = routed.join(F.broadcast(flag), side, "left")
-        pair_hot = (F.coalesce(F.col("__t1_hot"), F.lit(False))
-                    & F.coalesce(F.col("__t2_hot"), F.lit(False)))
-        hot = pair_segment_input(hot, routed.where(pair_hot))
-        cold = pair_segment_input(cold, routed.where(~pair_hot))
-    out = build_segments(cold, salt_buckets=0,
-                         n_postings_hint=n_postings_hint)
-    if not hot.isEmpty():
-        out = out.unionByName(build_segments(hot, salt_buckets=salt_buckets))
-    return out
+    return part.mapInArrow(run, schema=SEGMENT_SCHEMA)
 
 
 def pair_segment_input(scored_uni: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -1089,10 +931,9 @@ def pair_segment_input(scored_uni: DataFrame, pairs: DataFrame) -> DataFrame:
     component streams via s2 = unzigzag(tf), s1 = score - s2
     (``algo_toplayer.cpp:477-564``, ``BigramIndex.java:44-85``). zigzag
     keeps negative components 1-2 VByte bytes. Every pair-storing segment
-    input (build_index, both sides of build_segments_skew_aware's hot/cold
-    split, and through them checkpoints.build_index_resumable and the CLI)
-    MUST go through here — a path that unioned raw tf=1 instead would store
-    segments that decode s2=-1 for every pair.
+    input (build_index, and through it checkpoints.build_index_resumable
+    and the CLI) MUST go through here — a path that unioned raw tf=1
+    instead would store segments that decode s2=-1 for every pair.
     """
     s2z = F.expr("(s2 << 1) ^ (s2 >> 63)").cast("long").alias("tf")
     return scored_uni.select("term", "doc_id", "tf", "score_q") \
@@ -1128,8 +969,6 @@ def _stopwords_key(stopwords) -> str | None:
 def build_index(docs: DataFrame, id_col: str = "doc_id",
                 text_col: str = "text",
                 dbigram_distance: int | None = DBIGRAM_DISTANCE,
-                hot_df: int | None = None,
-                salt_buckets: int = 16,
                 checkpoint: Checkpointer | None = None,
                 phase_times: dict | None = None,
                 stopwords=None) -> tuple[DataFrame, dict]:
@@ -1156,12 +995,6 @@ def build_index(docs: DataFrame, id_col: str = "doc_id",
     only when the plan has none). Every Python stage runs at a task count
     sized from its data (see the stage-sizing notes at the top of this
     module).
-
-    ``hot_df``: skew split — terms (and pairs of two hot terms) with
-    df > ``hot_df`` take the two-stage salted encode with
-    ``salt_buckets`` salts (:func:`build_segments_skew_aware`); ``0``
-    salts every term, ``None`` (default) salts none. Segments are
-    byte-identical either way.
 
     ``checkpoint``: persistence policy of the intermediates.
     ``None`` persists them in memory (the token table, the postings and,
@@ -1224,7 +1057,7 @@ def build_index(docs: DataFrame, id_col: str = "doc_id",
         # unigram postings carry no token-less docs: count the corpus
         n_docs = docs.count()
         postings = phase("postings", lambda: build_postings(
-            docs, id_col, text_col, None, stopwords=stopwords,
+            docs, id_col, text_col, stopwords=stopwords,
             input_partitions=tok_tasks(n_docs)), params=corpus)
 
         def stats_of():
@@ -1241,7 +1074,7 @@ def build_index(docs: DataFrame, id_col: str = "doc_id",
     stats["cached"] = cached
     if phase_times is not None:
         phase_times["tokenize_stats"] = round(_time.time() - t0, 3)
-    if not dbigram_distance and hot_df is None and checkpoint is None:
+    if not dbigram_distance and checkpoint is None:
         # unigram-only: fused single-shuffle path (df + score in-kernel)
         return build_segments_fast(postings, stats["n_docs"],
                                    stats["avgdl"],
@@ -1265,9 +1098,5 @@ def build_index(docs: DataFrame, id_col: str = "doc_id",
         # opens ≤ d windows, pre-dedup) — a cheap over-estimate that sizes
         # the encode shuffle without materializing the pair table
         hint += dbigram_distance * stats["total_tokens"]
-    if hot_df is not None:
-        return build_segments_skew_aware(scored, hot_df, salt_buckets,
-                                         n_postings_hint=hint,
-                                         pairs=pairs), stats
     seg_in = scored if pairs is None else pair_segment_input(scored, pairs)
     return build_segments(seg_in, n_postings_hint=hint), stats

@@ -121,7 +121,6 @@ class Checkpointer:
 def build_index_resumable(docs: DataFrame, root: str,
                           id_col: str | None = None,
                           dbigram_distance: int | None = 5,
-                          salt_buckets: int = 0,
                           n_store_buckets: int = 64,
                           stopwords=None):
     """Checkpointed end-to-end build → (segments, stats, checkpointer).
@@ -132,9 +131,8 @@ def build_index_resumable(docs: DataFrame, root: str,
     store layout (segmentstore.py). Re-running after a crash executes only
     missing phases; a crash during the giant pair phase resumes from the
     scored unigrams and the token checkpoint, without re-tokenizing.
-    ``salt_buckets > 0`` salts every term. ``id_col`` defaults to
-    ``doc_id`` if present, else the first column — same detection as the
-    CLI build."""
+    ``id_col`` defaults to ``doc_id`` if present, else the first column —
+    same detection as the CLI build."""
     from pyspark.sql import functions as F
     from .build import build_index, release_build_caches
     from .sources.segmentstore import bucket_of
@@ -144,16 +142,14 @@ def build_index_resumable(docs: DataFrame, root: str,
         id_col = "doc_id" if "doc_id" in docs.columns else docs.columns[0]
     text_col = "content" if "content" in docs.columns else "text"
     encoded, stats = build_index(
-        docs, id_col, text_col, dbigram_distance,
-        hot_df=0 if salt_buckets > 0 else None, salt_buckets=salt_buckets,
-        checkpoint=cp, stopwords=stopwords)
+        docs, id_col, text_col, dbigram_distance, checkpoint=cp,
+        stopwords=stopwords)
     release_build_caches(stats)  # nothing is pinned; drops the empty list
     segments, _ = cp.phase(
         "segments",
         lambda: encoded.withColumn("bucket",
                                    bucket_of(F.col("term"), n_store_buckets)),
         inputs=["scored", "pairs"] if dbigram_distance else ["scored"],
-        params={"salt_buckets": salt_buckets,
-                "n_store_buckets": n_store_buckets},
+        params={"n_store_buckets": n_store_buckets},
         partition_by="bucket")
     return segments, stats, cp

@@ -5,16 +5,16 @@ On a cluster:
     python -m candidategeneration_spark.cli zip           # emit py-files zip
     spark-submit --py-files cg.zip -m ... build \
         --corpus s3://bucket/corpus --out s3://bucket/index \
-        --dbigram 5 --hot-df 1000000
+        --dbigram 5
     spark-submit --py-files cg.zip ... query \
         --index s3://bucket/index --queries queries.tsv --out results
 
-Locally the same commands run against parquet paths on `local[N]`
-(master from SPARK_GRAFT_CPUS / --master). The build writes the
-term-bucketed segment store (partition-pruned reads: a query touches at
-most |query terms| buckets). ``--resume-root DIR`` checkpoints every
-build phase there, so a re-run after a crash skips the finished ones; it
-combines with ``--hot-df`` like any other flag.
+The master is the CLI's own ``--master``, else the one spark-submit was
+given, else ``local[SPARK_GRAFT_CPUS]``, where the same commands run
+against local parquet paths. The build writes the term-bucketed segment
+store (partition-pruned reads: a query touches at most |query terms|
+buckets). ``--resume-root DIR`` checkpoints every build phase there, so
+a re-run after a crash skips the finished ones.
 """
 
 from __future__ import annotations
@@ -64,7 +64,6 @@ def cmd_build(args) -> int:
         checkpoint = Checkpointer(args.resume_root, spark)
     segments, stats = build_index(docs, id_col, text_col,
                                   args.dbigram or None,
-                                  hot_df=args.hot_df or None,
                                   checkpoint=checkpoint,
                                   stopwords=_stopwords(args))
     save_segments(segments, args.out, n_buckets=args.buckets)
@@ -152,9 +151,6 @@ def main(argv=None) -> int:
     b.add_argument("--dbigram", type=int, default=0,
                    help="d-bigram window distance (0 = unigrams only)")
     b.add_argument("--buckets", type=int, default=64)
-    b.add_argument("--hot-df", type=int, default=0, dest="hot_df",
-                   help="df threshold above which terms take the salted "
-                        "skew path (0 = no skew split)")
     b.add_argument("--resume-root", default=None, dest="resume_root",
                    help="checkpoint dir: each build phase is written there "
                         "and a re-run skips the finished ones")

@@ -65,7 +65,15 @@ def package_zip(path: str | None = None) -> str:
     hash of the package sources, and an existing zip of that name is
     reused rather than rewritten: a process writes it at most once, and a
     worker daemon importing from it (see :func:`get_spark`) never sees a
-    different checkout's code appear under its path."""
+    different checkout's code appear under its path.
+
+    Raises ``RuntimeError`` when the package was itself imported from an
+    archive (``spark-submit --py-files cg.zip``): there are no source
+    files to walk, and that archive is already the one to ship."""
+    if not os.path.isdir(_PKG_DIR):
+        raise RuntimeError(
+            f"{__package__} was imported from an archive ({_PKG_DIR}), "
+            "not a directory; ship that archive instead")
     sources = _package_sources()
     if path is None:
         h = hashlib.sha256()
@@ -87,7 +95,12 @@ def package_zip(path: str | None = None) -> str:
 
 
 def ensure_on_executors(spark: SparkSession) -> None:
-    """Ship this package to executors once per application (idempotent)."""
+    """Ship this package to executors once per application (idempotent).
+
+    Ships nothing when the package was imported from an archive: that
+    archive came with ``--py-files``, so the executors already have it."""
+    if not os.path.isdir(_PKG_DIR):
+        return
     sc = spark.sparkContext
     app = sc.applicationId
     if app in _ATTACHED:
@@ -149,14 +162,12 @@ def _daemon_confs(master: str, conf: dict[str, str],
 
     Empty unless ``master`` is ``local`` or ``local[...]`` (the executors
     share the driver's file system, so they can import from
-    ``pythonpath``), ``conf`` — what the session would otherwise start
-    with — sets no ``spark.python.daemon.module``, and the package is a
-    directory on disk. ``pythonpath`` goes first on the daemon's
-    ``PYTHONPATH``, ahead of any ``spark.executorEnv.PYTHONPATH`` in
-    ``conf``."""
+    ``pythonpath``) and ``conf`` — what the session would otherwise start
+    with — sets no ``spark.python.daemon.module``. ``pythonpath`` goes
+    first on the daemon's ``PYTHONPATH``, ahead of any
+    ``spark.executorEnv.PYTHONPATH`` in ``conf``."""
     if (not _LOCAL_MASTER.fullmatch(master)
-            or "spark.python.daemon.module" in conf
-            or not os.path.isdir(_PKG_DIR)):
+            or "spark.python.daemon.module" in conf):
         return {}
     rest = conf.get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep)
     paths = [pythonpath] + [p for p in rest if p and p != pythonpath]
@@ -170,18 +181,23 @@ def get_spark(master: str | None = None, shuffle_partitions: int | None = None,
     the parallelism level (≈ cores at local scale; 2-3× executor cores on a
     real cluster — callers override for 100 TB runs).
 
+    ``master``: ``None`` keeps the launch conf's ``spark.master`` — a
+    spark-submit driver's ``--master``, or ``--master`` in
+    ``PYSPARK_SUBMIT_ARGS`` — and defaults to ``local[SPARK_GRAFT_CPUS]``
+    only when the launch conf has none.
+
     On a ``local`` / ``local[...]`` master, Spark forks every Python
     worker from this package's daemon (``_daemon.py``), so every worker
     skips the per-task ``pyspark.zip`` re-read
     (:func:`install_lazy_zip_invalidation`), whatever it runs; the daemon
     imports the package from the same zip :func:`ensure_on_executors`
-    ships. Other masters, and a ``spark.python.daemon.module`` already
-    set in the launch conf (``spark-defaults.conf``,
-    ``PYSPARK_SUBMIT_ARGS``), keep the daemon Spark would use."""
+    ships. Other masters, a package imported from an archive, and a
+    ``spark.python.daemon.module`` already set in the launch conf
+    (``spark-defaults.conf``, ``PYSPARK_SUBMIT_ARGS``) keep the daemon
+    Spark would use."""
     from pyspark import SparkConf, SparkContext
     from pyspark.sql import SparkSession
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
-    master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         n = int(cpus) if cpus.isdigit() else (os.cpu_count() or 4)
         shuffle_partitions = max(8, n)
@@ -202,7 +218,7 @@ def get_spark(master: str | None = None, shuffle_partitions: int | None = None,
             total_g = 8
         driver_mem = f"{max(1, min(24, total_g // 2))}g"
     opts = {
-        "spark.master": master,
+        "spark.master": master or f"local[{cpus}]",
         "spark.app.name": app_name,
         "spark.driver.memory": driver_mem,
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
@@ -220,11 +236,17 @@ def get_spark(master: str | None = None, shuffle_partitions: int | None = None,
         "spark.ui.enabled": "false",
     }
     # the launch conf is read through the gateway JVM, started here with
-    # ``opts`` when none runs yet, as getOrCreate would start it
+    # ``opts`` when none runs yet, as getOrCreate would start it; a
+    # spark-submit driver's gateway already runs with the submit's conf,
+    # whose master a ``None`` master keeps
     SparkContext._ensure_initialized(
         conf=SparkConf(loadDefaults=False).setAll(opts.items()))
-    opts.update(_daemon_confs(master, dict(SparkConf().getAll()),
-                              package_zip()))
+    launch = dict(SparkConf().getAll())
+    if master is None:
+        opts["spark.master"] = launch.get("spark.master", opts["spark.master"])
+    if os.path.isdir(_PKG_DIR):
+        opts.update(_daemon_confs(opts["spark.master"], launch,
+                                  package_zip()))
     spark = SparkSession.builder.config(map=opts).getOrCreate()
     ensure_on_executors(spark)
     return spark

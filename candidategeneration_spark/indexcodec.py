@@ -549,8 +549,9 @@ def encode_groups(dids: np.ndarray, scores: np.ndarray, tfs: np.ndarray,
     def blob(enc: bytes, off: np.ndarray) -> pa.Array:
         if off[-1] > np.iinfo(np.int32).max:
             raise ValueError(
-                "encode batch exceeds 2 GiB of VByte bytes in one stream; "
-                "route hot terms through the salted build")
+                "encode batch exceeds 2 GiB of VByte bytes in one stream "
+                "(the 32-bit offsets of an Arrow binary column); one "
+                "segment row cannot hold a posting list that large")
         return pa.BinaryArray.from_buffers(
             pa.binary(), n_groups,
             [None, pa.py_buffer(off[blob_at].astype(np.int32)),

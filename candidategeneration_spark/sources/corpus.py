@@ -9,7 +9,7 @@ scaling benchmark depends on this).
 
 Statistical shape: zipf-distributed ~5k-token vocabulary + language
 keywords (so hot d-bigrams like ``def __init__`` exist → term-frequency
-skew, the north rule's salting case), plus rare per-file unique identifiers
+skew in the encode shuffle), plus rare per-file unique identifiers
 so every doc is distinguishable.
 
 Replaces the reference's ClueWeb09 forward index + docInfo sidecar

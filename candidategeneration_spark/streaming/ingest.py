@@ -114,7 +114,6 @@ def postings_sink(postings_stream: DataFrame, log_path: str,
 
 
 def compact_index(spark: SparkSession, log_path: str,
-                  salt_buckets: int = 0,
                   doc_log_path: str | None = None) -> tuple[DataFrame, dict]:
     """Exact segments from everything ingested so far.
 
@@ -142,7 +141,7 @@ def compact_index(spark: SparkSession, log_path: str,
         n_docs = postings.select("doc_id").distinct().count()
     stats = global_stats_from_postings(postings, n_docs)
     scored = score_postings(postings, stats["n_docs"], stats["avgdl"])
-    return build_segments(scored, salt_buckets=salt_buckets), stats
+    return build_segments(scored), stats
 
 
 def deletes_sink(delete_stream: DataFrame, deletes_path: str,
@@ -166,7 +165,6 @@ def deletes_sink(delete_stream: DataFrame, deletes_path: str,
 
 def compact_index_with_deletes(spark: SparkSession, log_path: str,
                                deletes_path: str,
-                               salt_buckets: int = 0,
                                doc_log_path: str | None = None
                                ) -> tuple[DataFrame, dict]:
     """Exact segments for (everything ingested) MINUS (tombstoned docs).
@@ -192,7 +190,7 @@ def compact_index_with_deletes(spark: SparkSession, log_path: str,
         n_docs = postings.select("doc_id").distinct().count()
     stats = global_stats_from_postings(postings, n_docs)
     scored = score_postings(postings, stats["n_docs"], stats["avgdl"])
-    return build_segments(scored, salt_buckets=salt_buckets), stats
+    return build_segments(scored), stats
 
 
 def filter_deleted(results: DataFrame, spark: SparkSession,

@@ -207,26 +207,6 @@ def test_broadcast_mode_matches_join_mode(spark, built, oracle, max_records):
         assert a.get(qid, []) == oracle.topk(terms, k=10), qid
 
 
-def test_salted_build_identical(spark, docs_sf001, built):
-    """Skew-safe two-stage build must produce byte-identical segments
-    (resumability analogue: same input → same bytes)."""
-    segs, stats = built
-    postings = B.build_postings(docs_sf001, dbigram_distance=None)
-    scored = B.score_postings(postings, stats["n_docs"], stats["avgdl"])
-    plain = {r["term"]: r for r in
-             B.build_segments(scored, salt_buckets=0).collect()
-             if B.PAIR_SEP not in r["term"]}
-    salted = {r["term"]: r for r in
-              B.build_segments(scored, salt_buckets=4).collect()}
-    assert set(plain) == set(salted)
-    for t in plain:
-        a, b = plain[t], salted[t]
-        assert bytes(a["did_blob"]) == bytes(b["did_blob"]), t
-        assert bytes(a["score_blob"]) == bytes(b["score_blob"]), t
-        assert a["block_max"] == b["block_max"]
-        assert a["block_last"] == b["block_last"]
-
-
 def test_term_filter_semi_join(spark, docs_sf001):
     """T6/J2: broadcast filter-set pruning — only listed terms survive."""
     from candidategeneration_spark.build import build_postings
@@ -239,35 +219,18 @@ def test_term_filter_semi_join(spark, docs_sf001):
     assert filtered.count() == n_full
 
 
-def test_skew_aware_build_identical(spark, docs_sf001):
-    """Skew-split (hot terms salted, tail streamed) must produce segments
-    byte-identical to the plain build."""
-    from candidategeneration_spark.build import (
-        build_postings, build_segments, build_segments_skew_aware,
-        global_stats, score_postings)
-    stats = global_stats(docs_sf001)
-    postings = build_postings(docs_sf001)
-    scored = score_postings(postings, stats["n_docs"], stats["avgdl"]).cache()
-    plain = {r["term"]: r for r in build_segments(scored).collect()}
-    skew = {r["term"]: r
-            for r in build_segments_skew_aware(
-                scored, hot_df_threshold=50, salt_buckets=4).collect()}
-    assert set(plain) == set(skew)
-    for t, a in plain.items():
-        b = skew[t]
-        assert bytes(a["did_blob"]) == bytes(b["did_blob"]), t
-        assert bytes(a["score_blob"]) == bytes(b["score_blob"]), t
-        assert list(a["block_max"]) == list(b["block_max"]), t
-
-
 def test_score_postings_pair_guard_fires_executor_side(spark, docs_sf001):
     """The unigrams-only guard is fused into the df aggregate (round 5 —
     no extra probe job): feeding pair rows must still raise, now at the
     first action that evaluates the scored rows."""
     from candidategeneration_spark.build import (
-        build_postings, global_stats, score_postings)
+        PAIR_SEP, POSTINGS_SCHEMA, build_postings, global_stats,
+        score_postings)
     stats = global_stats(docs_sf001)
-    with_pairs = build_postings(docs_sf001, dbigram_distance=5)
+    pairs = spark.createDataFrame(
+        [(f"fast{PAIR_SEP}key", 1, 1, 7, 1),
+         (f"alpha{PAIR_SEP}beta", 2, 1, 9, 2)], POSTINGS_SCHEMA)
+    with_pairs = build_postings(docs_sf001).unionByName(pairs)
     bad = score_postings(with_pairs, stats["n_docs"], stats["avgdl"])
     with pytest.raises(Exception, match="unigrams only"):
         bad.collect()

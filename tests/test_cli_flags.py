@@ -4,18 +4,17 @@ and flags that combine are honoured together, never silently dropped."""
 from candidategeneration_spark import cli
 
 
-def test_build_resume_root_with_hot_df_matches_plain_build(spark, tmp_path,
-                                                           capsys):
-    """``--resume-root`` and ``--hot-df`` together build a checkpointed
-    skew-split index whose store equals a plain ``--dbigram`` build's."""
+def test_build_resume_root_matches_plain_build(spark, tmp_path, capsys):
+    """``--resume-root`` builds a checkpointed index whose store equals a
+    plain ``--dbigram`` build's."""
     from candidategeneration_spark.sources.corpus import generate_corpus
     from candidategeneration_spark.sources.segmentstore import load_segments
     corpus = str(tmp_path / "corpus")
     generate_corpus(spark, 60, seed=3).write.parquet(corpus)
     stores = {}
     for name, extra in (("plain", []),
-                        ("both", ["--hot-df", "20", "--resume-root",
-                                  str(tmp_path / "ckpt")])):
+                        ("resumable", ["--resume-root",
+                                       str(tmp_path / "ckpt")])):
         out = str(tmp_path / name)
         assert cli.main(["build", "--corpus", corpus, "--out", out,
                          "--dbigram", "3", "--buckets", "4"] + extra) == 0
@@ -23,7 +22,7 @@ def test_build_resume_root_with_hot_df_matches_plain_build(spark, tmp_path,
             r["term"]: (r["bucket"], bytes(r["did_blob"]),
                         bytes(r["score_blob"]), bytes(r["tf_blob"]))
             for r in load_segments(spark, out).collect()}
-    assert stores["both"] == stores["plain"] and stores["plain"]
+    assert stores["resumable"] == stores["plain"] and stores["plain"]
     assert (tmp_path / "ckpt" / "pairs.manifest.json").exists()
     # the store is written once: to --out, not also into the checkpoint
     assert not (tmp_path / "ckpt" / "segments").exists()

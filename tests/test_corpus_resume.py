@@ -96,12 +96,11 @@ def _blobs(segments):
 
 def test_all_build_paths_identical_segments(spark, corpus, tmp_path,
                                             monkeypatch):
-    """Every build mode (build_index plain, with a skew split, with a
-    checkpoint, with both, the resumable wrapper, and a checkpointed
-    skew-split build killed after ``scored`` and resumed) must emit
-    byte-identical segments on a d-bigram build — in particular the X2
-    stored format (zigzag(s2) in the pair tf stream) must be shared, not
-    re-derived per path.
+    """Every build mode (build_index plain, with a checkpoint, the
+    resumable wrapper, and a checkpointed build killed after ``scored``
+    and resumed) must emit byte-identical segments on a d-bigram build —
+    in particular the X2 stored format (zigzag(s2) in the pair tf stream)
+    must be shared, not re-derived per path.
 
     The d-bigram build runs no corpus count job: n_docs comes from the
     token table, and the tokenize pass is sized from the plan's row-count
@@ -137,19 +136,9 @@ def test_all_build_paths_identical_segments(spark, corpus, tmp_path,
         corpus, str(tmp_path / "xp"), dbigram_distance=3)
     assert _blobs(seg_r) == want
 
-    # threshold low enough that hot terms (and hot-candidate pairs) exist
-    modes = {
-        "hot_df": {"hot_df": 50, "salt_buckets": 4},
-        "checkpoint": {"checkpoint": Checkpointer(str(tmp_path / "c"),
-                                                  spark)},
-        "checkpoint+hot_df": {
-            "checkpoint": Checkpointer(str(tmp_path / "ch"), spark),
-            "hot_df": 50, "salt_buckets": 4},
-    }
-    for mode, kw in modes.items():
-        seg, _ = build_index(corpus, text_col="content",
-                             dbigram_distance=3, **kw)
-        assert _blobs(seg) == want, mode
+    seg, _ = build_index(corpus, text_col="content", dbigram_distance=3,
+                         checkpoint=Checkpointer(str(tmp_path / "c"), spark))
+    assert _blobs(seg) == want
 
     # killed after scored: the pair phase dies, the re-run resumes
     cp = Checkpointer(str(tmp_path / "killed"), spark)
@@ -160,10 +149,10 @@ def test_all_build_paths_identical_segments(spark, corpus, tmp_path,
         m.setattr(build, "build_pair_postings_from_tokens", killed)
         with pytest.raises(RuntimeError, match="killed"):
             build_index(corpus, text_col="content", dbigram_distance=3,
-                        checkpoint=cp, hot_df=50, salt_buckets=4)
+                        checkpoint=cp)
     assert cp.is_done("scored") and not cp.is_done("pairs")
     seg, _ = build_index(corpus, text_col="content", dbigram_distance=3,
-                         checkpoint=cp, hot_df=50, salt_buckets=4)
+                         checkpoint=cp)
     assert _blobs(seg) == want
 
 

@@ -213,25 +213,6 @@ def test_bucketed_join_avoids_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS bt_b")
 
 
-def test_hot_pair_routing_broadcast_not_in_literal(spark, docs_sf001):
-    """Skew-aware hot/cold pair routing (build_index with hot_df): the
-    hot-term set must reach the pair table as a BROADCAST left join, not
-    a collected In-literal (which at 100 TB with a low threshold compiles
-    a giant predicate into every task). Forced-low threshold so hot terms
-    and hot-candidate pairs actually exist; the pair table itself must
-    never shuffle for the routing join."""
-    from candidategeneration_spark.build import build_index
-    seg, stats = build_index(docs_sf001, dbigram_distance=2, hot_df=5)
-    plan = plans.explain_str(seg, "simple")
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-    # no In-literal of collected hot terms anywhere in the routing plan:
-    # a term list would render as 'In(term, [' or a giant 'IN (' predicate
-    assert " IN (" not in plan and "In(term" not in plan, plan
-    # and the routed build still answers: smoke one collect
-    assert seg.limit(1).count() == 1
-
-
 def test_build_stages_sized_to_data(spark):
     """The d-bigram build sizes its Python stages from their data. On a
     200-doc corpus that arrives in 4 partitions the tokenize mapInArrow

@@ -42,7 +42,7 @@ def test_fused_batch_matches_explode_tf():
     ids = np.arange(len(TEXTS), dtype=np.int64) * 3 + 11
     for sw in (None, STOPWORDS_WEB):
         toks = tokenize_pandas(pd.Series(TEXTS), sw)
-        want = _per_doc(B._explode_tf_from_toks(ids, toks, None))
+        want = _per_doc(B._explode_tf_from_toks(ids, toks))
         rows = _fused(ids, TEXTS, sw)
         assert [r["doc_id"] for r in rows] == ids.tolist()
         for r, t in zip(rows, toks):
