@@ -175,6 +175,27 @@ def _daemon_confs(master: str, conf: dict[str, str],
             "spark.executorEnv.PYTHONPATH": os.pathsep.join(paths)}
 
 
+def _defaults_file_master() -> str | None:
+    """``spark.master`` of ``spark-defaults.conf`` in ``SPARK_CONF_DIR``
+    (else ``$SPARK_HOME/conf``), the file spark-submit reads, or None."""
+    conf_dir = os.environ.get("SPARK_CONF_DIR")
+    if conf_dir is None:
+        from pyspark.find_spark_home import _find_spark_home
+        conf_dir = os.path.join(_find_spark_home(), "conf")
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf"),
+                  encoding="utf-8") as f:
+            lines = f.read().splitlines()
+    except OSError:
+        return None
+    master = None  # a later line overrides an earlier one
+    for line in lines:
+        m = re.match(r"\s*spark\.master(?:\s*[=:]\s*|\s+)(\S.*?)\s*$", line)
+        if m:
+            master = m.group(1)
+    return master
+
+
 def get_spark(master: str | None = None, shuffle_partitions: int | None = None,
               app_name: str = "candidategeneration-spark") -> SparkSession:
     """Opinionated session: AQE on, Arrow on, shuffle partitions sized to
@@ -182,9 +203,11 @@ def get_spark(master: str | None = None, shuffle_partitions: int | None = None,
     real cluster — callers override for 100 TB runs).
 
     ``master``: ``None`` keeps the launch conf's ``spark.master`` — a
-    spark-submit driver's ``--master``, or ``--master`` in
-    ``PYSPARK_SUBMIT_ARGS`` — and defaults to ``local[SPARK_GRAFT_CPUS]``
-    only when the launch conf has none.
+    spark-submit driver's ``--master``, ``--master`` in
+    ``PYSPARK_SUBMIT_ARGS``, or the ``spark.master`` of
+    ``spark-defaults.conf`` (in ``SPARK_CONF_DIR``, else
+    ``$SPARK_HOME/conf``) — and defaults to ``local[SPARK_GRAFT_CPUS]``
+    only when none of them sets one.
 
     On a ``local`` / ``local[...]`` master, Spark forks every Python
     worker from this package's daemon (``_daemon.py``), so every worker
@@ -217,8 +240,13 @@ def get_spark(master: str | None = None, shuffle_partitions: int | None = None,
         except (ValueError, OSError):
             total_g = 8
         driver_mem = f"{max(1, min(24, total_g // 2))}g"
+    # the gateway started below gets ``opts`` as --conf, which would
+    # override spark-defaults.conf, so its master is read here
+    default_master = f"local[{cpus}]"
+    if master is None and SparkContext._gateway is None:
+        default_master = _defaults_file_master() or default_master
     opts = {
-        "spark.master": master or f"local[{cpus}]",
+        "spark.master": master or default_master,
         "spark.app.name": app_name,
         "spark.driver.memory": driver_mem,
         "spark.sql.shuffle.partitions": str(shuffle_partitions),

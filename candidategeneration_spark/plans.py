@@ -8,6 +8,10 @@ a test asserting its physical plan actually contains the shapes we designed
 for — a scan that reads all columns for a 2-column projection, or a big
 join that should have broadcast but shuffled, fails CI rather than only
 showing up as a 100 TB regression.
+
+It also holds what the serving path reads of plans and writes into them
+without a job or a py4j call per value: the optimizer's row and size
+statistics, and predicates built as one SQL string.
 """
 
 from __future__ import annotations
@@ -28,6 +32,46 @@ def row_count_stat(df: DataFrame) -> int | None:
     ``limit`` reports its limit, an upper bound of the rows it returns."""
     rows = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
     return int(str(rows.get())) if rows.isDefined() else None
+
+
+def size_in_bytes_stat(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df``'s plan, in bytes: what
+    Spark compares with ``spark.sql.autoBroadcastJoinThreshold`` to pick a
+    broadcast join. Runs no job. A file scan reports the size of the files
+    it lists after partition pruning; a plan Spark cannot size (a Python
+    RDD scan) reports ``spark.sql.defaultSizeInBytes``."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return int(str(size))
+
+
+def sql_literal(value: str | int) -> str:
+    """``value`` as a Spark SQL literal. A string keeps ``[A-Za-z0-9_]``
+    and writes every other character as ``\\uXXXX`` UTF-16 units, so no
+    quote, backslash or ``${...}`` (SQL text is variable-substituted
+    before it is parsed) reaches the parser as such. Assumes the default
+    ``spark.sql.parser.escapedStringLiterals=false``."""
+    if isinstance(value, int):
+        return str(value)
+    out = ["'"]
+    for c in value:
+        if c.isascii() and (c.isalnum() or c == "_"):
+            out.append(c)
+        else:
+            units = c.encode("utf-16-be", "surrogatepass")
+            out.extend(f"\\u{units[i]:02X}{units[i + 1]:02X}"
+                       for i in range(0, len(units), 2))
+    out.append("'")
+    return "".join(out)
+
+
+def sql_in(column: str, values) -> str:
+    """A ``column IN (...)`` predicate as one SQL string (``false`` for no
+    values): one ``where`` call, where ``Column.isin`` makes two py4j
+    round trips per value."""
+    values = list(values)
+    if not values:
+        return "false"
+    return f"{column} IN ({', '.join(map(sql_literal, values))})"
 
 
 def scan_read_schema(plan: str) -> list[str]:

@@ -31,15 +31,28 @@ Spark orchestration: one serving loop (:func:`_result_frames`) turns
 ``(qid, [Segment])`` pairs into result rows, inside a ``mapInPandas``
 iterator. Its two feeders:
 
-- :func:`wand_topk` ``mode="join"``: the tiny exploded query-term table is
-  broadcast and hash-joined against the segment table — segments never
-  shuffle for the join; only the ≤|terms| matched segment rows per query
-  move in one ``repartition(qid)`` exchange, sorted by (qid, term) so each
-  query's rows are consecutive. A query touches at most |q| segment
-  partitions, satisfying the term-partitioned layout goal of SURVEY.md §7.5.
+- :func:`wand_topk` ``mode="join"``, in one of two shapes chosen from
+  Catalyst's size estimate of the segment side (no job runs to choose):
+
+  - small (estimate ≤ ``spark.sql.autoBroadcastJoinThreshold``): the
+    segments are broadcast and the exploded query terms stream through
+    the hash join, so each query's rows stay consecutive in its own
+    partition — two jobs (the broadcast, the serving stage), no shuffle;
+  - large (otherwise, or a threshold of −1): the tiny exploded query-term
+    table is broadcast and hash-joined against the segment table —
+    segments never shuffle for the join; only the ≤|terms| matched
+    segment rows per query move in one ``repartition(qid)`` exchange,
+    sorted by (qid, term) so each query's rows are consecutive.
+
+  A query touches at most |q| segment partitions, satisfying the
+  term-partitioned layout goal of SURVEY.md §7.5.
 - :func:`wand_topk_prepared`: segments broadcast once
   (:func:`prepare_index`), each query's terms looked up in a per-worker
   decode-memoizing dict.
+
+Both build their filters and projections from SQL strings
+(:func:`plans.sql_in`, ``selectExpr``), so planning a batch costs the
+same few py4j round trips whatever its number of terms.
 """
 
 from __future__ import annotations
@@ -49,12 +62,13 @@ from operator import itemgetter
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     IntegerType, LongType, StructField, StructType,
 )
 
 from .indexcodec import Segment
+from .plans import size_in_bytes_stat, sql_in
 
 RESULT_SCHEMA = StructType([
     StructField("qid", LongType()),
@@ -539,12 +553,20 @@ def wand_topk(segments: DataFrame, queries: DataFrame, k: int = 10,
     Two physical strategies feeding the same serving loop (same results,
     asserted in tests):
 
-    - ``mode="join"``: broadcast the exploded query terms, hash-join against
-      the segment table, co-partition the matched rows by qid. Segments
-      never shuffle for the join, but each query gets its own copy of its
-      terms' blobs in the qid exchange — right when the term universe is
-      huge and queries are few or disjoint (ad-hoc analytics over a
-      10^12-file index).
+    - ``mode="join"``: hash-join the exploded query terms with the
+      segment table — right when the term universe is huge and queries
+      are few or disjoint (ad-hoc analytics over a 10^12-file index).
+      Which side is broadcast follows Catalyst's size estimate of
+      ``segments`` (:func:`plans.size_in_bytes_stat`):
+
+      - at most ``spark.sql.autoBroadcastJoinThreshold``: broadcast the
+        segments and stream the queries; a query's rows come out
+        consecutive in its partition, so the batch runs in two jobs with
+        no shuffle;
+      - above it, or when the threshold is −1: broadcast the query terms,
+        then co-partition the matched rows by qid and sort them by
+        (qid, term). Segments never shuffle for the join, but each query
+        gets its own copy of its terms' blobs in the qid exchange.
     - ``mode="broadcast"``: collect only the segments matching the batch's
       term set, broadcast once, fan queries out with mapInPandas. No
       per-query blob duplication, per-worker decode caching — right for
@@ -563,13 +585,17 @@ def wand_topk(segments: DataFrame, queries: DataFrame, k: int = 10,
     # where the old (qid, term).distinct() paid a whole extra shuffle stage
     # per batch. Contract: one row per qid (duplicated qids would merge
     # into one group below).
-    qterms = queries.select(
-        F.col("qid").cast("long").alias("qid"),
-        F.explode(F.array_distinct("terms")).alias("term"),
-    )
-    matched = segments.join(F.broadcast(qterms), "term") \
-        .repartition("qid").sortWithinPartitions("qid", "term") \
-        .select("qid", *_SEG_COLS)
+    qterms = queries.selectExpr(
+        "CAST(qid AS BIGINT) AS qid",
+        "explode(array_distinct(terms)) AS term")
+    threshold = segments.sparkSession._jsparkSession.sessionState() \
+        .conf().autoBroadcastJoinThreshold()
+    if 0 <= size_in_bytes_stat(segments) <= threshold:
+        matched = qterms.join(F.broadcast(segments), "term")
+    else:
+        matched = segments.join(F.broadcast(qterms), "term") \
+            .repartition("qid").sortWithinPartitions("qid", "term")
+    matched = matched.selectExpr("qid", *_SEG_COLS)
 
     def run(batches):
         # a query's rows can straddle an Arrow batch edge
@@ -603,10 +629,9 @@ def prepare_index(segments: DataFrame,
     """Collect + broadcast the segments for ``terms`` (None = all — only
     for small indexes; guarded by ``max_segments``: a 10^12-file dictionary
     collected to the driver is an OOM, use ``terms`` or the join path)."""
-    from pyspark.sql import SparkSession  # noqa: F401
     spark = segments.sparkSession
     seg = segments if terms is None else \
-        segments.where(F.col("term").isin(sorted(set(terms))))
+        segments.where(sql_in("term", sorted(set(terms))))
     if terms is None:
         n = seg.count()
         if n > max_segments:
@@ -634,5 +659,5 @@ def wand_topk_prepared(prep: PreparedIndex, queries: DataFrame,
                  for qid, qterms in zip(pdf["qid"], pdf["terms"]))
         return _result_frames(pairs, k)
 
-    return queries.select(F.col("qid").cast("long").alias("qid"), "terms") \
+    return queries.selectExpr("CAST(qid AS BIGINT) AS qid", "terms") \
                   .mapInPandas(run, schema=RESULT_SCHEMA)

@@ -5,9 +5,12 @@ directory (``ExternalSort.java:234-292``); queries then seek by term. Our
 equivalent is a Parquet table of segment rows partitioned by
 ``bucket = pmod(xxhash64(term), n_buckets)``:
 
-- a query's terms map to ≤ |q| buckets → Hive partition pruning means a
-  query reads at most |q| directories, never the whole index
-  (SURVEY.md §7.5 "term-partitioned segment layout");
+- a query's terms map to ≤ |q| buckets, computed on the driver
+  (:func:`term_bucket`, the same XXH64 as Spark's): a load lists and
+  reads only those bucket directories, never the whole index
+  (SURVEY.md §7.5 "term-partitioned segment layout"). Its bucket and
+  term filters are one SQL predicate string, so planning a load costs
+  the same few py4j round trips for 2 terms as for 500;
 - bucket count is chosen so one bucket ≈ one task's worth of data at the
   target scale (at 10^12 files: tens of thousands of buckets);
 - writes are idempotent per bucket → natural unit for checkpoint/resume
@@ -16,10 +19,12 @@ equivalent is a Parquet table of segment rows partitioned by
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..build import SEGMENT_SCHEMA
+from ..plans import sql_in
 
 DEFAULT_BUCKETS = 64
 # what Parquet schema inference finds in a store, given up front so a
@@ -30,6 +35,63 @@ STORE_SCHEMA = StructType(SEGMENT_SCHEMA.fields
 
 def bucket_of(term_col: F.Column, n_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(term_col), F.lit(n_buckets)).cast("int")
+
+
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3, _P4, _P5 = (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5)
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def xxhash64(data: bytes, seed: int = 42) -> int:
+    """XXH64 of ``data`` as a signed 64-bit int: Spark's ``xxhash64`` of a
+    string is this over its UTF-8 bytes with seed 42."""
+    n = len(data)
+    i = 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed & _M64,
+             (seed - _P1) & _M64]
+        while i <= n - 32:
+            for j in range(4):
+                v[j] = _round(v[j], int.from_bytes(data[i:i + 8], "little"))
+                i += 8
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
+             + _rotl(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _round(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i <= n - 8:
+        h ^= _round(0, int.from_bytes(data[i:i + 8], "little"))
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i <= n - 4:
+        h ^= int.from_bytes(data[i:i + 4], "little") * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    while i < n:
+        h ^= data[i] * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+        i += 1
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def term_bucket(term: str, n_buckets: int) -> int:
+    """:func:`bucket_of` of one term, computed on the driver (a JVM
+    literal plan would need a Spark job to read back)."""
+    return xxhash64(term.encode("utf-8")) % n_buckets
 
 
 def save_segments(segments: DataFrame, path: str,
@@ -53,23 +115,29 @@ def load_segments(spark: SparkSession, path: str) -> DataFrame:
 def load_segments_for_terms(spark: SparkSession, path: str,
                             terms: list[str],
                             n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
-    """Partition-pruned load: only the buckets of the given terms are read
-    (check .explain(): PartitionFilters on `bucket`), then the exact term
-    filter is pushed to the parquet row groups. Each term's bucket is a
-    literal expression the optimizer folds to a constant, so this adds
-    no job to :func:`load_segments`'s."""
-    buckets = [bucket_of(F.lit(t), n_buckets) for t in terms]
-    return load_segments(spark, path) \
-        .where(F.col("bucket").isin(*buckets)) \
-        .where(F.col("term").isin(terms))
-
-
-def term_buckets(spark: SparkSession, terms: list[str],
-                 n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
-    """One row ``b`` per term: its bucket, computed by a JVM-only literal
-    plan, which runs no Python stage (a ``createDataFrame(list)`` scan
-    would run one). The same buckets as the literals
-    :func:`load_segments_for_terms` folds into its partition filter."""
-    lits = F.array(*[F.lit(t) for t in terms]).cast("array<string>")
-    return spark.range(1).select(F.explode(lits).alias("term")) \
-                .select(bucket_of(F.col("term"), n_buckets).alias("b"))
+    """The store's rows of ``terms``. Only the directories of the terms'
+    buckets are listed and read: ``basePath`` plus one
+    ``bucket={b1,b2,...}`` glob, so no Spark job runs before the caller's
+    action while the terms span at most
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
+    buckets, whatever ``n_buckets`` is. A bucket with no directory is
+    skipped; when none has one, the whole store is read (and found to
+    hold none of the terms). The bucket and term filters are one SQL
+    predicate (``bucket IN (...) AND term IN (...)``): the bucket filter
+    shows as PartitionFilters in ``.explain()``, the term filter is
+    pushed to the parquet row groups. At log level WARN, Spark logs a
+    harmless ``FileStreamSink`` "no metadata directory" stack for the
+    glob: it probes a single read path as a literal directory."""
+    terms = sorted(set(terms))
+    reader = spark.read.schema(STORE_SCHEMA)
+    if not terms:
+        return reader.parquet().where("false")
+    buckets = sorted({term_bucket(t, n_buckets) for t in terms})
+    glob = f"{path.rstrip('/')}/bucket={{{','.join(map(str, buckets))}}}"
+    try:
+        df = reader.option("basePath", path).parquet(glob)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        df = load_segments(spark, path)
+    return df.where(f"{sql_in('bucket', buckets)} AND {sql_in('term', terms)}")

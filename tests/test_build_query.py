@@ -180,28 +180,42 @@ def test_fast_build_identical_to_classic(spark, docs_sf001):
             assert bytes(classic[t][f]) == bytes(fast[t][f]), (t, f)
 
 
-@pytest.mark.parametrize("max_records", [None, 1],
-                         ids=["batch_default", "batch_1"])
-def test_broadcast_mode_matches_join_mode(spark, built, oracle, max_records):
-    """Both physical query strategies must return identical results, also
-    when every joined row is its own Arrow batch (``maxRecordsPerBatch`` 1):
-    then each multi-term query's rows straddle a batch edge in join mode."""
+@pytest.mark.parametrize(
+    "max_records,threshold",
+    [(None, None), (1, None), (None, "-1"), (1, "-1")],
+    ids=["batch_default", "batch_1", "forced_batch_default",
+         "forced_batch_1"])
+def test_broadcast_mode_matches_join_mode(spark, built, oracle, max_records,
+                                          threshold):
+    """Both physical query strategies must return identical results, in
+    both join-mode shapes (segments broadcast under the default
+    ``autoBroadcastJoinThreshold``; query terms broadcast and rows
+    exchanged by qid at −1), also when every joined row is its own Arrow
+    batch (``maxRecordsPerBatch`` 1): then each multi-term query's rows
+    straddle a batch edge in join mode."""
+    from candidategeneration_spark import plans
     segs, _ = built
     qdf = spark.createDataFrame(
         [(qid, terms) for qid, terms in QUERIES],
         "qid long, terms array<string>")
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key, None)
+    confs = {"spark.sql.execution.arrow.maxRecordsPerBatch": max_records,
+             "spark.sql.autoBroadcastJoinThreshold": threshold}
+    old = {key: spark.conf.get(key, None) for key in confs}
     try:
-        if max_records is not None:
-            spark.conf.set(key, str(max_records))
-        a = _by_qid(Q.wand_topk(segs, qdf, k=10, mode="join").collect())
+        for key, value in confs.items():
+            if value is not None:
+                spark.conf.set(key, str(value))
+        join = Q.wand_topk(segs, qdf, k=10, mode="join")
+        exchanged = "hashpartitioning(qid" in plans.explain_str(join, "simple")
+        assert exchanged == (threshold == "-1")
+        a = _by_qid(join.collect())
         b = _by_qid(Q.wand_topk(segs, qdf, k=10, mode="broadcast").collect())
     finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+        for key, value in old.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
     assert a == b and len(a) > 0
     for qid, terms in QUERIES:
         assert a.get(qid, []) == oracle.topk(terms, k=10), qid

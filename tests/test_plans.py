@@ -34,8 +34,10 @@ def test_filter_pushdown_reaches_scan(spark):
 
 
 def test_query_join_is_broadcast_not_shuffle(spark, docs_sf001):
-    """wand_topk joins segments × query terms: the tiny query side must
-    broadcast; the segment table must never move through a SortMergeJoin."""
+    """wand_topk joins segments × query terms: one side broadcasts (the
+    segments when Catalyst sizes them under
+    ``spark.sql.autoBroadcastJoinThreshold``, else the tiny query side);
+    the segment table must never move through a SortMergeJoin."""
     from candidategeneration_spark.build import build_index
     segments, _ = build_index(docs_sf001, dbigram_distance=None)
     qdf = spark.createDataFrame([(0, ["fast", "key"])],
@@ -43,6 +45,32 @@ def test_query_join_is_broadcast_not_shuffle(spark, docs_sf001):
     res = wand_topk(segments, qdf, k=5)
     plans.assert_broadcast_join(res)
     plans.assert_no_shuffle_join_of(res, "SortMergeJoin")
+
+
+def test_small_join_has_no_qid_exchange(spark, docs_sf001, tmp_path):
+    """Join mode on a segment side sized under the broadcast threshold
+    broadcasts the segments and streams the queries: no qid exchange and
+    no sort, so the batch runs in two jobs. At a threshold of -1 the
+    segments stay put and the matched rows are exchanged by qid."""
+    from candidategeneration_spark.build import build_index
+    from candidategeneration_spark.sources import segmentstore as S
+    segments, _ = build_index(docs_sf001, dbigram_distance=None)
+    S.save_segments(segments, str(tmp_path / "store"), n_buckets=8)
+    segments = S.load_segments(spark, str(tmp_path / "store"))
+    qdf = spark.createDataFrame([(0, ["fast", "key"]), (1, ["spark"])],
+                                "qid long, terms array<string>")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    assert 0 <= plans.size_in_bytes_stat(segments) <= 10 << 20
+    try:
+        small = plans.explain_str(wand_topk(segments, qdf, k=5), "simple")
+        spark.conf.set(key, "-1")
+        forced = plans.explain_str(wand_topk(segments, qdf, k=5), "simple")
+    finally:
+        spark.conf.unset(key)
+    assert "BroadcastHashJoin" in small, small
+    assert "hashpartitioning(qid" not in small, small
+    assert "Sort [" not in small, small
+    assert "hashpartitioning(qid" in forced, forced
 
 
 def test_term_dictionary_no_global_window(spark, docs_sf001):

@@ -5,6 +5,8 @@ import os
 import re
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from candidategeneration_spark.relops import HITS_SCALE  # noqa: E402
@@ -250,83 +252,200 @@ def test_segment_store_roundtrip_serves_rank_identical(spark, docs_sf001,
     assert got_pruned == want
 
 
-def test_term_buckets_jvm_only_and_match_python_rdd_scan(spark):
-    """The bucket lookup of the pruned load is a JVM-only literal plan
-    (no Python-RDD scan, so no package-less Python workers) and computes
-    the same bucket set as the createDataFrame(list) scan it replaced."""
+def test_term_bucket_matches_spark_xxhash64(spark):
+    """The driver-side XXH64 of the pruned load equals Spark's
+    ``xxhash64`` and its bucket equals :func:`bucket_of`, on strings of
+    0-80 characters with non-ASCII, astral, NUL and ``\\x1f``
+    characters, at 1, 8, 16 and 64 buckets."""
+    import random
     from pyspark.sql import functions as F
     from candidategeneration_spark.sources import segmentstore as S
 
-    def python_rdd_scan(terms, n):
-        return {r["b"] for r in
-                spark.createDataFrame([(t,) for t in terms], "term string")
-                .select(S.bucket_of(F.col("term"), n).alias("b"))
-                .distinct().collect()}
-
-    def python_scan_free(df):
-        qe = df._jdf.queryExecution()
-        return ("LogicalRDD" not in qe.analyzed().toString()
-                and "ExistingRDD" not in qe.executedPlan().toString())
-
-    assert not python_scan_free(
-        spark.createDataFrame([("t",)], "term string"))  # the probe works
-    cases = [["fast", "key", "fast"], ["a\x1fb", "naïve", "", "x" * 300],
-             [f"t{i}" for i in range(200)]]
-    for terms in cases:
-        for n in (1, 8, 64):
-            got = S.term_buckets(spark, terms, n)
-            assert python_scan_free(got)
-            assert {r["b"] for r in got.collect()} == \
-                python_rdd_scan(terms, n), (terms, n)
-    empty = S.term_buckets(spark, [], 8)
-    assert python_scan_free(empty)
-    assert empty.collect() == []
+    rng = random.Random(14)
+    alphabet = "az09_'\\${} \x00\x1féß€中😀\U0010fffd"
+    strings = ["", "fast", "\x1f", "naïve", "x" * 300] + [
+        "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 80)))
+        for _ in range(1200)]
+    cols = [F.xxhash64("t").alias("h")] + [
+        S.bucket_of(F.col("t"), n).alias(f"b{n}") for n in (1, 8, 16, 64)]
+    rows = spark.createDataFrame([(s,) for s in strings], "t string") \
+                .select("t", *cols).collect()
+    assert len(rows) == len(strings)
+    for r in rows:
+        assert S.xxhash64(r["t"].encode("utf-8")) == r["h"], r["t"]
+        for n in (1, 8, 16, 64):
+            assert S.term_bucket(r["t"], n) == r[f"b{n}"], (r["t"], n)
 
 
 def test_store_loads_run_no_job_before_their_action(spark, docs_sf001,
                                                     tmp_path):
     """Both store loads are planned with no Spark job (no Parquet schema
-    inference, no bucket lookup) and return the rows of the inferred
-    read; an empty store directory gives no rows."""
+    inference, no bucket lookup, no partition-listing job at the default
+    64 buckets) and return the rows of the inferred read; an empty store
+    directory gives no rows."""
     from pyspark.sql import functions as F
     from candidategeneration_spark.build import build_index
     from candidategeneration_spark.sources import segmentstore as S
 
     segments, _ = build_index(docs_sf001.limit(40), dbigram_distance=None)
-    path = str(tmp_path / "segstore")
-    S.save_segments(segments, path, n_buckets=8)
-    inferred = spark.read.parquet(path)
-    terms = sorted(r["term"] for r in inferred.select("term").limit(5)
-                   .collect()) + ["zzznotaterm"]
-
+    # placeholder rows so that the 64-bucket store has more bucket
+    # directories than Spark lists without a job (32)
+    filler = _placeholder_segments(spark, [f"filler{i}" for i in range(400)])
+    segments = segments.unionByName(filler).cache()
     sc = spark.sparkContext
-    group = "store-load-no-job"
-    sc.setJobGroup(group, "store loads, no action")
-    try:
-        full = S.load_segments(spark, path)
-        pruned = S.load_segments_for_terms(spark, path, terms, n_buckets=8)
-        none = S.load_segments_for_terms(spark, path, [], n_buckets=8)
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    for n in (8, 64):
+        path = str(tmp_path / f"segstore{n}")
+        S.save_segments(segments, path, n_buckets=n)
+        assert len([d for d in os.listdir(path)
+                    if d.startswith("bucket=")]) == n
+        inferred = spark.read.parquet(path)
+        terms = sorted(r["term"] for r in inferred.select("term").limit(5)
+                       .collect()) + ["zzznotaterm"]
 
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
+        group = f"store-load-no-job-{n}"
+        sc.setJobGroup(group, "store loads, no action")
+        try:
+            full = S.load_segments(spark, path) if n == 8 else None
+            pruned = S.load_segments_for_terms(spark, path, terms,
+                                               n_buckets=n)
+            none = S.load_segments_for_terms(spark, path, [], n_buckets=n)
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
 
-    assert full.schema == inferred.schema
-    assert rows(full) == rows(inferred)
-    # the folded bucket literals prune partitions like the lookup plan
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    folded = re.search(r"PartitionFilters: \[.*?bucket#\d+ IN \(([\d,]+)\)",
-                       plan)
-    assert folded, plan
-    assert {int(b) for b in folded.group(1).split(",")} == \
-        {r["b"] for r in S.term_buckets(spark, terms, 8).collect()}
-    assert rows(pruned) == rows(inferred.where(F.col("term").isin(terms)))
-    assert len(rows(pruned)) == len(terms) - 1
-    assert none.collect() == []
+        def rows(df):
+            return sorted(tuple(r) for r in df.collect())
+
+        if full is not None:
+            assert full.schema == inferred.schema
+            assert rows(full) == rows(inferred)
+        assert pruned.schema == inferred.schema
+        # the bucket literals prune partitions like Spark's own bucket_of
+        plan = pruned._jdf.queryExecution().executedPlan().toString()
+        folded = re.search(
+            r"PartitionFilters: \[.*?bucket#\d+ IN \(([\d,]+)\)", plan)
+        assert folded, plan
+        want = spark.createDataFrame([(t,) for t in terms], "term string") \
+                    .select(S.bucket_of(F.col("term"), n).alias("b"))
+        assert {int(b) for b in folded.group(1).split(",")} == \
+            {r["b"] for r in want.collect()}
+        assert rows(pruned) == rows(inferred.where(F.col("term").isin(terms)))
+        assert len(rows(pruned)) == len(terms) - 1
+        assert none.collect() == []
+    segments.unpersist()
 
     empty = tmp_path / "empty"
     empty.mkdir()
     assert S.load_segments(spark, str(empty)).collect() == []
+
+
+def _placeholder_segments(spark, terms):
+    """One empty segment row per term (only the terms matter to loads)."""
+    from candidategeneration_spark.build import SEGMENT_SCHEMA
+    rows = [(t, 1, 0, b"", b"", b"", [], [], [], [], [], []) for t in terms]
+    return spark.createDataFrame(rows, SEGMENT_SCHEMA)
+
+
+def _fake_store(spark, path, terms, n_buckets):
+    """A store of :func:`_placeholder_segments` rows."""
+    from candidategeneration_spark.sources import segmentstore as S
+    segs = _placeholder_segments(spark, terms)
+    S.save_segments(segs, path, n_buckets=n_buckets)
+    return segs
+
+
+def _hostile_terms(n: int, seed: int) -> list[str]:
+    import random
+    rng = random.Random(seed)
+    alphabet = ["a", "Z", "7", "_", "'", "\\", "$", "{", "}", "${x}",
+                "\x00", "\x1f", " ", ",", ")", "é", "中", "😀",
+                "\U0001f9ea", "\\u0041", "\\'", "''"]
+    out = {"", "'", "\\", "${x}", "${spark.app.name}", "\x00", "\x1f",
+           "😀", "\\u0041", "A", "' OR 'a' = 'a"}
+    while len(out) < n:
+        out.add("".join(rng.choice(alphabet)
+                        for _ in range(rng.randint(1, 12))))
+    return sorted(out)
+
+
+def test_one_predicate_filters_match_isin_on_hostile_terms(spark, tmp_path):
+    """The SQL-string term filters of the pruned load and of
+    ``prepare_index`` return exactly what ``Column.isin`` returns, for
+    terms with quotes, backslashes, ``${...}``, NUL, ``\\x1f`` and astral
+    characters (half of the asked terms are in the store)."""
+    from pyspark.sql import functions as F
+    from candidategeneration_spark import queryengine as Q
+    from candidategeneration_spark.sources import segmentstore as S
+
+    terms = _hostile_terms(320, seed=1)
+    stored, asked = terms[::2], terms
+    path = str(tmp_path / "hostile")
+    segs = _fake_store(spark, path, stored, n_buckets=8)
+    want = {r["term"] for r in segs.where(F.col("term").isin(asked))
+            .select("term").collect()}
+    assert len(want) == len(stored)
+    got = {r["term"] for r in S.load_segments_for_terms(
+        spark, path, asked, n_buckets=8).select("term").collect()}
+    assert got == want
+    prep = Q.prepare_index(segs, asked)
+    try:
+        assert {t for t, _ in prep.bc.value} == want
+    finally:
+        prep.bc.destroy()
+
+
+def test_pruned_load_skips_buckets_without_directory(spark, tmp_path):
+    """A pruned load reads the directories of the terms' buckets that
+    exist; when none exists it gives no rows; a missing store raises."""
+    from pyspark.errors import AnalysisException
+    from candidategeneration_spark.sources import segmentstore as S
+
+    n = 64
+    stored = ["alpha", "beta", "gamma"]
+    path = str(tmp_path / "sparse")
+    _fake_store(spark, path, stored, n_buckets=n)
+    present = {S.term_bucket(t, n) for t in stored}
+    absent = [t for t in (f"absent{i}" for i in range(200))
+              if S.term_bucket(t, n) not in present]
+    assert len(absent) > 2
+
+    def terms_of(df):
+        return sorted(r["term"] for r in df.select("term").collect())
+
+    mixed = S.load_segments_for_terms(spark, path, ["beta", *absent[:2]], n)
+    assert terms_of(mixed) == ["beta"]
+    none = S.load_segments_for_terms(spark, path, absent[:3], n)
+    assert terms_of(none) == []
+    with pytest.raises(AnalysisException):
+        S.load_segments_for_terms(spark, str(tmp_path / "nostore"),
+                                  ["alpha"], n)
+
+
+def test_store_and_prepare_plans_cost_constant_py4j_calls(
+        spark, tmp_path, py4j_calls):
+    """Planning a pruned load, and ``prepare_index(terms)``, makes about
+    as many py4j round trips for 500 terms as for 2: their term filters
+    are one SQL string, not a Column per term."""
+    from candidategeneration_spark import queryengine as Q
+    from candidategeneration_spark.sources import segmentstore as S
+
+    terms = [f"t{i:04d}" for i in range(600)]
+    path = str(tmp_path / "calls")
+    segs = _fake_store(spark, path, terms, n_buckets=8).cache()
+    segs.count()
+
+    def calls(f):
+        with py4j_calls:
+            out = f()
+        if isinstance(out, Q.PreparedIndex):
+            out.bc.destroy()
+        return py4j_calls.n
+
+    for plan in (lambda ts: S.load_segments_for_terms(spark, path, ts, 8),
+                 lambda ts: Q.prepare_index(segs, ts)):
+        plan(terms[:2])  # warm: first-call imports and JVM class lookups
+        few = min(calls(lambda: plan(terms[:2])) for _ in range(2))
+        many = min(calls(lambda: plan(terms[:500])) for _ in range(2))
+        assert many - few <= 5, (few, many)
+    segs.unpersist()

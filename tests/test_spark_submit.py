@@ -108,3 +108,25 @@ def test_zip_install_ships_nothing_and_writes_no_zip(tmp_path, monkeypatch):
     config.ensure_on_executors(Session())
     assert Context.shipped == []
     assert "app-zip-install" not in config._ATTACHED
+
+
+def test_get_spark_keeps_spark_defaults_master(tmp_path):
+    """With no master and no running gateway, ``get_spark()`` takes
+    ``spark.master`` from ``spark-defaults.conf`` in ``SPARK_CONF_DIR``
+    instead of overriding it with ``local[SPARK_GRAFT_CPUS]``."""
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text(
+        "# comment\nspark.master   local[3]\n")
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("PYSPARK_SUBMIT_ARGS", "SPARK_CONF_DIR")}
+    env.update(SPARK_CONF_DIR=str(conf), SPARK_GRAFT_CPUS="2",
+               PYTHONPATH=REPO)
+    script = ("from candidategeneration_spark.config import get_spark\n"
+              "spark = get_spark()\n"
+              "print('MASTER', spark.sparkContext.master)\n"
+              "spark.stop()\n")
+    out = subprocess.run([sys.executable, "-c", script], capture_output=True,
+                         text=True, timeout=300, cwd=str(tmp_path), env=env)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "MASTER local[3]" in out.stdout.splitlines(), out.stdout[-2000:]
