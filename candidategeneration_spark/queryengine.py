@@ -583,8 +583,9 @@ def wand_topk(segments: DataFrame, queries: DataFrame, k: int = 10,
     # per-query term dedup BEFORE the explode (a repeated query term must
     # not double-count its list): array_distinct is a map-side expression,
     # where the old (qid, term).distinct() paid a whole extra shuffle stage
-    # per batch. Contract: one row per qid (duplicated qids would merge
-    # into one group below).
+    # per batch. Precondition: one row per qid. A duplicated qid can come
+    # back as more than one top-k group (the small shape does not
+    # repartition by qid).
     qterms = queries.selectExpr(
         "CAST(qid AS BIGINT) AS qid",
         "explode(array_distinct(terms)) AS term")

@@ -37,6 +37,8 @@ def bucket_of(term_col: F.Column, n_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(term_col), F.lit(n_buckets)).cast("int")
 
 
+# the seed of Spark's ``xxhash64`` function, so of the store's buckets
+_SEED = 42
 _M64 = (1 << 64) - 1
 _P1, _P2, _P3, _P4, _P5 = (
     0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
@@ -51,14 +53,14 @@ def _round(acc: int, lane: int) -> int:
     return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
 
 
-def xxhash64(data: bytes, seed: int = 42) -> int:
-    """XXH64 of ``data`` as a signed 64-bit int: Spark's ``xxhash64`` of a
-    string is this over its UTF-8 bytes with seed 42."""
+def xxhash64(data: bytes) -> int:
+    """XXH64 of ``data`` with ``_SEED``, as a signed 64-bit int: Spark's
+    ``xxhash64`` of a string is this over its UTF-8 bytes."""
     n = len(data)
     i = 0
     if n >= 32:
-        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed & _M64,
-             (seed - _P1) & _M64]
+        v = [(_SEED + _P1 + _P2) & _M64, (_SEED + _P2) & _M64, _SEED,
+             (_SEED - _P1) & _M64]
         while i <= n - 32:
             for j in range(4):
                 v[j] = _round(v[j], int.from_bytes(data[i:i + 8], "little"))
@@ -68,7 +70,7 @@ def xxhash64(data: bytes, seed: int = 42) -> int:
         for x in v:
             h = ((h ^ _round(0, x)) * _P1 + _P4) & _M64
     else:
-        h = (seed + _P5) & _M64
+        h = _SEED + _P5
     h = (h + n) & _M64
     while i <= n - 8:
         h ^= _round(0, int.from_bytes(data[i:i + 8], "little"))
@@ -112,32 +114,54 @@ def load_segments(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(STORE_SCHEMA).parquet(path)
 
 
+def _glob(path: str, buckets: list[int]) -> str:
+    return f"{path}/bucket={{{','.join(map(str, buckets))}}}"
+
+
+def _bucket_paths(path: str, buckets: list[int]) -> list[str]:
+    """Read paths of ``buckets`` (sorted, distinct) under ``path``: the
+    literal directory of one bucket, else two globs over disjoint halves.
+    Spark probes a lone read path as a literal directory
+    (``FileStreamSink.hasMetadata``) and logs a WARN stack when it is a
+    glob; it skips that probe for two or more paths."""
+    if len(buckets) == 1:
+        return [f"{path}/bucket={buckets[0]}"]
+    half = len(buckets) // 2
+    return [_glob(path, buckets[:half]), _glob(path, buckets[half:])]
+
+
 def load_segments_for_terms(spark: SparkSession, path: str,
                             terms: list[str],
                             n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
     """The store's rows of ``terms``. Only the directories of the terms'
-    buckets are listed and read: ``basePath`` plus one
-    ``bucket={b1,b2,...}`` glob, so no Spark job runs before the caller's
-    action while the terms span at most
-    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
-    buckets, whatever ``n_buckets`` is. A bucket with no directory is
-    skipped; when none has one, the whole store is read (and found to
-    hold none of the terms). The bucket and term filters are one SQL
+    buckets are listed and read: ``basePath`` plus :func:`_bucket_paths`,
+    so no Spark job runs before the caller's action while the terms span
+    at most ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+    (32) buckets, whatever ``n_buckets`` is. A bucket with no directory
+    is skipped: when a read path matches none, the load retries with one
+    glob over all the buckets, and when none has a directory, the whole
+    store is read (and found to hold none of the terms); Spark may log a
+    WARN stack on these retries. The bucket and term filters are one SQL
     predicate (``bucket IN (...) AND term IN (...)``): the bucket filter
     shows as PartitionFilters in ``.explain()``, the term filter is
-    pushed to the parquet row groups. At log level WARN, Spark logs a
-    harmless ``FileStreamSink`` "no metadata directory" stack for the
-    glob: it probes a single read path as a literal directory."""
+    pushed to the parquet row groups."""
     terms = sorted(set(terms))
     reader = spark.read.schema(STORE_SCHEMA)
     if not terms:
         return reader.parquet().where("false")
     buckets = sorted({term_bucket(t, n_buckets) for t in terms})
-    glob = f"{path.rstrip('/')}/bucket={{{','.join(map(str, buckets))}}}"
-    try:
-        df = reader.option("basePath", path).parquet(glob)
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
+    root = path.rstrip("/")
+    attempts = [_bucket_paths(root, buckets)]
+    if len(buckets) > 1:
+        attempts.append([_glob(root, buckets)])
+    reader = reader.option("basePath", path)
+    for paths in attempts:
+        try:
+            df = reader.parquet(*paths)
+            break
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+    else:
         df = load_segments(spark, path)
     return df.where(f"{sql_in('bucket', buckets)} AND {sql_in('term', terms)}")

@@ -397,7 +397,8 @@ def test_one_predicate_filters_match_isin_on_hostile_terms(spark, tmp_path):
 
 def test_pruned_load_skips_buckets_without_directory(spark, tmp_path):
     """A pruned load reads the directories of the terms' buckets that
-    exist; when none exists it gives no rows; a missing store raises."""
+    exist, also when one of its two globs matches none; when none exists
+    it gives no rows; a missing store raises."""
     from pyspark.errors import AnalysisException
     from candidategeneration_spark.sources import segmentstore as S
 
@@ -413,13 +414,64 @@ def test_pruned_load_skips_buckets_without_directory(spark, tmp_path):
     def terms_of(df):
         return sorted(r["term"] for r in df.select("term").collect())
 
-    mixed = S.load_segments_for_terms(spark, path, ["beta", *absent[:2]], n)
+    # two absent buckets on one side of beta's: one glob matches nothing
+    beta = S.term_bucket("beta", n)
+    below = {S.term_bucket(t, n): t for t in absent
+             if S.term_bucket(t, n) < beta}
+    above = {S.term_bucket(t, n): t for t in absent
+             if S.term_bucket(t, n) > beta}
+    side = list((below if len(below) >= 2 else above).values())[:2]
+    mixed = S.load_segments_for_terms(spark, path, ["beta", *side], n)
     assert terms_of(mixed) == ["beta"]
+    assert {os.path.basename(os.path.dirname(f))
+            for f in mixed.inputFiles()} == {f"bucket={beta}"}
     none = S.load_segments_for_terms(spark, path, absent[:3], n)
     assert terms_of(none) == []
     with pytest.raises(AnalysisException):
         S.load_segments_for_terms(spark, str(tmp_path / "nostore"),
                                   ["alpha"], n)
+
+
+def test_pruned_load_logs_no_metadata_probe_stack(spark, tmp_path):
+    """A pruned load's read paths are one literal bucket directory or
+    two globs, so Spark's ``FileStreamSink`` does not probe a glob as a
+    directory and log a WARN ``FileNotFoundException`` stack, as it does
+    for one ``bucket={...}`` glob."""
+    from candidategeneration_spark.sources import segmentstore as S
+
+    n = 64
+    stored = [f"t{i}" for i in range(40)]
+    path = str(tmp_path / "probe")
+    _fake_store(spark, path, stored, n_buckets=n)
+    log4j = spark._jvm.org.apache.logging.log4j
+    sink = log4j.LogManager.getLogger(
+        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink")
+    writer = spark._jvm.java.io.StringWriter()
+    appender = log4j.core.appender.WriterAppender.createAppender(
+        log4j.core.layout.PatternLayout.createDefaultLayout(), None, writer,
+        "probe-capture", False, True)
+    appender.start()
+    sink.setLevel(log4j.Level.WARN)
+    sink.addAppender(appender)
+
+    def logged(load):
+        writer.getBuffer().setLength(0)
+        load().count()
+        return writer.toString()
+
+    try:
+        buckets = sorted({S.term_bucket(t, n) for t in stored})
+        assert "FileNotFoundException" in logged(
+            lambda: spark.read.schema(S.STORE_SCHEMA)
+            .option("basePath", path)
+            .parquet(f"{path}/bucket={{{buckets[0]},{buckets[1]}}}"))
+        for k in (1, 2, 3, 40):
+            assert logged(lambda: S.load_segments_for_terms(
+                spark, path, stored[:k], n)) == "", k
+    finally:
+        sink.removeAppender(appender)
+        sink.setLevel(None)
+        appender.stop()
 
 
 def test_store_and_prepare_plans_cost_constant_py4j_calls(
