@@ -10,11 +10,15 @@ external merge with spill for free.
 Lifecycle of the d-bigram build (SURVEY.md §3.1):
 
     read corpus → mapInArrow(tokenize + per-doc tf)        [one Python pass]
+      (the token table, the in-memory build's one cached table)
     → explode(arrays_zip(terms, tfs)) → unigram postings   [JVM]
     → per-term df (shuffle on term) + idf                  [pandas UDF]
     → broadcast-join df/idf onto the postings              [JVM]
     → quantized BM25 per posting (JVM column math)
-    → doc-local pair scoring over the same token table     [mapInPandas]
+    → ∪ one (doc_id, toks) row per doc from the token table
+    → repartition(doc_id) + sort(doc_id, term)
+    → doc-local pair scoring per whole doc, the doc's      [mapInArrow]
+      unigram rows passed through
     → repartition(term) + sort(term, doc_id)
     → mapInArrow(columnar delta+VByte, block-max)           [Arrow in/out]
     → segments DataFrame / Parquet
@@ -47,6 +51,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType, BinaryType, IntegerType, LongType, StringType, StructField,
     StructType,
@@ -85,15 +90,14 @@ PAIR_SEP = "\x1f"  # string analogue of the reference's a<<32|b long packing
 #   scale the join would then shuffle the term table again.
 DOCS_PER_TOKENIZE_TASK = 512       # ~30 ms of Arrow tokenize+tf per task
 POSTINGS_PER_ENCODE_TASK = 16_384  # ~35 ms of vectorized encode per task
-# Pair-pass kernel parallelism (round 5): the per-doc-map join that feeds
-# _pair_rows_scored is a SMALL shuffle at bench scale, so AQE coalesces
-# its output to ONE partition — the entire pair kernel (the single most
+# Pair-pass kernel parallelism (round 5): the doc_id exchange that feeds
+# _pair_rows_scored is a SMALL shuffle at bench scale, so AQE would
+# coalesce it to ONE partition — the entire pair kernel (the single most
 # expensive CPU stage of the build, ~6 µs/token) then runs on one task.
 # The kernel width (token volume / this target, ~50 ms of kernel per
-# task, capped at 4×cores) is carried by the join's OWN input exchanges
-# (_pair_join: both sides hash-repartitioned by doc_id at that count, so
-# the join reuses the partitioning and AQE leaves it alone) — no extra
-# shuffle at any scale.
+# task, capped at 4×cores) is that exchange's explicit partition count
+# (_pair_pass: an explicit-count repartition, which AQE leaves alone) —
+# no extra shuffle at any scale.
 TOKENS_PER_PAIR_TASK = 8_192
 # build_segments sizes from an UPPER BOUND (distance × total tokens,
 # ~1.5-2× the deduped pair count) and pair rows are ~2× heavier than
@@ -400,6 +404,7 @@ PAIR_SCORED_SCHEMA = StructType([
     StructField("s2", LongType()),
     StructField("score_q", LongType()),
 ])
+_PAIR_ARROW = to_arrow_schema(PAIR_SCORED_SCHEMA)
 
 
 def _pair_rows_scored(pdf: pd.DataFrame, distance: int,
@@ -412,11 +417,11 @@ def _pair_rows_scored(pdf: pd.DataFrame, distance: int,
     when present — the tokenize-once path; ``__text`` re-tokenizes here
     (the standalone :func:`build_pair_postings` shape).
 
-    ``__terms`` is sorted ascending (Spark ``sort_array``; pure-ASCII tokens
-    so JVM and NumPy string orders agree) — each pair side's unigram score
-    is a vectorized lookup. s1 belongs to the smaller term of the pair
-    (the oracle's t1), s2 to the larger; the stored pair score is s1+s2
-    (``InvertedIndex.java:302-307``).
+    ``__terms`` is sorted ascending (the pair exchange's sort; pure-ASCII
+    tokens so JVM and NumPy string orders agree) — each pair side's
+    unigram score is a vectorized lookup. s1 belongs to the smaller term
+    of the pair (the oracle's t1), s2 to the larger; the stored pair
+    score is s1+s2 (``InvertedIndex.java:302-307``).
 
     Round-5 close: the kernel is vectorized across the WHOLE Arrow batch
     (the previous form looped per document — per-doc Python constants and
@@ -479,14 +484,13 @@ def _pair_rows_scored(pdf: pd.DataFrame, distance: int,
     term_key = term_doc * n_vocab + vid[:n_term]
     tok_key = tok_doc * n_vocab + vid[n_term:]
     # doc-major keys are globally sorted iff each doc's terms are sorted
-    # unique (sort_array + one-row-per-(term,doc) guarantee it); a
+    # unique (the exchange's sort + one-row-per-(term,doc) guarantee it); a
     # violation means the caller hand-built the score map — refuse rather
     # than silently mis-pair
     if n_term > 1 and (np.diff(term_key) <= 0).any():
         raise ValueError(
             "pair pass: per-doc score map terms must be sorted and "
-            "unique (build_pair_postings builds them with sort_array "
-            "over one row per term)")
+            "unique (the pair pass sorts one row per term by term)")
     pos = np.searchsorted(term_key, tok_key)
     # every token must resolve to its term: scored_uni must be the
     # UNFILTERED unigram postings of the doc (build_index guarantees
@@ -566,70 +570,27 @@ def build_pair_postings(docs: DataFrame, scored_uni: DataFrame,
     unigram table on (term, doc_id) — two shuffle joins over the largest
     intermediate of the whole build (pair postings ≈ 7× unigrams). The
     reference computes pair scores from an in-memory per-doc score map
-    (``InvertedIndex.java:302-307``); this is the Spark shape of that idea:
+    (``InvertedIndex.java:302-307``); this is the Spark shape of that idea,
+    one doc_id exchange (:func:`_pair_pass`):
 
-        scored_uni → groupBy(doc_id) collect (term, score) arrays   [1× uni]
-        docs ⋈ per-doc map on doc_id                                [1× corpus]
-        mapInPandas: re-tokenize + window pairs + searchsorted score
+        scored_uni rows ∪ one (doc_id, __text) row per doc
+        → repartition(doc_id) + sort(doc_id, term)       [1× uni + corpus]
+        → mapInArrow: per doc, re-tokenize + window pairs + score lookup
 
     (:func:`build_pair_postings_from_tokens` is the tokenize-once twin —
-    build_index feeds it the persisted token table so this re-tokenize
-    disappears from the end-to-end build.)
+    build_index runs the same pass over its token table, so this
+    re-tokenize is not part of the end-to-end build.)
 
-    The giant pair table is *born scored* and never joins anything. The two
-    shuffles that remain move the unigram-sized map and the corpus — at
-    10^12 files that's ~8× less shuffle I/O than shuffling pair postings
-    twice. Output carries the SEPARATE component streams (s1, s2) — X2
-    parity with the reference's precomputed pair lists
-    (``BigramIndex.java:44-85``, ``algo_toplayer.cpp:477-564``).
+    The giant pair table is *born scored* and never joins anything; the
+    one shuffle moves the unigram rows and the corpus. Output carries the
+    SEPARATE component streams (s1, s2) — X2 parity with the reference's
+    precomputed pair lists (``BigramIndex.java:44-85``,
+    ``algo_toplayer.cpp:477-564``).
     """
-    from .config import ensure_on_executors
-    ensure_on_executors(docs.sparkSession)
-    joined = _pair_join(
-        docs.select(F.col(id_col).cast("long").alias("doc_id"),
-                    F.col(text_col).alias("__text")),
-        scored_uni, num_partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _pair_rows_scored(pdf, dbigram_distance, stopwords)
-
-    return joined.mapInPandas(gen, schema=PAIR_SCORED_SCHEMA)
-
-
-def _pair_join(docside: DataFrame, scored_uni: DataFrame,
-               num_partitions: int | None) -> DataFrame:
-    """docside ⋈ per-doc score map on doc_id, with the pair-kernel
-    parallelism carried by the join's OWN exchanges.
-
-    With ``num_partitions`` set, both join inputs are hash-repartitioned
-    by (doc_id, num_partitions): the join reuses that partitioning (no
-    post-join exchange) and AQE never coalesces an explicit-count user
-    repartition, so the kernel runs at exactly ``num_partitions`` tasks.
-    An earlier round-5 form repartitioned AFTER the join — a third,
-    corpus-sized round-robin shuffle on every d-bigram build; sizing the
-    join-input exchanges instead costs nothing extra at any scale (the
-    doc-side shuffle and the score-map aggregation exchange must happen
-    anyway — they just happen at the kernel's width)."""
-    if num_partitions is None:
-        return docside.join(_per_doc_score_map(scored_uni), "doc_id")
-    # repartition BEFORE the groupBy: the aggregation's clustering
-    # requirement is satisfied by the explicit hash partitioning, so the
-    # map side pays exactly one exchange, already at the kernel's width
-    score_map = _per_doc_score_map(
-        scored_uni.repartition(num_partitions, "doc_id"))
-    return docside.repartition(num_partitions, "doc_id") \
-                  .join(score_map, "doc_id")
-
-
-def _per_doc_score_map(scored_uni: DataFrame) -> DataFrame:
-    """(doc_id, __terms sorted, __scores aligned) — the Spark shape of the
-    reference's in-memory per-doc score map (``InvertedIndex.java:302-307``)."""
-    return (scored_uni.groupBy("doc_id")
-            .agg(F.sort_array(F.collect_list(
-                F.struct("term", "score_q"))).alias("__u"))
-            .select("doc_id", F.col("__u.term").alias("__terms"),
-                    F.col("__u.score_q").alias("__scores")))
+    doc_rows = docs.select(F.col(id_col).cast("long").alias("doc_id"),
+                           F.col(text_col).alias("__text"))
+    return _pair_pass(scored_uni, doc_rows, dbigram_distance,
+                      num_partitions, stopwords)
 
 
 def build_pair_postings_from_tokens(tokens_df: DataFrame,
@@ -639,24 +600,101 @@ def build_pair_postings_from_tokens(tokens_df: DataFrame,
                                     ) -> DataFrame:
     """:func:`build_pair_postings` fed by the tokenize-once table
     (:func:`tokenize_docs`) — the pair kernel skips its re-tokenize and
-    reads ``__toks`` straight off the Arrow batch. Same output, same
-    doc-local scoring; the joined shuffle moves token arrays instead of
-    raw text (comparable bytes — tokens are the text minus punctuation).
+    reads each doc's ``toks`` off the exchange. Same output, same
+    doc-local scoring; the exchange moves token arrays instead of raw text
+    (comparable bytes — tokens are the text minus punctuation).
 
     ``num_partitions``: explicit kernel parallelism (see
-    TOKENS_PER_PAIR_TASK) — without it AQE coalesces the small join
-    output to one task at bench scale and the kernel serializes."""
+    TOKENS_PER_PAIR_TASK) — without it AQE coalesces the small exchange
+    to one task at bench scale and the kernel serializes."""
+    return _pair_pass(scored_uni, _token_rows(tokens_df), dbigram_distance,
+                      num_partitions)
+
+
+def _token_rows(tokens_df: DataFrame) -> DataFrame:
+    """The pair pass's document rows from the token table."""
+    return tokens_df.select("doc_id", F.col("toks").alias("__toks"))
+
+
+def _pair_pass(scored_uni: DataFrame, doc_rows: DataFrame, distance: int,
+               num_partitions: int | None, stopwords=None,
+               passthrough: bool = False) -> DataFrame:
+    """Doc-local pair scoring over ONE doc_id exchange → PAIR_SCORED rows.
+
+    ``doc_rows``: (doc_id, ``__toks`` | ``__text``), one row per doc. The
+    scored unigram rows and the document rows are hash-partitioned by
+    doc_id together and sorted by (doc_id, term); a document row has a
+    NULL term, and NULL sorts first, so every doc arrives as its document
+    row followed by its terms in ascending order — the per-doc score map
+    of the reference (``InvertedIndex.java:302-307``) with no aggregate,
+    no second shuffle and no join. A streaming ``mapInArrow`` cuts the
+    sorted rows into whole docs (:func:`_whole_groups`) and scores each
+    batch of docs with :func:`_pair_rows_scored`; memory stays one Arrow
+    batch plus one doc.
+
+    ``passthrough``: also emit every scored unigram row (s1, s2 NULL), so
+    that a build reading this output (:func:`_segment_rows`) consumes its
+    scored unigrams once. ``num_partitions``: the exchange's explicit
+    width — AQE never coalesces an explicit-count repartition; ``None``
+    leaves it to ``spark.sql.shuffle.partitions`` and AQE."""
     from .config import ensure_on_executors
-    ensure_on_executors(tokens_df.sparkSession)
-    joined = _pair_join(
-        tokens_df.select("doc_id", F.col("toks").alias("__toks")),
-        scored_uni, num_partitions)
+    ensure_on_executors(doc_rows.sparkSession)
+    side = doc_rows.columns[1]
+    side_type = "array<string>" if side == "__toks" else "string"
+    cols = {"term": "string", "score_q": "long"}
+    if passthrough:
+        cols["tf"] = "long"
+    uni = scored_uni.select("doc_id", *cols,
+                            F.lit(None).cast(side_type).alias(side))
+    heads = doc_rows.select("doc_id", *(F.lit(None).cast(t).alias(c)
+                                        for c, t in cols.items()), side)
+    rows = uni.unionByName(heads)
+    rows = rows.repartition("doc_id") if num_partitions is None \
+        else rows.repartition(num_partitions, "doc_id")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _pair_rows_scored(pdf, dbigram_distance)
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in _whole_groups(batches, "doc_id"):
+            yield from _pair_batch(batch, distance, stopwords, passthrough)
 
-    return joined.mapInPandas(gen, schema=PAIR_SCORED_SCHEMA)
+    return rows.sortWithinPartitions("doc_id", "term") \
+               .mapInArrow(gen, schema=PAIR_SCORED_SCHEMA)
+
+
+def _pair_batch(batch: pa.RecordBatch, distance: int, stopwords,
+                passthrough: bool) -> Iterator[pa.RecordBatch]:
+    """Whole docs of the pair exchange, sorted by (doc_id, term) with each
+    doc's document row (NULL term) first → PAIR_SCORED_SCHEMA batches.
+
+    A doc with no document row yields no pairs; a doc with document rows
+    but no scored rows reaches :func:`_pair_rows_scored`, which raises if
+    it has a pair to score."""
+    term = batch.column("term")
+    is_doc = term.is_null().to_numpy(zero_copy_only=False)
+    starts = _group_starts(batch.column("doc_id"))
+    has_doc = is_doc[starts]
+    if is_doc.sum() != has_doc.sum():
+        raise ValueError("pair pass: a doc_id has more than one document "
+                         "row — doc ids must be unique")
+    uni = batch.filter(pa.array(~is_doc))
+    n_terms = np.diff(np.append(starts, batch.num_rows)) - has_doc
+    side = batch.schema.names[-1]
+    heads, keep = pa.array(starts[has_doc]), pa.array(has_doc)
+    lists = indexcodec.list_array
+    pdf = pd.DataFrame({
+        "doc_id": batch.column("doc_id").take(heads).to_numpy(),
+        side: batch.column(side).take(heads).to_pandas(),
+        "__terms": lists(n_terms, uni.column("term")).filter(keep)
+        .to_pandas(),
+        "__scores": lists(n_terms, uni.column("score_q")).filter(keep)
+        .to_pandas()})
+    yield pa.RecordBatch.from_pandas(
+        _pair_rows_scored(pdf, distance, stopwords), schema=_PAIR_ARROW,
+        preserve_index=False)
+    if passthrough and uni.num_rows:
+        none = pa.nulls(uni.num_rows, pa.int64())
+        yield pa.RecordBatch.from_arrays(
+            [uni.column("term"), uni.column("doc_id"), uni.column("tf"),
+             none, none, uni.column("score_q")], schema=_PAIR_ARROW)
 
 
 def pair_needed_terms_prune(scored_uni: DataFrame,
@@ -782,12 +820,12 @@ def global_stats_from_tokens(tokens_df: DataFrame) -> dict:
 # Phase 3 — compressed block-max segments
 # --------------------------------------------------------------------------
 
-def _group_starts(term: pa.Array) -> np.ndarray:
-    """First row of every run of equal terms (rows arrive term-sorted)."""
-    n = len(term)
+def _group_starts(key: pa.Array) -> np.ndarray:
+    """First row of every run of equal keys (rows arrive key-sorted)."""
+    n = len(key)
     if n == 0:
         return np.empty(0, dtype=np.int64)
-    change = pc.not_equal(term.slice(1), term.slice(0, n - 1))
+    change = pc.not_equal(key.slice(1), key.slice(0, n - 1))
     return np.flatnonzero(
         np.r_[True, change.to_numpy(zero_copy_only=False)])
 
@@ -819,35 +857,43 @@ def encode_sorted_batch(batch: pa.RecordBatch, n_docs: int, avgdl: int,
         names=SEGMENT_SCHEMA.fieldNames())
 
 
-def _encode_stream(batches: Iterator[pa.RecordBatch], n_docs: int,
-                   avgdl: int, score_in: bool) -> Iterator[pa.RecordBatch]:
-    """Per-partition streaming encoder (``mapInArrow``). Batches are
-    sorted by (term, doc_id) within the partition; a term may span batch
-    boundaries, so the rows of the last term stay in ``carry`` until a
-    later batch (or the end of the partition) closes it. ``carry`` holds
-    zero-copy slices and is concatenated once, when its term completes."""
+def _whole_groups(batches: Iterator[pa.RecordBatch],
+                  key: str) -> Iterator[pa.RecordBatch]:
+    """Re-cut a partition's ``key``-sorted Arrow batches so that no run of
+    equal keys spans two of them. A run may span batch boundaries, so the
+    rows of the last run stay in ``carry`` until a later batch (or the end
+    of the partition) closes it. ``carry`` holds zero-copy slices and is
+    concatenated once, when its run completes."""
     carry: list[pa.RecordBatch] = []
 
-    def flush(parts):
-        whole = parts[0] if len(parts) == 1 else \
+    def whole(parts):
+        return parts[0] if len(parts) == 1 else \
             pa.Table.from_batches(parts).combine_chunks().to_batches()[0]
-        return encode_sorted_batch(whole, n_docs, avgdl, score_in)
 
     for batch in batches:
         if not batch.num_rows:
             continue
-        term = batch.column("term")
-        last = int(_group_starts(term)[-1])
+        col = batch.column(key)
+        last = int(_group_starts(col)[-1])
         if last == 0 and carry and \
-                term[0].as_py() == carry[-1].column("term")[-1].as_py():
-            carry.append(batch)  # the whole batch continues the open term
+                col[0].as_py() == carry[-1].column(key)[-1].as_py():
+            carry.append(batch)  # the whole batch continues the open run
             continue
         done = carry + ([batch.slice(0, last)] if last else [])
         if done:
-            yield flush(done)
+            yield whole(done)
         carry = [batch.slice(last)]
     if carry:
-        yield flush(carry)
+        yield whole(carry)
+
+
+def _encode_stream(batches: Iterator[pa.RecordBatch], n_docs: int,
+                   avgdl: int, score_in: bool) -> Iterator[pa.RecordBatch]:
+    """Per-partition streaming encoder (``mapInArrow``) over batches sorted
+    by (term, doc_id) within the partition, one term group never split
+    (:func:`_whole_groups`)."""
+    for batch in _whole_groups(batches, "term"):
+        yield encode_sorted_batch(batch, n_docs, avgdl, score_in)
 
 
 def build_segments_fast(postings: DataFrame, n_docs: int, avgdl: int,
@@ -923,7 +969,25 @@ def build_segments(scored: DataFrame,
 
 def pair_segment_input(scored_uni: DataFrame, pairs: DataFrame) -> DataFrame:
     """Union scored unigrams with doc-locally scored pairs as segment-build
-    input — THE single definition of the stored pair format (X2 contract).
+    input (the checkpointed build's shape; the in-memory build gets the
+    same rows from its pair pass, :func:`_segment_rows`)."""
+    return scored_uni.select("term", "doc_id", "tf", "score_q") \
+        .unionByName(pairs.select("term", "doc_id",
+                                  _pair_tf().alias("tf"), "score_q"))
+
+
+def _segment_rows(rows: DataFrame) -> DataFrame:
+    """The pass-through pair pass's ``PAIR_SCORED_SCHEMA`` rows →
+    segment-build input: a row with a NULL ``s2`` is a unigram and keeps
+    its tf, a pair row stores :func:`_pair_tf`."""
+    return rows.select("term", "doc_id",
+                       F.coalesce(_pair_tf(), F.col("tf")).alias("tf"),
+                       "score_q")
+
+
+def _pair_tf():
+    """The pair tf column — THE single definition of the stored pair
+    format (X2 contract).
 
     Pair tf is meaningless (always 1 — the reference scorer never reads it,
     ``InvertedIndex.java:302-307``), so the tf stream carries zigzag(s2)
@@ -932,12 +996,10 @@ def pair_segment_input(scored_uni: DataFrame, pairs: DataFrame) -> DataFrame:
     (``algo_toplayer.cpp:477-564``, ``BigramIndex.java:44-85``). zigzag
     keeps negative components 1-2 VByte bytes. Every pair-storing segment
     input (build_index, and through it checkpoints.build_index_resumable
-    and the CLI) MUST go through here — a path that unioned raw tf=1
+    and the CLI) MUST go through here — a path that stored raw tf=1
     instead would store segments that decode s2=-1 for every pair.
     """
-    s2z = F.expr("(s2 << 1) ^ (s2 >> 63)").cast("long").alias("tf")
-    return scored_uni.select("term", "doc_id", "tf", "score_q") \
-        .unionByName(pairs.select("term", "doc_id", s2z, "score_q"))
+    return F.expr("(s2 << 1) ^ (s2 >> 63)").cast("long")
 
 
 def release_build_caches(stats: dict) -> None:
@@ -985,8 +1047,9 @@ def build_index(docs: DataFrame, id_col: str = "doc_id",
                   corpus count for n_docs)
         scored    quantized BM25 per unigram posting (df join)
         pairs     pair postings, born scored by the doc-local pass over
-                  ``tokens`` (d-bigram only) — the pair table, the
-                  largest intermediate, never joins anything
+                  ``tokens`` and ``scored`` (d-bigram only, one doc_id
+                  exchange) — the pair table, the largest
+                  intermediate, never joins anything
         encode    compressed block-max segments (lazy, returned)
 
     The corpus text is tokenized exactly once per build, and a d-bigram
@@ -997,11 +1060,14 @@ def build_index(docs: DataFrame, id_col: str = "doc_id",
     module).
 
     ``checkpoint``: persistence policy of the intermediates.
-    ``None`` persists them in memory (the token table, the postings and,
-    on d-bigram builds, the scored unigrams — without it Catalyst re-runs
-    the tokenizer per reference) and returns them in ``stats["cached"]``;
-    after materializing the segments (writing the store / counting), call
-    :func:`release_build_caches` to unpersist them — a long-lived session
+    ``None`` persists one table in memory — the token table on d-bigram
+    builds, the postings on unigram builds; without it Catalyst re-runs
+    the tokenizer per reference — and returns it in ``stats["cached"]``.
+    Nothing else is persisted: a d-bigram build's pair pass passes each
+    doc's scored unigram rows through with its pairs, so the scored
+    table is read once and feeds the encode without a union. After
+    materializing the segments (writing the store / counting), call
+    :func:`release_build_caches` to unpersist it — a long-lived session
     that builds repeatedly would otherwise pin one corpus-order token
     table per build in the cache manager. A
     :class:`~candidategeneration_spark.checkpoints.Checkpointer` instead
@@ -1048,7 +1114,7 @@ def build_index(docs: DataFrame, id_col: str = "doc_id",
                     docs.count() if n_rows is None else n_rows))
         tokd = phase("tokens", tokens, params=corpus)
         postings = phase("postings", lambda: build_postings_from_tokens(tokd),
-                         inputs=["tokens"], params=corpus)
+                         keep=False, inputs=["tokens"], params=corpus)
 
         def stats_of():
             return global_stats_from_tokens(tokd)
@@ -1079,24 +1145,29 @@ def build_index(docs: DataFrame, id_col: str = "doc_id",
         return build_segments_fast(postings, stats["n_docs"],
                                    stats["avgdl"],
                                    n_postings=stats["n_postings"]), stats
-    # scored feeds the per-doc score map AND the segment union on
-    # d-bigram builds; a unigram build reads it once
     scored = phase("scored", lambda: score_postings(
         postings, stats["n_docs"], stats["avgdl"],
         n_postings=stats["n_postings"]),
-        keep=bool(dbigram_distance), inputs=["postings", "stats"])
-    pairs = None
-    hint = stats["n_postings"]
-    if dbigram_distance:
-        pair_parts = min(sc.defaultParallelism * 4, max(
-            1, -(-stats["total_tokens"] // TOKENS_PER_PAIR_TASK)))
+        keep=False, inputs=["postings", "stats"])
+    if not dbigram_distance:
+        return build_segments(scored, n_postings_hint=stats["n_postings"]), \
+            stats
+    pair_parts = min(sc.defaultParallelism * 4, max(
+        1, -(-stats["total_tokens"] // TOKENS_PER_PAIR_TASK)))
+    if checkpoint is None:
+        # scored is read once: the pair pass passes each doc's unigram
+        # rows through with its pairs
+        seg_in = _segment_rows(_pair_pass(
+            scored, _token_rows(tokd), dbigram_distance, pair_parts,
+            passthrough=True))
+    else:
         pairs = phase("pairs", lambda: build_pair_postings_from_tokens(
             tokd, scored, dbigram_distance, num_partitions=pair_parts),
-            keep=False, inputs=["tokens", "scored"],
+            inputs=["tokens", "scored"],
             params={"dbigram_distance": dbigram_distance})
-        # pair rows are bounded by distance × total tokens (each token
-        # opens ≤ d windows, pre-dedup) — a cheap over-estimate that sizes
-        # the encode shuffle without materializing the pair table
-        hint += dbigram_distance * stats["total_tokens"]
-    seg_in = scored if pairs is None else pair_segment_input(scored, pairs)
+        seg_in = pair_segment_input(scored, pairs)
+    # pair rows are bounded by distance × total tokens (each token opens
+    # ≤ d windows, pre-dedup) — a cheap over-estimate that sizes the
+    # encode shuffle without materializing the pair table
+    hint = stats["n_postings"] + dbigram_distance * stats["total_tokens"]
     return build_segments(seg_in, n_postings_hint=hint), stats

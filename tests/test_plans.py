@@ -258,10 +258,10 @@ def test_build_stages_sized_to_data(spark):
     from candidategeneration_spark.sources.corpus import generate_corpus
     docs = generate_corpus(spark, 200, seed=42, partitions=4).cache()
     assert docs.rdd.getNumPartitions() == 4
-    _, stats = build_index(docs, text_col="content", dbigram_distance=3)
-    tokd, _, scored = stats["cached"]
+    seg, stats = build_index(docs, text_col="content", dbigram_distance=3)
+    tokd, = stats["cached"]
     assert tokd.rdd.getNumPartitions() == 1
-    idf_branch = plans.explain_str(scored, "simple").split(
+    idf_branch = plans.explain_str(seg, "simple").split(
         "ArrowEvalPython", 1)[1]
     assert "Coalesce 1" in idf_branch.split("HashAggregate", 1)[0], \
         idf_branch
@@ -291,5 +291,44 @@ def test_build_stages_sized_to_data(spark):
             smj.count("Exchange") == unsized.count("Exchange"), smj
     finally:
         spark.conf.set(key, old)
+    release_build_caches(stats)
+    docs.unpersist()
+
+
+def test_dbigram_build_pairs_over_one_doc_exchange(spark):
+    """The in-memory d-bigram build groups each doc's scored unigrams and
+    tokens through ONE doc_id exchange: no per-doc score map (no
+    collect_list aggregate, no sort-merge join), and the pair kernel
+    passes the unigram rows through, so the only Union is the exchange's
+    input and the token table is the one persisted intermediate. One
+    build + count stays at 7 jobs on a 200-doc corpus (13 with the score
+    map join and three persisted tables)."""
+    from candidategeneration_spark.build import (
+        TOKENS_SCHEMA, build_index, release_build_caches,
+    )
+    from candidategeneration_spark.sources.corpus import generate_corpus
+    docs = generate_corpus(spark, 200, seed=42).cache()
+    docs.count()
+    sc = spark.sparkContext
+    group = "dbigram-build-jobs"
+    sc.setJobGroup(group, "one d-bigram build")
+    try:
+        seg, stats = build_index(docs, text_col="content",
+                                 dbigram_distance=5)
+        seg.count()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    plan = plans.explain_str(seg, "simple")
+    assert plan.count("Exchange hashpartitioning(doc_id") == 1, plan
+    for op in ("collect_list", "SortMergeJoin"):
+        assert op not in plan, plan
+    assert plan.count("Union") == 1, plan
+    assert "+- Union" in plan.split("Exchange hashpartitioning(doc_id")[1] \
+        .split("\n")[1], plan
+    tokd, = stats["cached"]
+    assert tokd.columns == TOKENS_SCHEMA.fieldNames()
+    assert len(jobs) <= 7, jobs
     release_build_caches(stats)
     docs.unpersist()
