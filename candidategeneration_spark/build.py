@@ -23,8 +23,8 @@ Lifecycle of the d-bigram build (SURVEY.md §3.1):
     → mapInArrow(columnar delta+VByte, block-max)           [Arrow in/out]
     → segments DataFrame / Parquet
 
-The unigram-only build tokenizes with ``mapInPandas`` (tokenize + tf in
-one pass) and fuses df + BM25 into the encoder (:func:`build_segments_fast`).
+The unigram-only build starts from the same token table and explode, and
+fuses df + BM25 into the encoder (:func:`build_segments_fast`).
 
 :func:`build_index` is the one pipeline for every build mode: the
 persistence policy (in-memory ``persist()``, or a
@@ -71,7 +71,7 @@ PAIR_SEP = "\x1f"  # string analogue of the reference's a<<32|b long packing
 # postings/s across three rounds; profiling showed the cost was pure Spark
 # orchestration, not kernel CPU — a single-file corpus tokenized on ONE
 # task, and the encode shuffle fixed at 4×cores partitions regardless of
-# volume, paying ~15 ms of mapInPandas overhead per mostly-EMPTY task at
+# volume, paying ~15 ms of Python UDF overhead per mostly-EMPTY task at
 # small scale). Both knobs size stages by measured kernel throughput and
 # are inert at 100 TB (the encode partition count is capped at 4×cores as
 # before):
@@ -143,40 +143,6 @@ TOKENS_SCHEMA = StructType([
 # Phase 1 — tokenize + per-doc tf in one Arrow pass
 # --------------------------------------------------------------------------
 
-def _explode_tf(pdf: pd.DataFrame, id_col: str, text_col: str,
-                stopwords=None) -> pd.DataFrame:
-    toks = tokenize_pandas(pdf[text_col], stopwords)
-    return _explode_tf_from_toks(pdf[id_col], toks)
-
-
-def _explode_tf_from_toks(ids, toks: pd.Series) -> pd.DataFrame:
-    """Pre-tokenized twin of :func:`_explode_tf` (the text path's per-doc
-    tf kernel; :func:`_tokenize_tf_batch` is its columnar counterpart)."""
-    lens = toks.map(len).to_numpy(dtype=np.int64)
-    doc_ids = np.asarray(ids, dtype=np.int64)
-    if lens.sum() == 0:
-        return pd.DataFrame(
-            {"term": pd.Series([], dtype=object),
-             "doc_id": pd.Series([], dtype=np.int64),
-             "tf": pd.Series([], dtype=np.int64),
-             "doc_len": pd.Series([], dtype=np.int64),
-             "maxtf": pd.Series([], dtype=np.int64)})
-    # len() guard (not truthiness): Arrow hands token arrays back as
-    # numpy arrays, whose bool() is ambiguous
-    flat_terms = np.concatenate(
-        [np.asarray(t, dtype=object) for t in toks if len(t)] or
-        [np.empty(0, dtype=object)])
-    flat_docs = np.repeat(doc_ids, lens)
-    edf = pd.DataFrame({"doc_id": flat_docs, "term": flat_terms})
-    tf = (edf.groupby(["doc_id", "term"], sort=False)
-             .size().rename("tf").reset_index())
-    per_doc = tf.groupby("doc_id", sort=False)["tf"].max().rename("maxtf")
-    doclen = pd.Series(lens, index=doc_ids, name="doc_len")
-    tf = tf.merge(per_doc, left_on="doc_id", right_index=True)
-    tf = tf.merge(doclen, left_on="doc_id", right_index=True)
-    return tf[["term", "doc_id", "tf", "doc_len", "maxtf"]]
-
-
 def _sized_corpus(docs: DataFrame, id_col: str, text_col: str,
                   n_tasks: int | None) -> DataFrame:
     """(doc_id, __text) of the corpus at the tokenize pass's task count.
@@ -201,44 +167,6 @@ def _sized_corpus(docs: DataFrame, id_col: str, text_col: str,
         return cols.coalesce(n_tasks)
     up = min(n_tasks, docs.sparkSession.sparkContext.defaultParallelism)
     return cols.repartition(up) if have < up else cols
-
-
-def build_postings(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text",
-                   term_filter: DataFrame | None = None,
-                   stopwords=None,
-                   input_partitions: int | None = None) -> DataFrame:
-    """corpus → unigram (term, doc_id, tf, doc_len, maxtf) via one Arrow
-    pass. Pair postings are born scored in :func:`build_index`'s pair
-    phase (:func:`build_pair_postings_from_tokens`).
-
-    Map-side pre-aggregation: raw tokens never leave the Python worker —
-    only per-(doc,term) tf rows hit the shuffle (the analogue of the
-    reference's per-doc dedup-before-buffer, ``InvertedIndex.java:291``).
-
-    ``term_filter``: optional DataFrame with a ``term`` column — postings
-    are pruned to those terms by broadcast LEFT SEMI join, the Spark form
-    of the reference's query-trace filter-set probe during generation
-    (``InvertedIndex.java:291``/``374``; SURVEY §2.2 T6 / §2.3 J2). Default
-    None = index everything.
-
-    ``input_partitions``: optional data-sized task count for the tokenize
-    pass (:func:`_sized_corpus`). :func:`build_index` derives it from
-    n_docs.
-    """
-    from .config import ensure_on_executors
-    ensure_on_executors(docs.sparkSession)
-    cols = _sized_corpus(docs, id_col, text_col, input_partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _explode_tf(pdf, "doc_id", "__text", stopwords)
-
-    out = cols.mapInPandas(gen, schema=POSTINGS_SCHEMA)
-    if term_filter is not None:
-        out = out.join(F.broadcast(term_filter.select("term").distinct()),
-                       "term", "left_semi")
-    return out
 
 
 def _tokenize_tf_batch(batch: pa.RecordBatch,
@@ -274,7 +202,7 @@ def tokenize_docs(docs: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", stopwords=None,
                   input_partitions: int | None = None) -> DataFrame:
     """corpus → ``TOKENS_SCHEMA`` rows, one per doc: the tokenize-ONCE
-    table of the d-bigram build, in one ``mapInArrow`` pass.
+    table of every build, in one ``mapInArrow`` pass.
 
     Each row carries the doc's token list (``toks``, read by the pair
     pass) AND its per-doc term frequencies (``terms``/``tfs`` aligned,
@@ -304,13 +232,45 @@ def tokenize_docs(docs: DataFrame, id_col: str = "doc_id",
 
 
 def build_postings_from_tokens(tokens_df: DataFrame) -> DataFrame:
-    """:func:`build_postings`' unigram rows from the tokenize-once table
+    """Unigram ``POSTINGS_SCHEMA`` rows from the tokenize-once table
     (:func:`tokenize_docs`): a JVM ``explode(arrays_zip(terms, tfs))`` —
     no Python stage. Token-less docs explode to no rows."""
     z = F.explode(F.arrays_zip("terms", "tfs")).alias("__z")
     return tokens_df.select("doc_id", "doc_len", "maxtf", z).select(
         F.col("__z.terms").alias("term"), "doc_id",
         F.col("__z.tfs").alias("tf"), "doc_len", "maxtf")
+
+
+def build_postings(docs: DataFrame, id_col: str = "doc_id",
+                   text_col: str = "text",
+                   term_filter: DataFrame | None = None,
+                   stopwords=None,
+                   input_partitions: int | None = None) -> DataFrame:
+    """corpus → unigram (term, doc_id, tf, doc_len, maxtf): the explode
+    (:func:`build_postings_from_tokens`) of one tokenize pass
+    (:func:`tokenize_docs`). Pair postings are born scored in
+    :func:`build_index`'s pair phase
+    (:func:`build_pair_postings_from_tokens`).
+
+    Map-side pre-aggregation: the tokenize pass counts each doc's tfs, so
+    only per-(doc, term) tf rows reach a shuffle (the analogue of the
+    reference's per-doc dedup-before-buffer, ``InvertedIndex.java:291``).
+
+    ``term_filter``: optional DataFrame with a ``term`` column — postings
+    are pruned to those terms by broadcast LEFT SEMI join, the Spark form
+    of the reference's query-trace filter-set probe during generation
+    (``InvertedIndex.java:291``/``374``; SURVEY §2.2 T6 / §2.3 J2). Default
+    None = index everything.
+
+    ``input_partitions``: optional data-sized task count for the tokenize
+    pass (:func:`_sized_corpus`).
+    """
+    out = build_postings_from_tokens(tokenize_docs(
+        docs, id_col, text_col, stopwords, input_partitions))
+    if term_filter is not None:
+        out = out.join(F.broadcast(term_filter.select("term").distinct()),
+                       "term", "left_semi")
+    return out
 
 
 # --------------------------------------------------------------------------
@@ -358,21 +318,21 @@ def score_postings(postings: DataFrame, n_docs: int, avgdl: int,
     UNIGRAMS ONLY. The round-1 pair branch here (join the pair table twice
     against scored unigrams) was the build's biggest scale-killer and is
     deleted — pair terms must be scored doc-locally by
-    :func:`build_pair_postings` (the pair table is born scored and never
-    joins anything). Passing pair rows raises (at the first action that
-    evaluates the scored rows) rather than silently taking a two-shuffle
-    path no caller should want. The guard is fused into the df aggregate
-    as an executor-side ``raise_error`` — round 5: the old eager
-    ``pairs.isEmpty()`` probe cost a FULL extra scan job per call exactly
-    on the happy path (no match → every partition visited), one per build
-    and one per streaming-ingest micro-batch.
+    :func:`build_pair_postings_from_tokens` (the pair table is born scored
+    and never joins anything). Passing pair rows raises (at the first
+    action that evaluates the scored rows) rather than silently taking a
+    two-shuffle path no caller should want. The guard is fused into the
+    df aggregate as an executor-side ``raise_error`` — round 5: the old
+    eager ``pairs.isEmpty()`` probe cost a FULL extra scan job per call
+    exactly on the happy path (no match → every partition visited), one
+    per build and one per streaming-ingest micro-batch.
     """
     # idf via glibc-log pandas UDF on the tiny per-term table (bm25.idf_col
     # determinism note); the per-posting arithmetic below stays in codegen.
     guard_msg = (
         "score_postings scores unigrams only; score pair terms "
-        "doc-locally with build_pair_postings (the legacy pair-join "
-        "path was removed — it shuffled the pair table twice)")
+        "doc-locally with build_pair_postings_from_tokens (the legacy "
+        "pair-join path was removed — it shuffled the pair table twice)")
     term_df = postings.groupBy("term").agg(F.count("*").alias("df"))
     if n_postings is not None:
         # the session's resolved SQLConf: its shuffle partition count is
@@ -407,15 +367,11 @@ PAIR_SCORED_SCHEMA = StructType([
 _PAIR_ARROW = to_arrow_schema(PAIR_SCORED_SCHEMA)
 
 
-def _pair_rows_scored(pdf: pd.DataFrame, distance: int,
-                      stopwords=None) -> pd.DataFrame:
-    """One Arrow batch of (doc_id, __text | __toks, __terms sorted,
-    __scores aligned) → scored pair postings, all doc-local (no join
-    touches the pair table).
-
-    ``__toks`` (pre-tokenized, from :func:`tokenize_docs`) is preferred
-    when present — the tokenize-once path; ``__text`` re-tokenizes here
-    (the standalone :func:`build_pair_postings` shape).
+def _pair_rows_scored(pdf: pd.DataFrame, distance: int) -> pd.DataFrame:
+    """One Arrow batch of (doc_id, __toks, __terms sorted, __scores
+    aligned) → scored pair postings, all doc-local (no join touches the
+    pair table). ``__toks`` is each doc's token list from the
+    tokenize-once table (:func:`tokenize_docs`).
 
     ``__terms`` is sorted ascending (the pair exchange's sort; pure-ASCII
     tokens so JVM and NumPy string orders agree) — each pair side's
@@ -440,8 +396,7 @@ def _pair_rows_scored(pdf: pd.DataFrame, distance: int,
     pairing (unreachable through the public build paths, which always
     feed unfiltered score maps).
     """
-    toks = pdf["__toks"] if "__toks" in pdf.columns \
-        else tokenize_pandas(pdf["__text"], stopwords)
+    toks = pdf["__toks"]
     empty = pd.DataFrame({
         "term": pd.Series([], dtype=object),
         "doc_id": pd.Series([], dtype=np.int64),
@@ -460,8 +415,8 @@ def _pair_rows_scored(pdf: pd.DataFrame, distance: int,
     n_term = int(term_lens.sum())
     missing_msg = (
         "pair pass: document tokens missing from the per-doc "
-        "score map — build_pair_postings needs unfiltered "
-        "scored unigrams")
+        "score map — build_pair_postings_from_tokens needs "
+        "unfiltered scored unigrams")
     if n_tok == 0:
         return empty
     if n_term == 0:
@@ -559,12 +514,13 @@ def _pair_rows_scored(pdf: pd.DataFrame, distance: int,
         "s1": s1, "s2": s2, "score_q": s1 + s2})
 
 
-def build_pair_postings(docs: DataFrame, scored_uni: DataFrame,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        dbigram_distance: int = DBIGRAM_DISTANCE,
-                        stopwords=None,
-                        num_partitions: int | None = None) -> DataFrame:
-    """Scored d-bigram postings with DOC-LOCAL pair scoring.
+def build_pair_postings_from_tokens(tokens_df: DataFrame,
+                                    scored_uni: DataFrame,
+                                    dbigram_distance: int = DBIGRAM_DISTANCE,
+                                    num_partitions: int | None = None
+                                    ) -> DataFrame:
+    """Scored d-bigram postings with DOC-LOCAL pair scoring, fed by the
+    tokenize-once table (:func:`tokenize_docs`).
 
     Round-1 scored pairs by joining the pair table TWICE against the scored
     unigram table on (term, doc_id) — two shuffle joins over the largest
@@ -573,64 +529,38 @@ def build_pair_postings(docs: DataFrame, scored_uni: DataFrame,
     (``InvertedIndex.java:302-307``); this is the Spark shape of that idea,
     one doc_id exchange (:func:`_pair_pass`):
 
-        scored_uni rows ∪ one (doc_id, __text) row per doc
-        → repartition(doc_id) + sort(doc_id, term)       [1× uni + corpus]
-        → mapInArrow: per doc, re-tokenize + window pairs + score lookup
-
-    (:func:`build_pair_postings_from_tokens` is the tokenize-once twin —
-    build_index runs the same pass over its token table, so this
-    re-tokenize is not part of the end-to-end build.)
+        scored_uni rows ∪ one (doc_id, toks) row per doc
+        → repartition(doc_id) + sort(doc_id, term)       [1× uni + tokens]
+        → mapInArrow: per doc, window pairs + score lookup
 
     The giant pair table is *born scored* and never joins anything; the
-    one shuffle moves the unigram rows and the corpus. Output carries the
-    SEPARATE component streams (s1, s2) — X2 parity with the reference's
-    precomputed pair lists (``BigramIndex.java:44-85``,
+    one shuffle moves the unigram rows and each doc's token list. Output
+    carries the SEPARATE component streams (s1, s2) — X2 parity with the
+    reference's precomputed pair lists (``BigramIndex.java:44-85``,
     ``algo_toplayer.cpp:477-564``).
-    """
-    doc_rows = docs.select(F.col(id_col).cast("long").alias("doc_id"),
-                           F.col(text_col).alias("__text"))
-    return _pair_pass(scored_uni, doc_rows, dbigram_distance,
-                      num_partitions, stopwords)
-
-
-def build_pair_postings_from_tokens(tokens_df: DataFrame,
-                                    scored_uni: DataFrame,
-                                    dbigram_distance: int = DBIGRAM_DISTANCE,
-                                    num_partitions: int | None = None
-                                    ) -> DataFrame:
-    """:func:`build_pair_postings` fed by the tokenize-once table
-    (:func:`tokenize_docs`) — the pair kernel skips its re-tokenize and
-    reads each doc's ``toks`` off the exchange. Same output, same
-    doc-local scoring; the exchange moves token arrays instead of raw text
-    (comparable bytes — tokens are the text minus punctuation).
 
     ``num_partitions``: explicit kernel parallelism (see
     TOKENS_PER_PAIR_TASK) — without it AQE coalesces the small exchange
     to one task at bench scale and the kernel serializes."""
-    return _pair_pass(scored_uni, _token_rows(tokens_df), dbigram_distance,
+    return _pair_pass(scored_uni, tokens_df, dbigram_distance,
                       num_partitions)
 
 
-def _token_rows(tokens_df: DataFrame) -> DataFrame:
-    """The pair pass's document rows from the token table."""
-    return tokens_df.select("doc_id", F.col("toks").alias("__toks"))
-
-
-def _pair_pass(scored_uni: DataFrame, doc_rows: DataFrame, distance: int,
-               num_partitions: int | None, stopwords=None,
+def _pair_pass(scored_uni: DataFrame, tokens_df: DataFrame, distance: int,
+               num_partitions: int | None,
                passthrough: bool = False) -> DataFrame:
     """Doc-local pair scoring over ONE doc_id exchange → PAIR_SCORED rows.
 
-    ``doc_rows``: (doc_id, ``__toks`` | ``__text``), one row per doc. The
-    scored unigram rows and the document rows are hash-partitioned by
-    doc_id together and sorted by (doc_id, term); a document row has a
-    NULL term, and NULL sorts first, so every doc arrives as its document
-    row followed by its terms in ascending order — the per-doc score map
-    of the reference (``InvertedIndex.java:302-307``) with no aggregate,
-    no second shuffle and no join. A streaming ``mapInArrow`` cuts the
-    sorted rows into whole docs (:func:`_whole_groups`) and scores each
-    batch of docs with :func:`_pair_rows_scored`; memory stays one Arrow
-    batch plus one doc.
+    ``tokens_df``: the token table, one row per doc, whose ``toks`` ride
+    the exchange as ``__toks``. The scored unigram rows and the document
+    rows are hash-partitioned by doc_id together and sorted by
+    (doc_id, term); a document row has a NULL term, and NULL sorts first,
+    so every doc arrives as its document row followed by its terms in
+    ascending order — the per-doc score map of the reference
+    (``InvertedIndex.java:302-307``) with no aggregate, no second shuffle
+    and no join. A streaming ``mapInArrow`` cuts the sorted rows into
+    whole docs (:func:`_whole_groups`) and scores each batch of docs with
+    :func:`_pair_rows_scored`; memory stays one Arrow batch plus one doc.
 
     ``passthrough``: also emit every scored unigram row (s1, s2 NULL), so
     that a build reading this output (:func:`_segment_rows`) consumes its
@@ -638,29 +568,28 @@ def _pair_pass(scored_uni: DataFrame, doc_rows: DataFrame, distance: int,
     width — AQE never coalesces an explicit-count repartition; ``None``
     leaves it to ``spark.sql.shuffle.partitions`` and AQE."""
     from .config import ensure_on_executors
-    ensure_on_executors(doc_rows.sparkSession)
-    side = doc_rows.columns[1]
-    side_type = "array<string>" if side == "__toks" else "string"
+    ensure_on_executors(tokens_df.sparkSession)
     cols = {"term": "string", "score_q": "long"}
     if passthrough:
         cols["tf"] = "long"
-    uni = scored_uni.select("doc_id", *cols,
-                            F.lit(None).cast(side_type).alias(side))
-    heads = doc_rows.select("doc_id", *(F.lit(None).cast(t).alias(c)
-                                        for c, t in cols.items()), side)
+    uni = scored_uni.select("doc_id", *cols, F.lit(None).cast(
+        "array<string>").alias("__toks"))
+    heads = tokens_df.select("doc_id", *(F.lit(None).cast(t).alias(c)
+                                         for c, t in cols.items()),
+                             F.col("toks").alias("__toks"))
     rows = uni.unionByName(heads)
     rows = rows.repartition("doc_id") if num_partitions is None \
         else rows.repartition(num_partitions, "doc_id")
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in _whole_groups(batches, "doc_id"):
-            yield from _pair_batch(batch, distance, stopwords, passthrough)
+            yield from _pair_batch(batch, distance, passthrough)
 
     return rows.sortWithinPartitions("doc_id", "term") \
                .mapInArrow(gen, schema=PAIR_SCORED_SCHEMA)
 
 
-def _pair_batch(batch: pa.RecordBatch, distance: int, stopwords,
+def _pair_batch(batch: pa.RecordBatch, distance: int,
                 passthrough: bool) -> Iterator[pa.RecordBatch]:
     """Whole docs of the pair exchange, sorted by (doc_id, term) with each
     doc's document row (NULL term) first → PAIR_SCORED_SCHEMA batches.
@@ -677,18 +606,17 @@ def _pair_batch(batch: pa.RecordBatch, distance: int, stopwords,
                          "row — doc ids must be unique")
     uni = batch.filter(pa.array(~is_doc))
     n_terms = np.diff(np.append(starts, batch.num_rows)) - has_doc
-    side = batch.schema.names[-1]
     heads, keep = pa.array(starts[has_doc]), pa.array(has_doc)
     lists = indexcodec.list_array
     pdf = pd.DataFrame({
         "doc_id": batch.column("doc_id").take(heads).to_numpy(),
-        side: batch.column(side).take(heads).to_pandas(),
+        "__toks": batch.column("__toks").take(heads).to_pandas(),
         "__terms": lists(n_terms, uni.column("term")).filter(keep)
         .to_pandas(),
         "__scores": lists(n_terms, uni.column("score_q")).filter(keep)
         .to_pandas()})
     yield pa.RecordBatch.from_pandas(
-        _pair_rows_scored(pdf, distance, stopwords), schema=_PAIR_ARROW,
+        _pair_rows_scored(pdf, distance), schema=_PAIR_ARROW,
         preserve_index=False)
     if passthrough and uni.num_rows:
         none = pa.nulls(uni.num_rows, pa.int64())
@@ -722,7 +650,8 @@ def build_pair_postings_budget(scored_uni: DataFrame, pairs: DataFrame,
     """J4 exact variant: pair lists merged from top-``budget`` unigram
     prefixes — the reference's precomputed bigram index construction
     (``BigramIndex.java:44-85``, ``getUnigramTopMap`` ibid. 126-151),
-    as opposed to :func:`build_pair_postings`'s exact full-corpus pass.
+    as opposed to :func:`build_pair_postings_from_tokens`' exact
+    full-corpus pass.
 
     Reference semantics, re-expressed:
 
@@ -787,9 +716,9 @@ def global_stats_from_postings(postings: DataFrame, n_docs: int) -> dict:
     unigram postings (each doc contributes its doc_len exactly once as the
     sum of its per-term tfs) — a pure map-side partial aggregation, NO
     shuffle. Token-less docs carry no postings, so ``n_docs`` comes from
-    the caller (the unigram build counts the corpus); it counts them —
+    the caller (streaming compaction counts its doc log); it counts them —
     same semantics as :func:`global_stats` (reference scans every doc,
-    InvertedIndex.java:171). The d-bigram build reads all four stats off
+    InvertedIndex.java:171). :func:`build_index` reads all four stats off
     its token table instead (:func:`global_stats_from_tokens`).
     """
     uni = postings.where(~F.col("term").contains(PAIR_SEP))
@@ -1039,12 +968,11 @@ def build_index(docs: DataFrame, id_col: str = "doc_id",
     The reference's four-phase builder (``WWWMain.java:50-199``) as one
     pipeline of named phases:
 
-        tokens    tokenize-once table (d-bigram only, :func:`tokenize_docs`)
-        postings  unigram postings (from ``tokens``, else one Arrow pass)
-        stats     n_docs / total tokens / avgdl / n_postings (d-bigram:
-                  one aggregate over ``tokens``, whose row count is the
-                  exact n_docs; unigram: over the postings, with a
-                  corpus count for n_docs)
+        tokens    tokenize-once table (:func:`tokenize_docs`)
+        postings  unigram postings (a JVM explode of ``tokens``)
+        stats     n_docs / total tokens / avgdl / n_postings (one
+                  aggregate over ``tokens``, whose row count is the
+                  exact n_docs)
         scored    quantized BM25 per unigram posting (df join)
         pairs     pair postings, born scored by the doc-local pass over
                   ``tokens`` and ``scored`` (d-bigram only, one doc_id
@@ -1052,24 +980,25 @@ def build_index(docs: DataFrame, id_col: str = "doc_id",
                   intermediate, never joins anything
         encode    compressed block-max segments (lazy, returned)
 
-    The corpus text is tokenized exactly once per build, and a d-bigram
-    build runs no corpus count job: its tokenize pass is sized from the
+    The corpus text is tokenized exactly once per build, and no build
+    runs a corpus count job: the tokenize pass is sized from the
     plan's row-count statistic (:func:`plans.row_count_stat`, counting
     only when the plan has none). Every Python stage runs at a task count
     sized from its data (see the stage-sizing notes at the top of this
     module).
 
     ``checkpoint``: persistence policy of the intermediates.
-    ``None`` persists one table in memory — the token table on d-bigram
-    builds, the postings on unigram builds; without it Catalyst re-runs
-    the tokenizer per reference — and returns it in ``stats["cached"]``.
-    Nothing else is persisted: a d-bigram build's pair pass passes each
-    doc's scored unigram rows through with its pairs, so the scored
-    table is read once and feeds the encode without a union. After
-    materializing the segments (writing the store / counting), call
-    :func:`release_build_caches` to unpersist it — a long-lived session
-    that builds repeatedly would otherwise pin one corpus-order token
-    table per build in the cache manager. A
+    ``None`` persists one table in memory — the token table; without it
+    Catalyst re-runs the tokenizer per reference — and returns it in
+    ``stats["cached"]``. Nothing else is persisted: a unigram build
+    encodes the postings exploded from it with df + BM25 fused into the
+    encoder (:func:`build_segments_fast`), and a d-bigram build's pair
+    pass passes each doc's scored unigram rows through with its pairs,
+    so the scored table is read once and feeds the encode without a
+    union. After materializing the segments (writing the store /
+    counting), call :func:`release_build_caches` to unpersist it — a
+    long-lived session that builds repeatedly would otherwise pin one
+    corpus-order token table per build in the cache manager. A
     :class:`~candidategeneration_spark.checkpoints.Checkpointer` instead
     writes every phase but encode as Parquet + manifest and skips the
     phases a previous run finished (``WWW.java:367-369``
@@ -1085,9 +1014,6 @@ def build_index(docs: DataFrame, id_col: str = "doc_id",
     sc = spark.sparkContext
     cached: list = []
 
-    def tok_tasks(n_rows: int) -> int:
-        return max(1, -(-n_rows // DOCS_PER_TOKENIZE_TASK))
-
     def phase(name, builder, keep=True, **kw):
         if checkpoint is not None:
             return checkpoint.phase(name, builder, **kw)[0]
@@ -1100,43 +1026,28 @@ def build_index(docs: DataFrame, id_col: str = "doc_id",
     # every phase that reads the corpus carries its tokenization contract
     corpus = {"id_col": id_col, "text_col": text_col,
               "stopwords": _stopwords_key(stopwords)}
-    tokd = None
-    if dbigram_distance:
-        # no corpus count job: the token table has one row per doc, so the
-        # stats job counts n_docs exactly; the tokenize pass is sized from
-        # the plan's row-count statistic (zero jobs; possibly an upper
-        # bound, fine for sizing), counting only when the plan has none
-        def tokens():
-            n_rows = plans.row_count_stat(docs)
-            return tokenize_docs(
-                docs, id_col, text_col, stopwords=stopwords,
-                input_partitions=tok_tasks(
-                    docs.count() if n_rows is None else n_rows))
-        tokd = phase("tokens", tokens, params=corpus)
-        postings = phase("postings", lambda: build_postings_from_tokens(tokd),
-                         keep=False, inputs=["tokens"], params=corpus)
-
-        def stats_of():
-            return global_stats_from_tokens(tokd)
-        stats_in = ["tokens"]
-    else:
-        # unigram postings carry no token-less docs: count the corpus
-        n_docs = docs.count()
-        postings = phase("postings", lambda: build_postings(
+    # no corpus count job: the token table has one row per doc, so the
+    # stats job counts n_docs exactly; the tokenize pass is sized from
+    # the plan's row-count statistic (zero jobs; possibly an upper bound,
+    # fine for sizing), counting only when the plan has none
+    def tokens():
+        n_rows = plans.row_count_stat(docs)
+        if n_rows is None:
+            n_rows = docs.count()
+        return tokenize_docs(
             docs, id_col, text_col, stopwords=stopwords,
-            input_partitions=tok_tasks(n_docs)), params=corpus)
-
-        def stats_of():
-            return global_stats_from_postings(postings, n_docs)
-        stats_in = ["postings"]
+            input_partitions=max(1, -(-n_rows // DOCS_PER_TOKENIZE_TASK)))
+    tokd = phase("tokens", tokens, params=corpus)
+    postings = phase("postings", lambda: build_postings_from_tokens(tokd),
+                     keep=False, inputs=["tokens"], params=corpus)
     t0 = _time.time()
     if checkpoint is None:
-        stats = stats_of()
+        stats = global_stats_from_tokens(tokd)
     else:
         stats = phase("stats", lambda: spark.createDataFrame(
-            [tuple(stats_of().values())],
+            [tuple(global_stats_from_tokens(tokd).values())],
             "n_docs long, total_tokens long, avgdl long, n_postings long"),
-            inputs=stats_in).collect()[0].asDict()
+            inputs=["tokens"]).collect()[0].asDict()
     stats["cached"] = cached
     if phase_times is not None:
         phase_times["tokenize_stats"] = round(_time.time() - t0, 3)
@@ -1158,8 +1069,7 @@ def build_index(docs: DataFrame, id_col: str = "doc_id",
         # scored is read once: the pair pass passes each doc's unigram
         # rows through with its pairs
         seg_in = _segment_rows(_pair_pass(
-            scored, _token_rows(tokd), dbigram_distance, pair_parts,
-            passthrough=True))
+            scored, tokd, dbigram_distance, pair_parts, passthrough=True))
     else:
         pairs = phase("pairs", lambda: build_pair_postings_from_tokens(
             tokd, scored, dbigram_distance, num_partitions=pair_parts),

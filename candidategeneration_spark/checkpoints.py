@@ -126,8 +126,8 @@ def build_index_resumable(docs: DataFrame, root: str,
     """Checkpointed end-to-end build → (segments, stats, checkpointer).
 
     ``build.build_index`` with a :class:`Checkpointer` at ``root`` as its
-    persistence policy (phases tokens [d-bigram only], postings, stats,
-    scored [, pairs]), plus a ``segments`` phase in the term-bucketed
+    persistence policy (phases tokens, postings, stats, scored
+    [, pairs]), plus a ``segments`` phase in the term-bucketed
     store layout (segmentstore.py). Re-running after a crash executes only
     missing phases; a crash during the giant pair phase resumes from the
     scored unigrams and the token checkpoint, without re-tokenizing.

@@ -12,8 +12,9 @@ import threading
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .build import (
-    PAIR_SEP, build_index, build_postings, global_stats,
-    release_build_caches, score_postings,
+    PAIR_SEP, build_index, build_pair_postings_from_tokens, build_postings,
+    build_postings_from_tokens, global_stats, release_build_caches,
+    score_postings, tokenize_docs,
 )
 from .entrysql import QUERY_SET, TOPK  # noqa: F401
 from .queryengine import wand_topk
@@ -100,15 +101,20 @@ def q_postings_unigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("df").cast("long").alias("df"), "score_q")
 
 
-def _scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Doc-local pair scoring path (build.build_pair_postings) — the pair
-    table is born scored; no join ever touches it."""
-    from .build import build_pair_postings
-    docs = load_docs(spark, sf_dir)
+def _uni_and_pairs(docs: DataFrame) -> tuple[dict, DataFrame, DataFrame]:
+    """(stats, unigram postings, scored pairs) of one ``tokenize_docs``
+    table: the doc-local pair scoring path
+    (build.build_pair_postings_from_tokens) — the pair table is born
+    scored; no join ever touches it."""
     stats = global_stats(docs)
-    postings = build_postings(docs)
-    scored = score_postings(postings, stats["n_docs"], stats["avgdl"])
-    return build_pair_postings(docs, scored)
+    tokd = tokenize_docs(docs)
+    uni = build_postings_from_tokens(tokd)
+    scored = score_postings(uni, stats["n_docs"], stats["avgdl"])
+    return stats, uni, build_pair_postings_from_tokens(tokd, scored)
+
+
+def _scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _uni_and_pairs(load_docs(spark, sf_dir))[2]
 
 
 def q_postings_dbigram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -508,13 +514,7 @@ def q_lm_probabilities(spark, sf_dir):
     LM through its dictionary — no external data exists here). Exact
     integer probabilities p_q = cf*1e6 div total."""
     from . import quality
-    from .build import build_pair_postings
-    docs = load_docs(spark, sf_dir)
-    stats = global_stats(docs)
-    uni = build_postings(docs)
-    scored = score_postings(uni, stats["n_docs"], stats["avgdl"])
-    pairs = build_pair_postings(docs, scored,
-                                dbigram_distance=DBIGRAM_DISTANCE)
+    stats, uni, pairs = _uni_and_pairs(load_docs(spark, sf_dir))
     return quality.lm_probability_maps(uni, pairs.select("term"),
                                        stats["total_tokens"])
 

@@ -568,7 +568,8 @@ def lm_probability_maps(uni_postings: DataFrame,
     MLE maps from the corpus itself (no external data): unigram
     P = cf / total_tokens with cf = Σtf; pair P = df_pair / total pair
     postings (each pair posting is a distinct (pair, doc) co-occurrence —
-    build.build_pair_postings' A8 first-occurrence semantics).
+    build.build_pair_postings_from_tokens' A8 first-occurrence
+    semantics).
     Probabilities are emitted as exact integers p_q = (cf*scale) div total
     so the DuckDB oracle replays them bit-for-bit.
 

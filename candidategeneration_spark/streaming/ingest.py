@@ -6,12 +6,13 @@ segment architecture expressed in Structured Streaming:
 
 1. **Ingest** (:func:`stream_postings` → :func:`postings_sink`): a document
    stream (file source here; Kafka at scale) flows through the SAME Arrow
-   tokenize+tf kernel as the batch build (``build._explode_tf``) and
-   appends raw postings ``(term, doc_id, tf, doc_len, maxtf)`` to a
-   Parquet postings log. The streaming Parquet sink is exactly-once (its
-   file manifest commits atomically per micro-batch), so task retries
-   can't duplicate postings. No scoring happens here — scores depend on
-   GLOBAL stats (df, n_docs, avgdl), which a micro-batch cannot know.
+   tokenize+tf pass as the batch build (``build.build_postings``: the
+   explode of ``build.tokenize_docs``) and appends raw postings
+   ``(term, doc_id, tf, doc_len, maxtf)`` to a Parquet postings log. The
+   streaming Parquet sink is exactly-once (its file manifest commits
+   atomically per micro-batch), so task retries can't duplicate postings.
+   No scoring happens here — scores depend on GLOBAL stats (df, n_docs,
+   avgdl), which a micro-batch cannot know.
    A companion doc-id sidecar (:func:`docs_sink`) records every ingested
    document — including token-less ones, which the postings log cannot
    represent but which count toward n_docs/avgdl.
@@ -63,7 +64,7 @@ def stream_postings(docs_stream: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text", stopwords=None) -> DataFrame:
     """Streaming postings: the batch Arrow kernel applied to a stream.
 
-    ``mapInPandas`` is stateless per micro-batch, so the tokenize+tf pass
+    ``mapInArrow`` is stateless per micro-batch, so the tokenize+tf pass
     runs identically under streaming — one code path for both modes.
     """
     from ..build import build_postings
@@ -125,9 +126,9 @@ def compact_index(spark: SparkSession, log_path: str,
     ``doc_log_path``: the :func:`docs_sink` sidecar. n_docs = distinct ids
     there — exact even when the corpus contains token-less documents
     (which emit no postings but still count toward n_docs/avgdl, matching
-    the batch build's ``docs.count()``). Without a sidecar, n_docs falls
-    back to distinct doc ids in the postings log, which is only exact for
-    corpora with no empty documents.
+    the batch build's count of its token table). Without a sidecar, n_docs
+    falls back to distinct doc ids in the postings log, which is only
+    exact for corpora with no empty documents.
     """
     from pyspark.sql import functions as F
 

@@ -98,47 +98,54 @@ def test_all_build_paths_identical_segments(spark, corpus, tmp_path,
                                             monkeypatch):
     """Every build mode (build_index plain, with a checkpoint, the
     resumable wrapper, and a checkpointed build killed after ``scored``
-    and resumed) must emit byte-identical segments on a d-bigram build —
-    in particular the X2 stored format (zigzag(s2) in the pair tf stream)
-    must be shared, not re-derived per path.
+    and resumed) must emit byte-identical segments, on a unigram and on a
+    d-bigram build — in particular the X2 stored format (zigzag(s2) in
+    the pair tf stream) must be shared, not re-derived per path.
 
-    The d-bigram build runs no corpus count job: n_docs comes from the
-    token table, and the tokenize pass is sized from the plan's row-count
-    statistic. Inputs whose statistic is not their row count (a filter
-    has none; a limit reports its limit, 150 for the 133 filtered docs)
-    must still give the oracle's stats and the segments of the build over
-    their materialized rows."""
+    No build runs a corpus count job: n_docs comes from the token table,
+    and the tokenize pass is sized from the plan's row-count statistic.
+    Inputs whose statistic is not their row count (a filter has none; a
+    limit reports its limit, 150 for the 133 filtered docs) must still
+    give the oracle's stats and the segments of the build over their
+    materialized rows."""
     from candidategeneration_spark import build
     from candidategeneration_spark.checkpoints import Checkpointer
     from candidategeneration_spark.oracle import OracleIndex
     corpus.count()  # materialized: the cached plan reports its row count
-    with monkeypatch.context() as m:
-        m.setattr(corpus, "count", lambda: pytest.fail(
-            "build_index counted a corpus whose plan has a row count"))
-        base, _ = build_index(corpus, text_col="content", dbigram_distance=3)
-        want = _blobs(base)
-
     filtered = corpus.where(F.col("doc_id") % 3 != 0)  # 133 docs
-    for sub in (corpus.limit(150), filtered, filtered.limit(150)):
-        rows = sub.collect()
-        oracle = OracleIndex([(r["doc_id"], r["content"]) for r in rows], 3)
-        seg, stats = build_index(sub, text_col="content", dbigram_distance=3)
-        assert {k: stats[k] for k in
-                ("n_docs", "avgdl", "total_tokens", "n_postings")} == {
-            "n_docs": oracle.n_docs, "avgdl": oracle.avgdl,
-            "total_tokens": oracle.total_tokens,
-            "n_postings": sum(oracle.df.values())}
-        ref, _ = build_index(spark.createDataFrame(rows, corpus.schema),
-                             text_col="content", dbigram_distance=3)
-        assert _blobs(seg) == _blobs(ref)
+    wants = {}
+    for d in (None, 3):
+        with monkeypatch.context() as m:
+            m.setattr(corpus, "count", lambda: pytest.fail(
+                "build_index counted a corpus whose plan has a row count"))
+            base, _ = build_index(corpus, text_col="content",
+                                  dbigram_distance=d)
+            wants[d] = want = _blobs(base)
 
-    seg_r, _, _ = build_index_resumable(
-        corpus, str(tmp_path / "xp"), dbigram_distance=3)
-    assert _blobs(seg_r) == want
+        for sub in (corpus.limit(150), filtered, filtered.limit(150)):
+            rows = sub.collect()
+            oracle = OracleIndex([(r["doc_id"], r["content"]) for r in rows],
+                                 d)
+            seg, stats = build_index(sub, text_col="content",
+                                     dbigram_distance=d)
+            assert {k: stats[k] for k in
+                    ("n_docs", "avgdl", "total_tokens", "n_postings")} == {
+                "n_docs": oracle.n_docs, "avgdl": oracle.avgdl,
+                "total_tokens": oracle.total_tokens,
+                "n_postings": sum(oracle.df.values())}, d
+            ref, _ = build_index(spark.createDataFrame(rows, corpus.schema),
+                                 text_col="content", dbigram_distance=d)
+            assert _blobs(seg) == _blobs(ref), d
 
-    seg, _ = build_index(corpus, text_col="content", dbigram_distance=3,
-                         checkpoint=Checkpointer(str(tmp_path / "c"), spark))
-    assert _blobs(seg) == want
+        seg_r, _, _ = build_index_resumable(
+            corpus, str(tmp_path / f"xp{d}"), dbigram_distance=d)
+        assert _blobs(seg_r) == want, d
+
+        seg, _ = build_index(corpus, text_col="content", dbigram_distance=d,
+                             checkpoint=Checkpointer(str(tmp_path / f"c{d}"),
+                                                     spark))
+        assert _blobs(seg) == want, d
+    want = wants[3]
 
     # killed after scored: the pair phase dies, the re-run resumes
     cp = Checkpointer(str(tmp_path / "killed"), spark)
@@ -158,15 +165,14 @@ def test_all_build_paths_identical_segments(spark, corpus, tmp_path,
 
 def test_checkpointed_dbigram_build_tokenizes_once(spark, corpus, tmp_path,
                                                    monkeypatch):
-    """A checkpointed d-bigram build tokenizes the corpus once (the
-    ``tokens`` phase) and a resume after ``scored`` not at all: no
-    driver-side tokenizing planner runs, and the pair phase reads the
-    token checkpoint, not the corpus text."""
+    """A checkpointed build, unigram or d-bigram, tokenizes the corpus once
+    (the ``tokens`` phase), and a d-bigram resume after ``scored`` not at
+    all: no driver-side tokenizing planner runs, and the pair phase reads
+    the token checkpoint, not the corpus text."""
     from candidategeneration_spark import build
     from candidategeneration_spark.checkpoints import Checkpointer
     calls = []
-    for name in ("tokenize_docs", "build_postings", "build_pair_postings",
-                 "global_stats"):
+    for name in ("tokenize_docs", "build_postings", "global_stats"):
         def spy(*a, _orig=getattr(build, name), _name=name, **k):
             calls.append(_name)
             return _orig(*a, **k)
@@ -179,6 +185,11 @@ def test_checkpointed_dbigram_build_tokenizes_once(spark, corpus, tmp_path,
                            out.inputFiles()))
         return out
     monkeypatch.setattr(build, "build_pair_postings_from_tokens", pair_spy)
+
+    build_index(corpus, text_col="content", dbigram_distance=None,
+                checkpoint=Checkpointer(str(tmp_path / "uni"), spark))
+    assert calls == ["tokenize_docs"]
+    calls.clear()
 
     root = str(tmp_path / "once")
     build_index(corpus, text_col="content", dbigram_distance=3,

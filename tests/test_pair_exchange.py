@@ -151,7 +151,7 @@ def _doc_row(doc_id, toks):
 def _run(batches, passthrough=False, distance=3):
     out = pa.Table.from_batches(
         [b for g in _whole_groups(iter(batches), "doc_id")
-         for b in _pair_batch(g, distance, None, passthrough)],
+         for b in _pair_batch(g, distance, passthrough)],
         schema=_PAIR_ARROW)
     return sorted(zip(*(out.column(c).to_pylist() for c in
                         ("term", "doc_id", "tf", "s1", "s2", "score_q"))),

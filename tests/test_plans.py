@@ -295,6 +295,23 @@ def test_build_stages_sized_to_data(spark):
     docs.unpersist()
 
 
+def _build_jobs(spark, docs, distance):
+    """One ``build_index`` + ``count()`` of its segments in one job group
+    → (segments, stats, the group's job ids)."""
+    from candidategeneration_spark.build import build_index
+    sc = spark.sparkContext
+    group = f"build-jobs-{distance}"
+    sc.setJobGroup(group, "one build")
+    try:
+        seg, stats = build_index(docs, text_col="content",
+                                 dbigram_distance=distance)
+        seg.count()
+        return seg, stats, list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_dbigram_build_pairs_over_one_doc_exchange(spark):
     """The in-memory d-bigram build groups each doc's scored unigrams and
     tokens through ONE doc_id exchange: no per-doc score map (no
@@ -304,22 +321,12 @@ def test_dbigram_build_pairs_over_one_doc_exchange(spark):
     build + count stays at 7 jobs on a 200-doc corpus (13 with the score
     map join and three persisted tables)."""
     from candidategeneration_spark.build import (
-        TOKENS_SCHEMA, build_index, release_build_caches,
+        TOKENS_SCHEMA, release_build_caches,
     )
     from candidategeneration_spark.sources.corpus import generate_corpus
     docs = generate_corpus(spark, 200, seed=42).cache()
     docs.count()
-    sc = spark.sparkContext
-    group = "dbigram-build-jobs"
-    sc.setJobGroup(group, "one d-bigram build")
-    try:
-        seg, stats = build_index(docs, text_col="content",
-                                 dbigram_distance=5)
-        seg.count()
-        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    seg, stats, jobs = _build_jobs(spark, docs, 5)
     plan = plans.explain_str(seg, "simple")
     assert plan.count("Exchange hashpartitioning(doc_id") == 1, plan
     for op in ("collect_list", "SortMergeJoin"):
@@ -330,5 +337,25 @@ def test_dbigram_build_pairs_over_one_doc_exchange(spark):
     tokd, = stats["cached"]
     assert tokd.columns == TOKENS_SCHEMA.fieldNames()
     assert len(jobs) <= 7, jobs
+    release_build_caches(stats)
+    docs.unpersist()
+
+
+def test_unigram_build_reads_one_token_table(spark):
+    """The in-memory unigram build runs the same prologue as the d-bigram
+    one: the token table is its one persisted intermediate, n_docs comes
+    from the stats job over it, and no corpus count job runs. One build +
+    count stays at 5 jobs on a 200-doc corpus."""
+    from candidategeneration_spark.build import (
+        TOKENS_SCHEMA, release_build_caches,
+    )
+    from candidategeneration_spark.sources.corpus import generate_corpus
+    docs = generate_corpus(spark, 200, seed=42).cache()
+    docs.count()
+    seg, stats, jobs = _build_jobs(spark, docs, None)
+    tokd, = stats["cached"]
+    assert tokd.columns == TOKENS_SCHEMA.fieldNames()
+    assert stats["n_docs"] == 200
+    assert len(jobs) <= 5, jobs
     release_build_caches(stats)
     docs.unpersist()
