@@ -15,6 +15,13 @@ The floored ``avgdl`` and the ×1e7 int truncation are deliberate quirks we
 reproduce exactly: every downstream sum is over quantized int64 scores, so
 multi-term scores are order-independent and rank-identical across engines.
 
+A corpus with fewer kept tokens than documents (``['', 'aa']``) floors
+``avgdl`` to 0. The reference's ``b * docLen / avg`` is then a Java double
+division by zero, +Infinity, so ``denom`` is infinite and every score is
+0. Python's float division and Spark's ANSI division raise there instead,
+so the scalar, NumPy and Column paths return 0 for ``avgdl == 0``
+explicitly.
+
 Three implementations with identical results: NumPy (UDF kernels), Spark
 Column (JVM path), and scalar Python (test oracle). The DuckDB oracle SQL
 uses ``trunc()`` because DuckDB's CAST(double AS BIGINT) *rounds* while
@@ -94,6 +101,8 @@ def idf_col(df: Column, n_docs: int) -> Column:
 def bm25_quantized_np(tf, maxtf, df, doc_len, n_docs: int, avgdl: int):
     """Vectorized quantized BM25 → int64 array."""
     tf = np.asarray(tf, dtype=np.float64)
+    if avgdl == 0:
+        return np.zeros(tf.shape, dtype=np.int64)
     maxtf = np.asarray(maxtf, dtype=np.float64)
     doc_len = np.asarray(doc_len, dtype=np.float64)
     ntf = 0.5 + 0.5 * tf / maxtf
@@ -106,6 +115,8 @@ def bm25_quantized_np(tf, maxtf, df, doc_len, n_docs: int, avgdl: int):
 def bm25_quantized_scalar(tf: int, maxtf: int, df: int, doc_len: int,
                           n_docs: int, avgdl: int) -> int:
     """Pure-Python scalar version (oracle / golden tests)."""
+    if avgdl == 0:
+        return 0
     ntf = 0.5 + 0.5 * tf / maxtf
     idf = idf_scalar(df, n_docs)
     denom = ntf + K1 * (1.0 - B + B * doc_len / float(avgdl))
@@ -125,6 +136,9 @@ def bm25_quantized_col(tf: str, maxtf: str, doc_len: str, idf: str,
     in-JVM idf. Every literal carries the ``D`` suffix: an unsuffixed SQL
     ``0.5`` is a DECIMAL, which would change the arithmetic.
     """
+    if avgdl == 0:
+        return F.lit(0).cast("bigint")
+
     def d(x: float) -> str:
         return f"{float(x)!r}D"
 

@@ -65,6 +65,24 @@ def test_spark_column_matches_scalar(spark):
             r["tf"], r["maxtf"], r["df"], r["dl"], n_docs, avgdl)
 
 
+def test_zero_avgdl_scores_zero(spark):
+    """Fewer kept tokens than docs floors avgdl to 0: the reference's
+    double division by it is +Infinity, so every score is 0 — in each
+    implementation, none of which may raise."""
+    rows = [(1, 1, 1, 1), (2, 3, 1, 4), (1, 2, 5, 2)]
+    n_docs = 7
+    for tf, maxtf, df, dl in rows:
+        assert bm25.bm25_quantized_scalar(tf, maxtf, df, dl, n_docs, 0) == 0
+    tf, maxtf, df, dl = (list(c) for c in zip(*rows))
+    got = bm25.bm25_quantized_np(tf, maxtf, df, dl, n_docs, 0)
+    assert got.dtype == np.int64 and got.tolist() == [0, 0, 0]
+    sdf = spark.createDataFrame(rows, "tf long, maxtf long, df long, dl long")
+    got = sdf.withColumn("idf", bm25.idf_col(sdf.df, n_docs)).select(
+        bm25.bm25_quantized_col("tf", "maxtf", "dl", "idf", 0).alias("s")
+    ).collect()
+    assert [r["s"] for r in got] == [0, 0, 0]
+
+
 def test_idf_bitwise_matches_duckdb_ln():
     """The ONLY inexact op in the scorer is ln; our idf (CPython math.log →
     glibc) must be BITWISE equal to DuckDB's ln over a wide df domain —

@@ -13,7 +13,9 @@ doc, and partitions that hold one side of the exchange only.
 import numpy as np
 import pyarrow as pa
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import (
+    HealthCheck, example, given, settings, strategies as st,
+)
 
 from candidategeneration_spark.build import (
     _PAIR_ARROW, PAIR_SEP, _pair_batch, _whole_groups, build_index,
@@ -69,6 +71,7 @@ texts = st.lists(
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(corpus=texts, distance=st.integers(1, 4),
        parts=st.sampled_from([1, 3, 16]))
+@example(corpus=["", "aa"], distance=1, parts=1)  # avgdl floors to 0
 def test_pair_exchange_matches_oracle(spark, batch_size, corpus, distance,
                                       parts):
     got, oracle = _spark_pairs(spark, corpus, distance, parts)
