@@ -18,8 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from candidategeneration_spark import entries, entrysql, pipelineops  # noqa: E402
-from candidategeneration_spark.quality import LM_SCALE  # noqa: E402
+from candidategeneration_spark import entries, entrysql  # noqa: E402
+from candidategeneration_spark.quality import LM_LOG_SCALE, LM_SCALE  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -28,27 +28,15 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ROTATION POLICY (disclosed; round-4 ADVICE): the round driver
-    # oracle-checks the FIRST 50 entries of this dict. There are more
-    # than 50 gates, so ordering is a policy, not an accident:
-    #   1. Any gate that is NEW this round, has CHANGED semantics, or has
-    #      never had a driver CORRECTNESS row sits INSIDE the window.
-    #      Round 5: lm_doc_scores (added r4, never driver-checked) and
-    #      token_counts (tokenize contract changed r4 — its stored
-    #      r02/r03 expectation is stale and must be re-validated) lead.
-    #   2. Only gates that are BOTH unchanged this round AND driver-green
-    #      in ≥3 prior rounds rotate to the tail (see the tail comment
-    #      for the per-gate history).
-    # Every tail gate still has a pytest DuckDB mirror at sf0.01
-    # (tests/test_entry_contract.py), so rotation never removes all
-    # external verification — it only defers the driver's own row.
+    # The round driver oracle-checks the first 50 entries. Only gates
+    # driver-green in at least three recorded rounds may sit past that
+    # window (tests/test_entry_contract.py::test_rotation_tail_policy);
+    # every gate keeps its pytest DuckDB mirror at sf0.01 either way.
     return {
-        # round-5 window heads: the two round-4 ADVICE items + the new
-        # round-5 gate (S5 WARC ingestion end-to-end)
         "lm_doc_scores": entries.q_lm_doc_scores,
         "token_counts": entries.q_token_counts,
+        # S5 WARC ingestion end-to-end
         "warc_build_topk": entries.q_warc_topk,
-        # one driver-green row each (r04) — kept in-window for a 2nd row
         "lm_probabilities": entries.q_lm_probabilities,
         "hits_rank": entries.q_hits_rank,
         "q1_pricing_summary": entries.q_pricing_summary,
@@ -83,10 +71,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ngram_jaccard": entries.q_ngram_jaccard,
         # text analysis
         "quality_score": entries.q_quality_score,
-        # multimodal plumbing — only 2 driver-green rows each (r02+r03;
-        # r01 ran without a hash column / with a list-typed compare bug in
-        # the driver), so under the ≥3-green tail criterion they belong
-        # IN-window until they earn a third row
+        # multimodal plumbing
         "mm_extract": entries.q_mm_extract,
         "frame_sample": entries.q_frame_sample,
         "mm_features": entries.q_mm_features,
@@ -98,15 +83,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_ivfpq_codes": entries.q_ann_ivfpq_codes,
         "ann_ivfpq_topk": entries.q_ann_ivfpq_topk,
         "dedup_embedding": entries.q_dedup_embedding,
-        # training-data pipeline family (pipelineops.py)
-        "decontaminate": entries.q_decontaminate,
-        "pii_scrub": entries.q_pii_scrub,
-        "sample_split": entries.q_sample_split,
-        "pack_sequences": entries.q_pack_sequences,
-        "repetition_stats": entries.q_repetition_stats,
-        "duplicate_spans": entries.q_duplicate_spans,
+        # near-dup clustering + Gopher rules (textops.py)
         "dedup_clusters": entries.q_dedup_clusters,
         "gopher_rules": entries.q_gopher_rules,
+        # event analytics (relops.py)
         "events_rollup": entries.q_events_rollup,
         "value_percentiles": entries.q_value_percentiles,
         "events_cube": entries.q_events_cube,
@@ -115,24 +95,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "toplayer_topk": entries.q_toplayer_topk,
         "online_greedy_topk": entries.q_online_greedy_topk,
         "selection_lookup_topk": entries.q_selection_lookup_topk,
-        # ---- tail (past the driver's 50-entry window) ----
-        # Rotation criteria (see policy note at the top): every gate
-        # below is UNCHANGED this round and driver-green (rows+schema+
-        # hash) in at least three prior rounds:
-        #   lang_id, fingerprint               — green r01+r02+r03
-        #   ann_lsh_buckets, ann_ivf_cells,
-        #   ann_cosine_topk (rank-only)        — green r02+r03+r04
-        #   ann_brute_topk, dedup_exact,
-        #   simhash                            — green r01+r02+r03+r04
-        # (mm_extract / frame_sample / mm_features moved back IN-window
-        # this round: only 2 clean driver rows each, short of the bar.)
-        # All eight remain covered by the pytest DuckDB mirror each run.
         "lang_id": entries.q_lang_id,
         "fingerprint": entries.q_fingerprint,
         "ann_lsh_buckets": entries.q_ann_lsh_buckets,
         "ann_ivf_cells": entries.q_ann_ivf_cells,
         "ann_cosine_topk": entries.q_ann_cosine_topk,  # rank-only (floats)
         "ann_brute_topk": entries.q_ann_brute_topk,
+        # ---- tail (past the 50-entry window): green r01-r04 ----
         "dedup_exact": entries.q_dedup_exact,
         "simhash": entries.q_simhash,
     }
@@ -177,13 +146,6 @@ def oracle_sql() -> dict[str, str]:
         "ann_ivfpq_topk": entrysql.sql_ann_ivfpq_topk(),
         "ann_cosine_topk": entrysql.sql_ann_cosine_topk(),
         "dedup_embedding": entrysql.sql_dedup_embedding(),
-        "decontaminate": entrysql.sql_decontaminate(),
-        "pii_scrub": entrysql.sql_pii_scrub(),
-        "sample_split": entrysql.sql_sample_split(),
-        "pack_sequences": entrysql.sql_pack_sequences(
-            pipelineops.PACK_CAP, pipelineops.PACK_BUCKETS),
-        "repetition_stats": entrysql.sql_repetition_stats(),
-        "duplicate_spans": entrysql.sql_duplicate_spans(pipelineops.DUP_SPAN_K),
         "dedup_clusters": entrysql.sql_dedup_clusters(),
         "gopher_rules": entrysql.sql_gopher_rules(),
         "events_rollup": entrysql.sql_events_rollup(),
@@ -198,13 +160,12 @@ def oracle_sql() -> dict[str, str]:
             entries.ONLINE_BUDGET, entries.ONLINE_CLASS_BOUNDARIES,
             entries.ONLINE_CLASS_NUMS),
         "lm_probabilities": entrysql.sql_lm_probabilities(LM_SCALE),
-        "lm_doc_scores": entrysql.sql_lm_doc_scores(
-            pipelineops.LM_LOG_SCALE),
+        "lm_doc_scores": entrysql.sql_lm_doc_scores(LM_LOG_SCALE),
         "hits_rank": entrysql.sql_hits_rank(),
         "q1_pricing_summary": entrysql.sql_pricing_summary(),
         "q3_top_orders": entrysql.sql_top_orders(),
         "window_topn": entrysql.sql_window_topn(),
         "sessionize": entrysql.sql_sessionize(),
-        # every entry has an oracle; ann_cosine_topk is rank-only (the
-        # float cos value is fp-summation-order dependent by nature)
+        # ann_cosine_topk is rank-only (the float cos value is
+        # fp-summation-order dependent by nature)
     }

@@ -223,22 +223,6 @@ def main() -> None:
     assert np.array_equal(topk_lookup(neg_stress, 10)[0],
                           topk_exhaustive(neg_stress, 10)[0])
 
-    # round-3 training-data ops (recorded, not part of the headline sum):
-    # duplicate_spans over the sf docs; PQ/ADC top-k over the embeddings
-    from candidategeneration_spark.annops import pq_adc_topk
-    from candidategeneration_spark.pipelineops import duplicate_spans
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    for key, fn in (("duplicate_spans_s",
-                     lambda: duplicate_spans(docs).count()),
-                    ("pq_adc_topk_s", lambda: pq_adc_topk(emb).count())):
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            fn()
-            el = time.time() - t0
-            best = el if best is None else min(best, el)
-        extras[key] = round(best, 2)
-
     total = round(sum(timings.values()), 3)
     print(json.dumps({
         "metric": "index-build+query wall seconds (sf documents corpus)",

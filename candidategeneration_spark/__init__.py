@@ -18,11 +18,13 @@ bm25         exact reference BM25 arithmetic (quantized int scores)
 build        postings / stats / segment build pipeline
 queryengine  exact "flash fetch" top-k: block-max-pruned kernels, one loop
 oracle       brute-force pure-Python oracle for rank-identity tests
+quality      quality model, budgeted top layers, LM maps (SURVEY.md §2.9)
 textops      dedup family (exact/minhash/simhash/jaccard), lang-id, quality
 annops       embedding similarity search (brute-force + LSH)
 mmops        multimodal binary-column plumbing (stubbed decoders)
 relops       relational operator demos over the TPC-H-ish tables
 checkpoints  resumable per-phase manifests
+sources      corpus / WARC / JSONL / HITS CSV / LM readers, segment store
 streaming    structured-streaming analogues (windowed aggs, sessionization)
 """
 

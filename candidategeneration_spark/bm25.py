@@ -153,12 +153,15 @@ def bm25_quantized_col(tf: str, maxtf: str, doc_len: str, idf: str,
 
 # SQL fragment for the DuckDB oracle — keep in lockstep with the above.
 # Placeholders: {tf} {maxtf} {df} {doclen} {n} {avgdl}
+# DuckDB's double division by 0 is NULL, not +Infinity, so a floored avgdl
+# of 0 takes the 0 branch explicitly (the score every other path gives).
 BM25_SQL_TEMPLATE = (
-    "CAST(trunc((ln(({n} - {df} + 0.5) / ({df} + 0.5))"
+    "CASE WHEN {avgdl} = 0 THEN 0 ELSE"
+    " CAST(trunc((ln(({n} - {df} + 0.5) / ({df} + 0.5))"
     " * (0.5 + 0.5 * {tf} / {maxtf}) * 2.6"
     " / ((0.5 + 0.5 * {tf} / {maxtf})"
     "    + 1.6 * (0.25 + 0.75 * {doclen} / {avgdl}))) * 10000000.0)"
-    " AS BIGINT)"
+    " AS BIGINT) END"
 )
 
 

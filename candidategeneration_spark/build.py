@@ -939,8 +939,7 @@ def release_build_caches(stats: dict) -> None:
     just forfeits the cache and recomputes. Long-lived sessions that
     build repeatedly (the driver gate loop, streaming compaction) would
     otherwise accumulate one corpus-order token table per build in the
-    cache manager — the same leak class the round-4 ``sample_split`` fix
-    removed."""
+    cache manager."""
     for df in stats.pop("cached", []):
         try:
             df.unpersist()

@@ -13,8 +13,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .build import (
     PAIR_SEP, build_index, build_pair_postings_from_tokens, build_postings,
-    build_postings_from_tokens, global_stats, release_build_caches,
-    score_postings, tokenize_docs,
+    build_postings_from_tokens, global_stats, global_stats_from_tokens,
+    release_build_caches, score_postings, tokenize_docs,
 )
 from .entrysql import QUERY_SET, TOPK  # noqa: F401
 from .queryengine import wand_topk
@@ -27,8 +27,7 @@ from .tokenizer import DBIGRAM_DISTANCE
 # materializes the result — instead each gate releases the PREVIOUS
 # gate's pinned tables on entry (by then the driver has collected that
 # result) and defers its own. Bounds cache-manager growth to one build's
-# worth instead of one per gate — the leak class the round-4 sample_split
-# fix removed, applied to the gate loop itself.
+# worth instead of one per gate.
 # The list is owned by the first thread that runs a gate: another
 # thread's gate would release tables this thread's lazy result still
 # reads, so it raises instead.
@@ -106,8 +105,8 @@ def _uni_and_pairs(docs: DataFrame) -> tuple[dict, DataFrame, DataFrame]:
     table: the doc-local pair scoring path
     (build.build_pair_postings_from_tokens) — the pair table is born
     scored; no join ever touches it."""
-    stats = global_stats(docs)
-    tokd = tokenize_docs(docs)
+    tokd = _gate_cache(tokenize_docs(docs))
+    stats = global_stats_from_tokens(tokd)
     uni = build_postings_from_tokens(tokd)
     scored = score_postings(uni, stats["n_docs"], stats["avgdl"])
     return stats, uni, build_pair_postings_from_tokens(tokd, scored)
@@ -442,8 +441,8 @@ def q_term_dictionary(spark, sf_dir):
 
 
 def q_hits_rank(spark, sf_dir):
-    from . import relops
-    return relops.hits_rank(spark, sf_dir)
+    from .sources.hitscsv import hits_rank
+    return hits_rank(spark, sf_dir)
 
 
 def q_quality_matrix(spark, sf_dir):
@@ -540,61 +539,8 @@ def q_toplayer_topk(spark, sf_dir):
                       "doc_id", "score_q")
 
 
-# ---------------------------------------------------------------------------
-# Training-data pipeline family (pipelineops.py)
-# ---------------------------------------------------------------------------
-
-def decon_phrases(spark):
-    """Eval-benchmark phrase table: the fixed query set as contiguous
-    phrases (len >= 2 — single terms are term filtering, not phrase
-    decontamination)."""
-    rows = [(int(qid), " ".join(terms))
-            for qid, terms in QUERY_SET if len(terms) >= 2]
-    return spark.createDataFrame(rows, "qid long, phrase string")
-
-
-def q_decontaminate(spark, sf_dir):
-    from .pipelineops import decontaminate
-    return decontaminate(load_docs(spark, sf_dir), decon_phrases(spark))
-
-
-def dirty_text(docs):
-    """Deterministic PII-injection column for the pii_scrub gate: the raw
-    corpus is clean lowercase word-soup, so the gate derives a dirty twin
-    (email + 32-hex signature + 12-digit account id per doc) with the
-    SAME expression on both the Spark and the DuckDB side."""
-    return docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.concat(
-            F.col("text"), F.lit(" contact user"),
-            F.col("doc_id").cast("string"), F.lit("@mail"),
-            (F.col("doc_id") % 7).cast("string"), F.lit(".com sig "),
-            F.md5(F.col("text")), F.lit(" acct "),
-            F.lpad(F.col("doc_id").cast("string"), 12, "0")).alias("text"))
-
-
-def q_pii_scrub(spark, sf_dir):
-    from .pipelineops import pii_scrub
-    return pii_scrub(dirty_text(load_docs(spark, sf_dir)))
-
-
-def q_sample_split(spark, sf_dir):
-    from .pipelineops import sample_split
-    return sample_split(load_docs(spark, sf_dir), stratum_col="lang")
-
-
-def q_pack_sequences(spark, sf_dir):
-    from .pipelineops import pack_sequences
-    return pack_sequences(load_docs(spark, sf_dir))
-
-
-def q_repetition_stats(spark, sf_dir):
-    from .pipelineops import repetition_stats
-    return repetition_stats(load_docs(spark, sf_dir))
-
-
 def q_lm_doc_scores(spark, sf_dir):
-    from .pipelineops import lm_doc_scores
+    from .quality import lm_doc_scores
     return lm_doc_scores(load_docs(spark, sf_dir))
 
 
@@ -620,11 +566,6 @@ def q_ann_ivfpq_topk(spark, sf_dir):
     from .annops import ivfpq_topk
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return ivfpq_topk(emb)
-
-
-def q_duplicate_spans(spark, sf_dir):
-    from .pipelineops import duplicate_spans
-    return duplicate_spans(load_docs(spark, sf_dir))
 
 
 def q_dedup_clusters(spark, sf_dir):

@@ -790,9 +790,9 @@ def sql_query_trace_clean() -> str:
 
 
 def sql_hits_rank() -> str:
-    """Oracle for relops.hits_rank: DCG weights embedded as exact ints from
-    the same Python source (relops.hits_weights) — no runtime log()."""
-    from .relops import HITS_MAX_RANK, hits_weights
+    """Oracle for hitscsv.hits_rank: DCG weights embedded as exact ints from
+    the same Python source (hitscsv.hits_weights) — no runtime log()."""
+    from .sources.hitscsv import HITS_MAX_RANK, hits_weights
     wvals = ", ".join(f"({p}, {w})" for p, w in hits_weights())
     return (
         "WITH w(pos, weight) AS (SELECT * FROM (VALUES "
@@ -1116,86 +1116,9 @@ def sql_toplayer_topk(budget: int = 4000, k: int = TOPK) -> str:
         f" QUALIFY rank < {k}")
 
 
-# ---------------------------------------------------------------------------
-# Training-data pipeline family oracles (pipelineops.py twins)
-# ---------------------------------------------------------------------------
-
-def sql_decontaminate() -> str:
-    vals = ", ".join(f"({int(qid)}, '{' '.join(terms)}')"
-                     for qid, terms in QUERY_SET if len(terms) >= 2)
-    return (
-        f"WITH {_TOK_CTE.strip()}, "
-        f"ph(qid, phrase) AS (SELECT * FROM (VALUES {vals}) v(qid, phrase)), "
-        "padded AS (SELECT doc_id,"
-        " ' ' || array_to_string(toks, ' ') || ' ' AS p FROM tok) "
-        "SELECT CAST(ph.qid AS BIGINT) AS qid, padded.doc_id AS doc_id "
-        "FROM padded JOIN ph ON contains(padded.p, ' ' || ph.phrase || ' ')")
-
-
-def sql_pii_scrub() -> str:
-    from .pipelineops import EMAIL_RE, HEX_RE, NUM_RE
-    dirty = ("text || ' contact user' || doc_id || '@mail' || (doc_id % 7)"
-             " || '.com sig ' || md5(text) || ' acct '"
-             " || lpad(CAST(doc_id AS VARCHAR), 12, '0')")
-    return (
-        f"WITH d AS (SELECT doc_id, {dirty} AS t0 FROM documents), "
-        f"s1 AS (SELECT doc_id,"
-        f" len(regexp_extract_all(t0, '{EMAIL_RE}')) AS n_email,"
-        f" regexp_replace(t0, '{EMAIL_RE}', '<EMAIL>', 'g') AS t1 FROM d), "
-        f"s2 AS (SELECT doc_id, n_email,"
-        f" len(regexp_extract_all(t1, '{HEX_RE}')) AS n_hex,"
-        f" regexp_replace(t1, '{HEX_RE}', '<HEXID>', 'g') AS t2 FROM s1), "
-        f"s3 AS (SELECT doc_id, n_email, n_hex,"
-        f" len(regexp_extract_all(t2, '{NUM_RE}')) AS n_num,"
-        f" regexp_replace(t2, '{NUM_RE}', '<NUM>', 'g') AS t3 FROM s2) "
-        "SELECT doc_id, CAST(n_email AS BIGINT) AS n_email,"
-        " CAST(n_hex AS BIGINT) AS n_hex, CAST(n_num AS BIGINT) AS n_num,"
-        " md5(t3) AS scrub_md5 FROM s3")
-
-
-def sql_sample_split() -> str:
-    from .pipelineops import SPLIT_TRAIN_PM, SPLIT_VAL_PM
-    from .textops import MH_MULT, MH_PRIME
-    return (
-        "WITH d AS (SELECT doc_id, lang AS stratum,"
-        f" (doc_id * {MH_MULT}) % {MH_PRIME} AS h FROM documents), "
-        "r AS (SELECT doc_id, stratum, h,"
-        " row_number() OVER (PARTITION BY stratum ORDER BY h, doc_id) AS rn,"
-        " count(*) OVER (PARTITION BY stratum) AS n FROM d) "
-        "SELECT doc_id, stratum, CAST(h AS BIGINT) AS h,"
-        f" CASE WHEN rn * 1000 <= n * {SPLIT_TRAIN_PM} THEN 'train'"
-        f" WHEN rn * 1000 <= n * {SPLIT_VAL_PM} THEN 'val'"
-        " ELSE 'test' END AS split FROM r")
-
-
-def sql_pack_sequences(cap: int, n_buckets: int) -> str:
-    return (
-        f"WITH RECURSIVE {_TOK_CTE.strip()}, "
-        f"b AS (SELECT doc_id, doc_id % {n_buckets} AS bucket,"
-        " len(toks) AS n_tokens, row_number() OVER"
-        f" (PARTITION BY doc_id % {n_buckets} ORDER BY doc_id) AS rn"
-        " FROM tok), "
-        "p AS ("
-        "SELECT bucket, rn, doc_id, n_tokens, CAST(0 AS BIGINT) AS seq,"
-        " CAST(0 AS BIGINT) AS \"off\", n_tokens AS fill FROM b WHERE rn = 1 "
-        "UNION ALL "
-        "SELECT b.bucket, b.rn, b.doc_id, b.n_tokens,"
-        f" CASE WHEN p.fill + b.n_tokens > {cap} THEN p.seq + 1"
-        " ELSE p.seq END,"
-        f" CASE WHEN p.fill + b.n_tokens > {cap} THEN CAST(0 AS BIGINT)"
-        " ELSE p.fill END,"
-        f" CASE WHEN p.fill + b.n_tokens > {cap} THEN b.n_tokens"
-        " ELSE p.fill + b.n_tokens END "
-        "FROM p JOIN b ON b.bucket = p.bucket AND b.rn = p.rn + 1) "
-        "SELECT CAST(doc_id AS BIGINT) AS doc_id,"
-        " CAST(bucket AS BIGINT) AS bucket,"
-        " CAST(n_tokens AS BIGINT) AS n_tokens, CAST(seq AS BIGINT) AS seq,"
-        " CAST(\"off\" AS BIGINT) AS \"off\" FROM p")
-
-
 def sql_lm_doc_scores(log_scale: int) -> str:
     """CCNet-style unigram-LM NLL/token — lockstep with
-    pipelineops.lm_doc_scores: lp_q = floor(scale*ln(cf/total)) (DuckDB's
+    quality.lm_doc_scores: lp_q = floor(scale*ln(cf/total)) (DuckDB's
     ln is glibc log, the same function CPython math.log wraps — the BM25
     determinism posture), then exact integer sums and floor division."""
     return (
@@ -1213,27 +1136,6 @@ def sql_lm_doc_scores(log_scale: int) -> str:
         " CAST(CASE WHEN COALESCE(n_tokens, 0) > 0"
         " THEN snll // n_tokens ELSE 0 END AS BIGINT) AS nll_q"
         " FROM tok t LEFT JOIN per USING (doc_id)")
-
-
-def sql_repetition_stats() -> str:
-    return (
-        f"WITH {_TOK_CTE.strip()}, "
-        "pos AS (SELECT doc_id, unnest(toks) AS term,"
-        " generate_subscripts(toks, 1) AS pos FROM tok), "
-        "bigr AS (SELECT a.doc_id, a.term || ' ' || b.term AS gram"
-        " FROM pos a JOIN pos b"
-        " ON a.doc_id = b.doc_id AND b.pos = a.pos + 1), "
-        "cnt AS (SELECT doc_id, gram, count(*) AS c FROM bigr"
-        " GROUP BY doc_id, gram), "
-        "agg AS (SELECT doc_id, sum(c) AS nb,"
-        " sum(CASE WHEN c > 1 THEN c ELSE 0 END) AS nd FROM cnt"
-        " GROUP BY doc_id) "
-        "SELECT d.doc_id, CAST(COALESCE(nb, 0) AS BIGINT) AS n_bigrams,"
-        " CAST(COALESCE(nd, 0) AS BIGINT) AS n_dup,"
-        " CASE WHEN COALESCE(nb, 0) > 0"
-        " THEN CAST(floor(1000000 * nd / nb) AS BIGINT)"
-        " ELSE CAST(0 AS BIGINT) END AS dup_frac_q"
-        " FROM documents d LEFT JOIN agg USING (doc_id)")
 
 
 # ---------------------------------------------------------------------------
@@ -1394,36 +1296,6 @@ def sql_ann_ivfpq_topk(n_probes: int = 10, topk: int = 10, k: int = 8,
         " ORDER BY score_q DESC, vec_id) - 1 AS BIGINT) AS rank,"
         " vec_id, score_q FROM scored"
         f" QUALIFY rank < {topk}")
-
-
-def sql_duplicate_spans(k: int = 8) -> str:
-    """Oracle for pipelineops.duplicate_spans: duplicated length-k token
-    windows (cross-document), exact interval-union coverage via lead()."""
-    return (
-        f"WITH {_TOK_CTE.strip()}, "
-        "wpos AS (SELECT doc_id, toks,"
-        f" unnest(range(1, greatest(len(toks) - {k} + 1, 0) + 1)) AS pos"
-        " FROM tok), "
-        "wg AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos,"
-        f" array_to_string(list_slice(toks, pos, pos + {k} - 1), ' ')"
-        " AS gram FROM wpos), "
-        "gdf AS (SELECT gram, count(DISTINCT doc_id) AS gdf FROM wg"
-        " GROUP BY gram), "
-        "dup AS (SELECT w.doc_id, w.pos FROM wg w JOIN gdf g USING (gram)"
-        " WHERE g.gdf >= 2), "
-        "cov AS (SELECT doc_id, pos, lead(pos) OVER"
-        " (PARTITION BY doc_id ORDER BY pos) AS nxt FROM dup), "
-        "agg AS (SELECT doc_id, count(*) AS ndw,"
-        f" sum(least({k}, COALESCE(nxt - pos, {k}))) AS covered"
-        " FROM cov GROUP BY doc_id), "
-        "base AS (SELECT doc_id, len(toks) AS n_tokens,"
-        f" greatest(len(toks) - {k} + 1, 0) AS n_windows FROM tok) "
-        "SELECT b.doc_id, CAST(b.n_windows AS BIGINT) AS n_windows,"
-        " CAST(COALESCE(a.ndw, 0) AS BIGINT) AS n_dup_windows,"
-        " CASE WHEN b.n_tokens > 0 THEN CAST(floor(1000000 *"
-        " COALESCE(a.covered, 0) / b.n_tokens) AS BIGINT)"
-        " ELSE CAST(0 AS BIGINT) END AS dup_cov_q"
-        " FROM base b LEFT JOIN agg a USING (doc_id)")
 
 
 def sql_dedup_clusters() -> str:

@@ -28,6 +28,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .tokenizer import tokens_col
+
 # geometric bucket parameters (Selection.java:33-55 semantics: length
 # buckets grow x1.1 from 4, rank buckets x1.4 from 11)
 LEN_BASE, LEN_START = 1.1, 4.0
@@ -128,7 +130,7 @@ def posting_positions(scored: DataFrame,
 
     SKEW-SAFE (round 3): the old ``row_number().over(partitionBy(term))``
     put a hot list (df ≈ N at 100× corpus scale) in ONE task. Same cure as
-    term_dictionary (textops.py:45-91): ``repartitionByRange`` on the full
+    textops.term_dictionary: ``repartitionByRange`` on the full
     impact order (term, score desc, doc_id) + per-partition sort, then a
     two-job rank assignment — job 1 collects per-partition boundary-term
     counts (≤ 2 tiny rows per partition: in a range-sorted layout only a
@@ -152,8 +154,7 @@ def posting_positions(scored: DataFrame,
     # SAME sampled range boundaries, and unlike a bare persist() the
     # blocks are garbage-collected with the DataFrame instead of pinning a
     # postings-sized cache entry per call in a long-lived session (the
-    # sample_split / gate-loop leak class). Same lineage-truncation trade
-    # as pipelineops.sample_split.
+    # gate-loop leak class). The trade is lineage truncation.
     part = scored.repartitionByRange(num_partitions, *order) \
                  .sortWithinPartitions(*order).localCheckpoint(eager=True)
 
@@ -590,6 +591,61 @@ def lm_probability_maps(uni_postings: DataFrame,
                     F.expr(f"cf * {int(scale)} div {int(max(ptot, 1))}")
                     .cast("long").alias("p_q")))
     return uni.unionByName(pair)
+
+
+LM_LOG_SCALE = 1_000_000  # quantization for per-term log-probabilities
+
+
+def lm_doc_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """CCNet-style LM quality signal: per-document negative log-likelihood
+    per token under the corpus unigram MLE language model (Wenzek et al.
+    2020 filter documents by LM perplexity; Q9's probability maps turned
+    into a usable per-doc score).
+
+    Returns (doc_id, n_tokens, nll_q) with
+    ``nll_q = floor( Σ_t tf_t · (−lp_q(t)) / n_tokens )`` where
+    ``lp_q(t) = floor(1e6 · ln(cf_t / total_tokens))`` — LOW nll_q =
+    typical corpus language, HIGH = rare/garbled. All arithmetic after
+    the one ``ln`` is exact int64, and the ``ln`` follows the engine's
+    BM25 determinism posture (bm25.py module note): computed by CPython
+    ``math.log`` (glibc — the same library DuckDB's ``ln`` calls) via an
+    Arrow-batched UDF over the tiny per-term table, never per posting.
+    Token-less docs score 0.
+
+    Scale shape: one (doc,term) tf shuffle (the index build's own key),
+    a vocabulary-sized map joined back on term — identical topology to
+    the df join in score_postings; no skew beyond term popularity.
+    """
+    from pyspark.sql.functions import pandas_udf
+
+    toks = docs.select(F.col("doc_id").cast("long").alias("doc_id"),
+                       tokens_col(F.col(text_col)).alias("toks"))
+    tf = (toks.select("doc_id", F.explode("toks").alias("term"))
+          .groupBy("doc_id", "term").agg(F.count("*").alias("tf")))
+    cf = tf.groupBy("term").agg(F.sum("tf").alias("cf"))
+    total = cf.agg(F.sum("cf")).collect()[0][0] or 0
+
+    @pandas_udf("long")
+    def lp_q(s: pd.Series) -> pd.Series:
+        arr = s.to_numpy(np.int64)
+        u, inv = np.unique(arr, return_inverse=True)
+        vals = np.array(
+            [math.floor(LM_LOG_SCALE * math.log(c / total))
+             for c in u.tolist()], dtype=np.int64)
+        return pd.Series(vals[inv])
+
+    lm = cf.select("term", lp_q(F.col("cf")).alias("lp_q"))
+    per_doc = (tf.join(lm, "term")
+               .groupBy("doc_id")
+               .agg(F.sum(F.col("tf") * (-F.col("lp_q"))).alias("snll"),
+                    F.sum("tf").alias("n_tokens")))
+    base = toks.select("doc_id", F.size("toks").alias("nt"))
+    out = base.join(per_doc, "doc_id", "left")
+    nll = F.when(F.coalesce(F.col("n_tokens"), F.lit(0)) > 0,
+                 F.expr("snll div n_tokens")).otherwise(0)
+    return out.select(
+        "doc_id", F.coalesce(F.col("n_tokens"), F.lit(0)).cast("long")
+        .alias("n_tokens"), nll.cast("long").alias("nll_q"))
 
 
 def termbits(qlists: DataFrame) -> DataFrame:

@@ -61,51 +61,6 @@ def window_topn_events(spark: SparkSession, sf_dir: str,
                       F.col("rn").cast("long").alias("rn")))
 
 
-HITS_SCALE = 1_000_000
-HITS_MAX_RANK = 64
-
-
-def hits_weights(max_rank: int = HITS_MAX_RANK) -> list[tuple[int, int]]:
-    """Exact-int DCG weights [(pos, weight)]: weight = trunc(1e6/(log2(i)+1)).
-
-    Computed ONCE in Python and embedded in both the Spark plan and the
-    DuckDB oracle (no runtime log on either side — same trick as
-    quality.geometric_ranges). Ranks past HITS_MAX_RANK contribute 0 — the
-    reference similarly buckets deep ranks coarsely (Selection.java:46-55).
-    """
-    import math
-    return [(i, int(HITS_SCALE / (math.log2(i) + 1.0)))
-            for i in range(1, max_rank + 1)]
-
-
-def hits_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DCG-style HITS aggregation + global rank (SURVEY.md §2.4 A6 / §2.7 M3,
-    ``utilsClass.java:195-235`` ``aggregateHITS`` + ``getHitScore2:251-263``).
-
-    Per user: events impact-ordered (value desc, event_id asc); the i-th
-    event contributes trunc(value * w_i) with w_i the DCG weight; integer
-    sum → associative → oracle-exact. Then a global rank over the (small)
-    per-user aggregate. The global window is a single-partition sort of the
-    AGGREGATED table only (one row per user — at 100 TB of events this is
-    still ~millions of rows, the standard final-ranking shape; events
-    themselves never see a global sort)."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.desc("value"), F.asc("event_id"))
-    ranked = (ev.select("user_id", "event_id", "value")
-                .withColumn("pos", F.row_number().over(w))
-                .where(F.col("pos") <= HITS_MAX_RANK))
-    wdf = spark.createDataFrame(hits_weights(), "pos int, weight long")
-    contrib = (ranked.join(F.broadcast(wdf), "pos")
-               .withColumn("c", (F.col("value") * F.col("weight"))
-                           .cast("long")))
-    scores = contrib.groupBy("user_id").agg(F.sum("c").alias("hit_score"))
-    wr = Window.orderBy(F.desc("hit_score"), F.asc("user_id"))
-    return (scores.withColumn("hit_rank",
-                              F.row_number().over(wr).cast("long"))
-            .select(F.col("user_id").cast("long").alias("user_id"),
-                    "hit_score", "hit_rank"))
-
-
 def sessionize_events(spark: SparkSession, sf_dir: str,
                       gap_minutes: int = 30) -> DataFrame:
     """(user_id, n_sessions, n_events): session = run of events with

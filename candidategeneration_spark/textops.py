@@ -95,10 +95,10 @@ def term_dictionary(doc_tf: DataFrame,
     ``localCheckpoint``-ed so both jobs see the same sampled range
     boundaries — and, unlike a bare ``persist()``, the blocks are
     garbage-collected with the DataFrame instead of pinning a vocab-sized
-    cache entry per call in a long-lived session (the sample_split /
-    gate-loop leak class). Same lineage-truncation trade as
-    pipelineops.sample_split; on a real cluster swap for a reliable
-    checkpoint via checkpoints.py when executor loss must be survivable.
+    cache entry per call in a long-lived session (the gate-loop leak
+    class). The trade is lineage truncation: on a real cluster swap for a
+    reliable checkpoint via checkpoints.py when executor loss must be
+    survivable.
     """
     import numpy as np
 

@@ -81,6 +81,14 @@ def test_zero_avgdl_scores_zero(spark):
         bm25.bm25_quantized_col("tf", "maxtf", "dl", "idf", 0).alias("s")
     ).collect()
     assert [r["s"] for r in got] == [0, 0, 0]
+    # the DuckDB oracle's BM25, at avgdl 0 and at avgdl >= 1
+    pdf = pd.DataFrame(rows, columns=["tf", "maxtf", "df", "dl"])
+    for avgdl in (0, 1, 3):
+        sql = bm25.bm25_sql("tf", "maxtf", "df", "dl", str(n_docs),
+                            str(avgdl))
+        got = duckdb.sql(f"SELECT {sql} AS s FROM pdf").df()["s"].tolist()
+        assert got == [bm25.bm25_quantized_scalar(*r, n_docs, avgdl)
+                       for r in rows], avgdl
 
 
 def test_idf_bitwise_matches_duckdb_ln():

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from candidategeneration_spark import annops, textops  # noqa: E402
-from candidategeneration_spark.pipelineops import duplicate_spans  # noqa: E402
 
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 
@@ -41,8 +40,6 @@ def test_ann_family_partitioning_independent(spark):
 def test_text_family_partitioning_independent(spark):
     docs = spark.read.parquet(f"{TESTDATA}/sf0.001/documents.parquet") \
         .select("doc_id", "text")
-    for fn in (textops.gopher_rules,
-               lambda d: duplicate_spans(d, k=8),
-               textops.dedup_clusters):
+    for fn in (textops.gopher_rules, textops.dedup_clusters):
         results = [_rows(fn(v)) for v in _variants(docs)]
         assert results[0] == results[1] == results[2]

@@ -359,3 +359,52 @@ def test_unigram_build_reads_one_token_table(spark):
     assert len(jobs) <= 5, jobs
     release_build_caches(stats)
     docs.unpersist()
+
+
+def _exec_nodes(spark, plan) -> list[str]:
+    """Node names of an executed physical plan, through AQE query stages
+    and reused exchanges; a cached table's plan is walked once per cache,
+    however many scans read it (the plan string repeats it per scan)."""
+    jvm = spark.sparkContext._jvm
+    out, seen = [], set()
+
+    def walk(node):
+        cls = node.getClass().getSimpleName()
+        out.append(node.nodeName())
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if cls.endswith("QueryStageExec"):
+            return walk(node.plan())
+        if cls == "ReusedExchangeExec":
+            return walk(node.child())
+        if cls == "InMemoryTableScanExec":
+            rel = node.relation()
+            key = jvm.java.lang.System.identityHashCode(rel.cacheBuilder())
+            if key not in seen:
+                seen.add(key)
+                walk(rel.cachedPlan())
+            return
+        ch = node.children()
+        for i in range(ch.size()):
+            walk(ch.apply(i))
+    walk(plan)
+    return out
+
+
+def test_pair_gates_tokenize_once(spark, tmp_path):
+    """The d-bigram gates (postings_dbigram, pair_streams,
+    lm_probabilities) share one cached token table: the executed plan
+    runs one tokenize MapInArrow and the pair kernel, not a tokenize per
+    reader of the table. The corpus is read from a private copy, so no
+    table another test left cached can stand in for part of the plan."""
+    import shutil
+    import __spark_entry__ as entrymod
+    from candidategeneration_spark import entries
+    shutil.copy(f"{TESTDATA}/sf0.001/documents.parquet",
+                tmp_path / "documents.parquet")
+    df = entrymod.queries()["postings_dbigram"](spark, str(tmp_path))
+    df.collect()
+    nodes = _exec_nodes(spark, df._jdf.queryExecution().executedPlan())
+    entries._release_prior_gate_caches()
+    assert nodes.count("MapInArrow") == 2, nodes
+    assert "InMemoryTableScan" in nodes, nodes

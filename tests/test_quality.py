@@ -112,7 +112,9 @@ def test_geometric_ranges_exact_partition():
 
 
 def test_hits_weights_monotone_exact():
-    from candidategeneration_spark.relops import HITS_SCALE, hits_weights
+    from candidategeneration_spark.sources.hitscsv import (
+        HITS_SCALE, hits_weights,
+    )
     w = hits_weights(64)
     assert w[0] == (1, HITS_SCALE)  # log2(1)+1 == 1
     vals = [x for _, x in w]
@@ -205,3 +207,20 @@ def test_class_lens_x11_table(spark):
     got = {r["n"]: r["depth"] for r in df.collect()}
     assert got == {1: 1, 4: 4, 5: 5, 9: 9, 49: 20, 50: 24, 260: 32,
                    999: 36, 20_000: 44, 13: 13}
+
+
+def test_lm_doc_scores_hand_case(spark):
+    """4-token corpus: cf(aa)=3, cf(bb)=1, total=4. Doc 0 = 'aa aa aa'
+    (typical language, low NLL), doc 1 = 'bb' (rare, high NLL), doc 2
+    empty. Quantization replayed with the same math.log."""
+    import math
+    docs = spark.createDataFrame([(0, "aa aa aa"), (1, "bb"), (2, "")],
+                                 "doc_id long, text string")
+    rows = {r["doc_id"]: r for r in Q.lm_doc_scores(docs).collect()}
+    lp_aa = math.floor(Q.LM_LOG_SCALE * math.log(3 / 4))
+    lp_bb = math.floor(Q.LM_LOG_SCALE * math.log(1 / 4))
+    assert rows[0]["n_tokens"] == 3
+    assert rows[0]["nll_q"] == (3 * -lp_aa) // 3
+    assert rows[1]["nll_q"] == -lp_bb
+    assert rows[0]["nll_q"] < rows[1]["nll_q"]  # rare text scores worse
+    assert (rows[2]["n_tokens"], rows[2]["nll_q"]) == (0, 0)

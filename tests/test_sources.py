@@ -9,8 +9,10 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from candidategeneration_spark.relops import HITS_SCALE  # noqa: E402
 from candidategeneration_spark.sources import hitscsv  # noqa: E402
+from candidategeneration_spark.sources.hitscsv import (  # noqa: E402
+    HITS_SCALE, hits_weights,
+)
 
 
 def test_gzip_csv_hits_roundtrip(spark, tmp_path):
@@ -24,7 +26,6 @@ def test_gzip_csv_hits_roundtrip(spark, tmp_path):
     agg = {r["doc_id"]: r["hit_score"]
            for r in hitscsv.aggregate_hits(df).collect()}
     # doc 1: 10*w1 + 4*w2 ; w1 = HITS_SCALE (log2(1)+1 == 1)
-    from candidategeneration_spark.relops import hits_weights
     w = dict(hits_weights())
     assert agg[1] == 10 * w[1] + 4 * w[2]
     assert agg[2] == 7 * HITS_SCALE
